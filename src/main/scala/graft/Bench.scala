@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths, StandardOpenOption}
 import java.nio.charset.StandardCharsets
 
@@ -19,11 +18,12 @@ import java.nio.charset.StandardCharsets
   * early-alphabet queries warm — by the time the timed pass loops back to
   * q18/q25 their compiled classes were evicted and they repay the full Janino
   * compile (measured: q25 14.9s evicted vs ~1s warm). We therefore (a) raise
-  * the cache so all stages fit, and (b) warm each query immediately before
-  * timing it, dropping DataFrame caches in between so the timed run redoes
-  * all real data work (scan/shuffle/join) and only compiled code carries
-  * over — compilation is a one-time cost per plan shape on a real cluster,
-  * not per-run work, so billing it would measure the JVM, not the engine.
+  * the cache so all stages fit (graft.Session), and (b) warm each query
+  * immediately before timing it, dropping DataFrame caches in between so
+  * the timed run redoes all real data work (scan/shuffle/join) and only
+  * compiled code carries over — compilation is a one-time cost per plan
+  * shape on a real cluster, not per-run work, so billing it would measure
+  * the JVM, not the engine.
   */
 object Bench {
   /** Best-known prior seconds per query, mined from every BENCH_*.json in the
@@ -113,41 +113,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val preflight = preflightGate()
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // AQE initial-partition seam for scale studies: raising
-      // SPARK_GRAFT_INIT_PARTS makes every AQE-planned exchange start
-      // wide and coalesce back to the advisory size — the re-plan a
-      // cluster gets by sizing shuffle partitions to executors.
-      // Default = the official fixed count: the r13 interleaved A/B
-      // (tools/DistinctProf, SCALE.md s131) measured the wide setting
-      // statistically identical to fixed-32 on the one stage ever
-      // suspected of partition saturation, so the official artifacts
-      // keep the simpler plan. Streaming exchanges (no AQE) are
-      // unaffected either way.
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        sys.env.getOrElse("SPARK_GRAFT_INIT_PARTS", cpus))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      // Let AQE re-plan (coalesce/skew-split) the materialization of
-      // persisted frames. Spark's default pins cached-plan output
-      // partitioning for consumers that rely on co-partitioning; none of
-      // our operators do (every join after a persist re-shuffles or
-      // broadcasts), so the pin only forces model-scale cached frames to
-      // keep shuffle-width partition counts — every downstream action
-      // then relaunches that many tasks per pass. Scale-adaptive by
-      // construction: AQE sizes the cached output to its advisory bytes
-      // whatever the cluster width. Measured (tools/ConfProf, interleaved
-      // same-JVM minima): q147 2.21→1.39, q98 1.21→0.80, q136 2.49→1.74,
-      // q117 1.90→1.20, q120 1.05→0.76, q111 2.95→2.48; q126/q28 within
-      // +0.1, rest neutral.
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(Session.cpus)
     // warm-up: JVM/codegen/scheduler init shouldn't bill the first query.
     // Tables.events (not raw parquet read) — the loader normalizes `ts` to
     // long nanos regardless of the on-disk timestamp encoding.

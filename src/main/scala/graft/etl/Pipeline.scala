@@ -67,9 +67,8 @@ object Pipeline {
   def run(spark: SparkSession, dataDir: String, configDir: String,
           outDir: String): Long = {
     val cfg = loadConfigs(spark, configDir)
-    val refined = extractRefine(spark, dataDir, cfg)
-    val shaped = Load.toWarehouseShape(refined).cache()
-    shaped.write.mode("overwrite").parquet(s"$outDir/all_transactions")
+    Load.toWarehouseShape(extractRefine(spark, dataDir, cfg))
+      .write.mode("overwrite").parquet(s"$outDir/all_transactions")
     val txns = spark.read.parquet(s"$outDir/all_transactions")
     Analyze.merchantRfm(txns, cfg.merchants, cfg.payments)
       .write.mode("overwrite").parquet(s"$outDir/rfm_merchant")

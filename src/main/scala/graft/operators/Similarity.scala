@@ -1366,12 +1366,11 @@ object Similarity {
       col("col.id").as("neighbor_id"), (-col("col.score")).as("adist"))
   }
 
-  /** The two internal stages of [[ivfPqKnn]], exposed for stage bisection
-    * (tools.Q105Prof): `_1` = the encoded corpus (cell, neighbor_id,
-    * codes), `_2` = the ADC-scored candidate stream (query_id,
-    * neighbor_id, adist) BEFORE any top-k — callers that want a bounded
-    * top-k without a window sort can aggregate `_2` with
-    * [[graft.plans.AggExpressions.topKByScore]].
+  /** The two internal stages of [[ivfPqKnn]], exposed for stage bisection:
+    * `_1` = the encoded corpus (cell, neighbor_id, codes), `_2` = the
+    * ADC-scored candidate stream (query_id, neighbor_id, adist) BEFORE
+    * any top-k — callers that want a bounded top-k without a window sort
+    * can aggregate `_2` with [[graft.plans.AggExpressions.topKByScore]].
     */
   def ivfPqParts(queries: DataFrame, corpus: DataFrame,
                  centroids: Seq[Seq[Double]],

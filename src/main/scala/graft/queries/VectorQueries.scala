@@ -107,13 +107,13 @@ object VectorQueries {
   // and list_position(first occurrence) mirrors array_position's tie-break.
   private val q32Centroids = randPlanes(16, 64, seed = 7L)
 
-  /** The q32/q104 centroid set, shared with profiling tools (Q104Prof)
-    * and the streaming SemDeDup oracle query (StreamingQueries q113).
+  /** The q32/q104 centroid set, shared with the kernel specs and the
+    * streaming SemDeDup oracle query (StreamingQueries q113).
     */
   def centroidsForProfiling: Seq[Seq[Double]] = q32Centroids
 
-  /** The q105 constant PQ codebooks, shared with profiling tools
-    * (Q105Prof) so stage bisection measures the exact registered plan.
+  /** The q105 constant PQ codebooks, shared with the kernel specs so
+    * they test the exact registered plan.
     */
   def codebooksForProfiling: Seq[Seq[Seq[Double]]] = q105Codebooks
 

@@ -3,6 +3,8 @@ package graft.tools
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Session
+
 /** Deterministic scale-up generator for the driver test tables.
   *
   * Replicates `<src>` (normally /root/testdata/sf0.1) `factor`× into
@@ -53,14 +55,7 @@ object ScaleGen {
     val Array(src, out, factorStr) = args.take(3)
     val factor = factorStr.toInt
     require(factor >= 1, s"factor must be >= 1, got $factor")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val s = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
+    val s = Session.local(Session.cpus)
 
     // optional table subset (comma-separated) for targeted large-factor
     // runs where the full set would not fit the box — e.g.

@@ -1,11 +1,11 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths, StandardOpenOption}
 import java.nio.charset.StandardCharsets
 
-import graft.{SparkEntry, Tables}
+import graft.{Session, SparkEntry, Tables}
 import graft.operators.{Dedup, Similarity}
 
 /** Scale-soak driver: times the headline operator families over the FULL
@@ -102,19 +102,7 @@ object Soak {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val outPath = args.headOption.getOrElse("target/scale/SOAK.json")
     preflight()
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // AQE initial-partition seam for scale studies (default = the
-      // official fixed count; see graft.Bench for the s131 rationale)
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        sys.env.getOrElse("SPARK_GRAFT_INIT_PARTS", cpus))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(Session.cpus)
 
     def docs = Tables.documents(spark, sfDir)
     def embs = Tables.embeddings(spark, sfDir)

@@ -1,7 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
+import graft.Session
 import graft.etl.Sqlite
 
 /** One-off: write sample SQLite files for external validation with the
@@ -11,13 +10,7 @@ import graft.etl.Sqlite
 object SqliteProbe {
   def main(args: Array[String]): Unit = {
     val out = args.headOption.getOrElse("/tmp/probe.db")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local(Session.cpus)
     import spark.implicits._
 
     // multi-page table: > 4096 bytes of records forces interior levels;

@@ -3,9 +3,10 @@ package graft.tools
 import scala.collection.mutable
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted, SparkListenerJobStart, SparkListenerJobEnd}
-import org.apache.spark.sql.SparkSession
 
-/** r16 optimization-round profiler: per-STAGE wall/task breakdown for one
+import graft.Session
+
+/** The per-query profiler: per-STAGE wall/task breakdown for one
   * named SparkEntry query — answers "where do the seconds actually go"
   * (scan task? shuffle? how many tasks per stage? scheduler gaps?) when
   * the total alone can't distinguish data-plane cost from job-count
@@ -20,18 +21,7 @@ object StageProf {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val reps = if (args.length > 2) args(2).toInt else 1
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.sql.session.timeZone", "UTC")
-      // AQE may re-plan cached-frame materialization (see graft.Bench)
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(Session.cpus)
     val fn = graft.SparkEntry.queries(name)
     fn(spark, sfDir).count() // warm: codegen + file listing
     spark.catalog.clearCache()

@@ -4,6 +4,7 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.CacheEntries
 
 import graft.etl._
 
@@ -266,6 +267,32 @@ class EtlPipelineSpec extends SparkSpec {
     for (t <- Seq("all_transactions", "rfm_merchant", "rfm_payment",
         "rfm_card"))
       assert(spark.read.parquet(s"$out/$t").count() > 0, t)
+  }
+
+  test("pipeline: run caches no frame beyond the analyses' own") {
+    // fresh fixtures, so none of this spec's own caches can match a plan
+    val d = Files.createTempDirectory("graft-etl-nocache").toString
+    ExampleData.write(d)
+    val out = Files.createTempDirectory("graft-out-nocache").toString
+    def cachesAdded(body: => Unit): Int = {
+      val before = CacheEntries.count(spark)
+      body
+      CacheEntries.count(spark) - before
+    }
+    val byRun = cachesAdded(
+      Pipeline.run(spark, s"$d/data", s"$d/configs", out))
+    // the same analyses over a copy of the loaded table, so they cannot
+    // reuse the run's entries
+    val copy = s"$out/all_transactions_copy"
+    spark.read.parquet(s"$out/all_transactions").write.parquet(copy)
+    val cfg2 = Pipeline.loadConfigs(spark, s"$d/configs")
+    val byAnalyses = cachesAdded {
+      val txns2 = spark.read.parquet(copy)
+      Analyze.merchantRfm(txns2, cfg2.merchants, cfg2.payments).count()
+      Analyze.paymentRfm(txns2, cfg2.payments).count()
+      Analyze.cardRfm(txns2).count()
+    }
+    assert(byRun == byAnalyses)
   }
 
   // ------------------------------------------------- decimal money mode

@@ -6,6 +6,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.UserDefinedFunction
 import org.apache.spark.sql.functions._
 
+import graft.CacheScope
 import graft.etl.EtlConfigs.{MerchantRule, PaymentRule}
 import graft.functions.OracleSafe.dsum
 import graft.functions.PandasRank.pctRank
@@ -113,7 +114,7 @@ object Analyze {
 
   private def dualWindow(df: DataFrame, keys: Seq[String],
                          extraLifeAggs: Seq[Column] = Nil): DataFrame = {
-    val cached = df.cache() // reused by both windows + analysis date
+    val cached = CacheScope.persist(df) // both windows + analysis date
     val analysisDate = Rfm.analysisDate(cached, "transaction_date")
     val life = rfmAgg(cached, keys, analysisDate, "life_", extraLifeAggs)
     val cutoff = java.sql.Date.valueOf(
@@ -236,11 +237,11 @@ object Analyze {
     * integer avg_ticket, sorted monetary desc.
     */
   def cardRfm(txns: DataFrame): DataFrame = {
-    val clean = txns.select("transaction_id", "transaction_date",
-        "payment_amount", "transaction_type", "bank_name", "card_name")
-      .filter(notBankFee &&
-        col("card_name").isNotNull && col("card_name") =!= "")
-      .cache()
+    val clean = CacheScope.persist(
+      txns.select("transaction_id", "transaction_date",
+          "payment_amount", "transaction_type", "bank_name", "card_name")
+        .filter(notBankFee &&
+          col("card_name").isNotNull && col("card_name") =!= ""))
     val analysisDate = Rfm.analysisDate(clean, "transaction_date")
     val cutoff = java.sql.Date.valueOf(
       analysisDate.toLocalDate.minusDays(1 + 365)) // latest − 365d

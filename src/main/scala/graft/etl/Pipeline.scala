@@ -2,6 +2,8 @@ package graft.etl
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.CacheScope
+
 /** End-to-end pipeline orchestrator — the Spark equivalent of running
   * `etl.py && refine.py && load_to_db.py && db_to_*.py` in sequence.
   *
@@ -62,7 +64,7 @@ object Pipeline {
 
   /** Full run: extract → refine → load `all_transactions` → the three RFM
     * analyses, written under `outDir` as parquet. Returns the loaded row
-    * count (K4).
+    * count (K4). The analyses' caches are released before it returns.
     */
   def run(spark: SparkSession, dataDir: String, configDir: String,
           outDir: String): Long = {
@@ -70,12 +72,14 @@ object Pipeline {
     Load.toWarehouseShape(extractRefine(spark, dataDir, cfg))
       .write.mode("overwrite").parquet(s"$outDir/all_transactions")
     val txns = spark.read.parquet(s"$outDir/all_transactions")
-    Analyze.merchantRfm(txns, cfg.merchants, cfg.payments)
-      .write.mode("overwrite").parquet(s"$outDir/rfm_merchant")
-    Analyze.paymentRfm(txns, cfg.payments)
-      .write.mode("overwrite").parquet(s"$outDir/rfm_payment")
-    Analyze.cardRfm(txns)
-      .write.mode("overwrite").parquet(s"$outDir/rfm_card")
+    CacheScope {
+      Analyze.merchantRfm(txns, cfg.merchants, cfg.payments)
+        .write.mode("overwrite").parquet(s"$outDir/rfm_merchant")
+      Analyze.paymentRfm(txns, cfg.payments)
+        .write.mode("overwrite").parquet(s"$outDir/rfm_payment")
+      Analyze.cardRfm(txns)
+        .write.mode("overwrite").parquet(s"$outDir/rfm_card")
+    }
     txns.count()
   }
 }

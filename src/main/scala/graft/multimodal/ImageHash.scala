@@ -3,6 +3,7 @@ package graft.multimodal
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
+import graft.CacheScope
 import graft.multimodal.Multimodal.{Image, ImageCodec, MediaRow}
 import graft.operators.Dedup
 
@@ -211,8 +212,7 @@ object ImageHash {
     * the direct form's pair list contains identically). The
     * routeThreshold pair-list guard applies to BOTH routes (the
     * expansion output is the same pair mass). Fingerprint persist
-    * lifetime follows the [[Dedup.hammingDedupCorpus]] session-LRU
-    * contract.
+    * lifetime: [[graft.CacheScope]].
     */
   def jointDedup(media: Dataset[MediaRow], captions: DataFrame,
                  idCol: String, textCol: String,
@@ -220,40 +220,7 @@ object ImageHash {
                  codec: ImageCodec = Codecs.AutoCodec,
                  hash: Image => Long = dHash64,
                  routeThreshold: Long = 1L << 23,
-                 exactFirstMaxDistinctRatio: Double = 0.7): DataFrame =
-    jointDedupBuild(media, captions, idCol, textCol, maxImageHamming,
-      maxTextHamming, codec, hash, routeThreshold,
-      exactFirstMaxDistinctRatio)._1
-
-  /** [[jointDedup]] with a caller-scoped cache lifetime: the fingerprint
-    * frame unpersists when `action` returns (the
-    * [[Dedup.hammingDedupCorpusScoped]] house pattern) — use this form
-    * in long-lived sessions where repeated jointDedup calls would
-    * otherwise accumulate MEMORY_AND_DISK blocks until LRU pressure.
-    */
-  def jointDedupScoped[T](media: Dataset[MediaRow], captions: DataFrame,
-                          idCol: String, textCol: String,
-                          maxImageHamming: Int, maxTextHamming: Int,
-                          codec: ImageCodec = Codecs.AutoCodec,
-                          hash: Image => Long = dHash64,
-                          routeThreshold: Long = 1L << 23,
-                          exactFirstMaxDistinctRatio: Double = 0.7)
-                         (action: DataFrame => T): T = {
-    val (result, cached) = jointDedupBuild(media, captions, idCol,
-      textCol, maxImageHamming, maxTextHamming, codec, hash,
-      routeThreshold, exactFirstMaxDistinctRatio)
-    try action(result)
-    finally cached.unpersist(blocking = true)
-  }
-
-  private def jointDedupBuild(media: Dataset[MediaRow], captions: DataFrame,
-                 idCol: String, textCol: String,
-                 maxImageHamming: Int, maxTextHamming: Int,
-                 codec: ImageCodec,
-                 hash: Image => Long,
-                 routeThreshold: Long,
-                 exactFirstMaxDistinctRatio: Double)
-      : (DataFrame, DataFrame) = {
+                 exactFirstMaxDistinctRatio: Double = 0.7): DataFrame = {
     // same contract as Curation.packBestFit: the id rides through a
     // cast("long"), and a string id would silently null every fid —
     // both equi-joins would then produce ZERO joint edges and every
@@ -268,8 +235,7 @@ object ImageHash {
           s"$idType — a lossy cast would silently null every caption " +
           "fingerprint join key; hash string ids to a surrogate first")
     }
-    val fps = fingerprints(media, codec, hash)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val fps = CacheScope.persist(fingerprints(media, codec, hash))
     val stats = fps.agg(count(lit(1)), countDistinct(col("fp"))).head()
     val nImages = stats.getLong(0)
     val nCodes = stats.getLong(1)
@@ -333,10 +299,8 @@ object ImageHash {
         Seq("id_b"))
       .filter(expr("bit_count(sfp_a ^ sfp_b)") <= maxTextHamming)
     val ids = captions.select(col(idCol).cast("long").as("id"))
-    val result = Dedup.connectedComponents(ids,
-        joint.select(col("id_a"), col("id_b")))
+    Dedup.connectedComponents(ids, joint.select(col("id_a"), col("id_b")))
       .select(col("id"), col("label").as("canonical_id"),
         (col("id") === col("label")).as("kept"))
-    (result, fps)
   }
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ColumnBridge
 
+import graft.CacheScope
 import graft.functions.TextAnalysis
 
 /** Corpus-curation operators for training-data pipelines: benchmark
@@ -381,52 +382,18 @@ object Curation {
   /** The highest-TF-IDF term of each document (smooth idf:
     * ln((N+1)/(df+1)) + 1, sklearn's formulation), ties broken by the
     * lexicographically smallest term. Two bounded-key shuffles; see the
-    * object scaladoc for the 100 TB argument.
-    *
-    * CACHE LIFETIME: each call persists the (doc, term) tf frame at
-    * `tfStorage` — it feeds both the scored join and the document-
-    * frequency rollup, and Catalyst does not share the differently-pruned
-    * subplans. The blocks live until session LRU eviction; callers running
-    * this repeatedly in a long-lived session own the cleanup
-    * (`spark.catalog.clearCache()` between runs) or can pass
-    * `StorageLevel.DISK_ONLY` to keep the 100 TB tf frame out of executor
-    * memory entirely (the explicit trade: disk reads instead of a memory
-    * ceiling).
+    * object scaladoc for the 100 TB argument. Cache lifetime:
+    * [[graft.CacheScope]].
     */
-  def topTfidfTerm(df: DataFrame, idCol: String, textCol: String,
-                   tfStorage: org.apache.spark.storage.StorageLevel =
-                     org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      : DataFrame =
-    topTfidfTermBuild(df, idCol, textCol, tfStorage)._1
-
-  /** [[topTfidfTerm]] with a SELF-ENFORCING cache lifetime: runs
-    * `action` on the result, then unpersists the internal tf cache
-    * before returning (even when the action throws). The long-lived-
-    * service form of the session-LRU contract documented on
-    * [[topTfidfTerm]].
-    */
-  def topTfidfTermScoped[T](df: DataFrame, idCol: String, textCol: String,
-                            tfStorage: org.apache.spark.storage.StorageLevel =
-                              org.apache.spark.storage.StorageLevel
-                                .MEMORY_AND_DISK)
-                           (action: DataFrame => T): T = {
-    val (result, cached) = topTfidfTermBuild(df, idCol, textCol, tfStorage)
-    try action(result)
-    finally cached.unpersist(blocking = true)
-  }
-
-  private def topTfidfTermBuild(df: DataFrame, idCol: String,
-                                textCol: String,
-                                tfStorage: org.apache.spark.storage
-                                  .StorageLevel): (DataFrame, DataFrame) = {
+  def topTfidfTerm(df: DataFrame, idCol: String, textCol: String)
+      : DataFrame = {
     val terms = df.select(col(idCol),
         explode(TextAnalysis.tokens(col(textCol))).as("term"))
     // persisted: tf feeds BOTH branches; a window-by-term alternative
     // would avoid the cache but loses map-side combine and puts every
     // (doc, term) row of a hot term on one reducer — worse at scale
-    val tf = terms.groupBy(col(idCol), col("term"))
-      .agg(count(lit(1)).as("tf"))
-      .persist(tfStorage)
+    val tf = CacheScope.persist(terms.groupBy(col(idCol), col("term"))
+      .agg(count(lit(1)).as("tf")))
     // one row per (doc, term) already, so df(term) = count of rows
     val dfT = tf.groupBy("term").agg(count(lit(1)).as("doc_freq"))
     val nDocs = df.agg(countDistinct(col(idCol)).as("n_docs"))
@@ -438,12 +405,29 @@ object Curation {
             (col("doc_freq").cast("double") + 1d)) + 1d))
     val w = Window.partitionBy(col(idCol))
       .orderBy(col("score").desc, col("term").asc)
-    val result = scored.withColumn("_rk", row_number().over(w))
+    scored.withColumn("_rk", row_number().over(w))
       .filter(col("_rk") === 1)
       .select(col(idCol), col("term").as("top_term"), col("tf"),
         round(col("score"), 6).as("tfidf"))
-    (result, tf)
   }
+
+  /** Byte ceiling for broadcasting the unigram model into the scoring
+    * join: the smaller of 512 MB and an eighth of the driver heap. The
+    * hint bypasses `autoBroadcastJoinThreshold`, so the ceiling must be
+    * a MEASURED size, not a row count — a hash-polluted or binary-token
+    * "vocabulary" with huge terms could fit 2²² rows yet dwarf the
+    * driver. The estimate is the summed UTF-8 term bytes plus a
+    * per-row constant for the hashed-relation row overhead; above the
+    * ceiling the join falls back to shuffle (correct, just slower).
+    */
+  private val BroadcastVocabMaxBytes: Long =
+    math.min(512L << 20, Runtime.getRuntime.maxMemory() / 8)
+
+  /** Per-row overhead (bytes) of a broadcast hashed-relation entry on
+    * top of the raw term bytes: UnsafeRow header + long cf + hash-map
+    * slot, rounded up generously.
+    */
+  private val BroadcastRowOverhead = 48L
 
   /** Per-document unigram cross-entropy against the corpus's own
     * unigram distribution — the perplexity-style quality signal (the
@@ -465,56 +449,12 @@ object Curation {
     * (sorted-array sequential fold), so no float reduction depends on
     * row order or partitioning.
     */
-  def unigramCrossEntropy(df: DataFrame, idCol: String, textCol: String,
-                          tfStorage: org.apache.spark.storage.StorageLevel =
-                            org.apache.spark.storage.StorageLevel
-                              .MEMORY_AND_DISK): DataFrame =
-    unigramCrossEntropyBuild(df, idCol, textCol, tfStorage)._1
-
-  /** [[unigramCrossEntropy]] with a SELF-ENFORCING cache lifetime: runs
-    * `action` on the result, then unpersists the internal tf cache
-    * before returning (even when the action throws).
-    */
-  def unigramCrossEntropyScoped[T](df: DataFrame, idCol: String,
-                                   textCol: String,
-                                   tfStorage: org.apache.spark.storage
-                                     .StorageLevel =
-                                     org.apache.spark.storage.StorageLevel
-                                       .MEMORY_AND_DISK)
-                                  (action: DataFrame => T): T = {
-    val (result, cached) =
-      unigramCrossEntropyBuild(df, idCol, textCol, tfStorage)
-    try action(result)
-    finally cached.unpersist(blocking = true)
-  }
-
-  /** Byte ceiling for broadcasting the unigram model into the scoring
-    * join: the smaller of 512 MB and an eighth of the driver heap. The
-    * hint bypasses `autoBroadcastJoinThreshold`, so the ceiling must be
-    * a MEASURED size, not a row count — a hash-polluted or binary-token
-    * "vocabulary" with huge terms could fit 2²² rows yet dwarf the
-    * driver. The estimate is the summed UTF-8 term bytes plus a
-    * per-row constant for the hashed-relation row overhead; above the
-    * ceiling the join falls back to shuffle (correct, just slower).
-    */
-  private val BroadcastVocabMaxBytes: Long =
-    math.min(512L << 20, Runtime.getRuntime.maxMemory() / 8)
-
-  /** Per-row overhead (bytes) of a broadcast hashed-relation entry on
-    * top of the raw term bytes: UnsafeRow header + long cf + hash-map
-    * slot, rounded up generously.
-    */
-  private val BroadcastRowOverhead = 48L
-
-  private def unigramCrossEntropyBuild(df: DataFrame, idCol: String,
-                                       textCol: String,
-                                       tfStorage: org.apache.spark.storage
-                                         .StorageLevel)
-      : (DataFrame, DataFrame) = {
+  def unigramCrossEntropy(df: DataFrame, idCol: String, textCol: String)
+      : DataFrame = {
     // PERSISTED: tf feeds the scored join, the corpus-frequency rollup,
     // and (through cf) the corpus total — uncached, the corpus would
-    // tokenize three times. Cache-lifetime contract as [[topTfidfTerm]].
-    val tf = docTermFreq(df, idCol, textCol).persist(tfStorage)
+    // tokenize three times. Lifetime: [[graft.CacheScope]].
+    val tf = CacheScope.persist(docTermFreq(df, idCol, textCol))
     val cf = unigramLmOfTf(tf)
     // One bounded job up front: vocabulary size + corpus total. The total
     // then rides as a LITERAL (no crossJoin stage), and a bounded
@@ -533,14 +473,13 @@ object Curation {
     val scored = tf.join(cfSide, "term")
       .withColumn("_nll", col("tf").cast("double") *
         -log(col("cf").cast("double") / lit(tTotal)))
-    val result = scored.groupBy(col("id"), col("dl"))
+    scored.groupBy(col("id"), col("dl"))
       .agg(count(lit(1)).as("n_terms"),
         aggregate(
           array_sort(collect_list(struct(col("term"), col("_nll")))),
           lit(0.0), (acc, s) => acc + s.getField("_nll")).as("_sum"))
       .select(col("id"), col("dl").as("n_tokens"), col("n_terms"),
         round(col("_sum") / col("dl"), 6).as("ce"))
-    (result, tf)
   }
 
   /** Per-doc BIGRAM cross-entropy vs the corpus's own add-one bigram LM
@@ -568,32 +507,8 @@ object Curation {
     * Determinism: exact long counts, ln on double ratios, per-doc sum
     * folded in (l, r) order — no float reduction depends on row order.
     */
-  def bigramCrossEntropy(df: DataFrame, idCol: String, textCol: String,
-                         storage: org.apache.spark.storage.StorageLevel =
-                           org.apache.spark.storage.StorageLevel
-                             .MEMORY_AND_DISK): DataFrame =
-    bigramCrossEntropyBuild(df, idCol, textCol, storage)._1
-
-  /** [[bigramCrossEntropy]] with a caller-scoped cache lifetime
-    * ([[unigramCrossEntropyScoped]] pattern). */
-  def bigramCrossEntropyScoped[T](df: DataFrame, idCol: String,
-                                  textCol: String,
-                                  storage: org.apache.spark.storage
-                                    .StorageLevel =
-                                    org.apache.spark.storage.StorageLevel
-                                      .MEMORY_AND_DISK)
-                                 (action: DataFrame => T): T = {
-    val (result, cached) = bigramCrossEntropyBuild(df, idCol, textCol,
-      storage)
-    try action(result)
-    finally cached.foreach(_.unpersist(blocking = true))
-  }
-
-  private def bigramCrossEntropyBuild(df: DataFrame, idCol: String,
-                                      textCol: String,
-                                      storage: org.apache.spark.storage
-                                        .StorageLevel)
-      : (DataFrame, Seq[DataFrame]) = {
+  def bigramCrossEntropy(df: DataFrame, idCol: String, textCol: String)
+      : DataFrame = {
     val base = df.select(col(idCol).as("id"),
         graft.functions.TextAnalysis.tokens(col(textCol)).as("_toks"))
       .select(col("id"), size(col("_toks")).as("dl"), col("_toks"))
@@ -605,7 +520,7 @@ object Curation {
     // lefts, position dl as the sentinel), and (c) the complete (id, dl)
     // doc roster for the final left join. Previously the vocabulary job
     // and the final join each re-tokenized the corpus (three scans total);
-    // now the corpus is scanned once.
+    // now the corpus is scanned once. Lifetime: [[graft.CacheScope]].
     // (r17 negative result, kept for the record: computing the per-doc
     // tf by sorting each doc's bigram array and run-length encoding it
     // — removing this groupBy exchange outright — measured SLOWER: the
@@ -613,7 +528,7 @@ object Curation {
     // 5 MB shuffle saved, both as structs and as concatenated strings.
     // The hash aggregate + exchange is the cheaper tf path at every
     // scale where CPU dominates the bigram-sized shuffle.)
-    val edges = base
+    val edges = CacheScope.persist(base
       .select(col("id"), col("dl"),
         explode(when(col("dl") >= 1,
           expr("transform(sequence(1, size(_toks)), i -> " +
@@ -625,8 +540,7 @@ object Curation {
             lit(null).cast("string").as("r"))))).as("b"))
       .select(col("id"), col("dl"), col("b.l").as("l"), col("b.r").as("r"))
       .groupBy(col("id"), col("dl"), col("l"), col("r"))
-      .agg(count(lit(1)).as("tf"))
-      .persist(storage)
+      .agg(count(lit(1)).as("tf")))
     // real bigram rows: sentinel rows have r NULL and can never collide
     // with a bigram group key
     val bg = edges.filter(col("r").isNotNull)
@@ -634,8 +548,8 @@ object Curation {
     // the model's bigram side, and the model's left-context rollup —
     // each of which otherwise re-scans the edges cache and redoes the
     // (l, r) aggregation. Vocabulary-sized, dropped with edges.
-    val bf = bg.groupBy(col("l"), col("r")).agg(sum(col("tf")).as("bf"))
-      .persist(storage)
+    val bf = CacheScope.persist(
+      bg.groupBy(col("l"), col("r")).agg(sum(col("tf")).as("bf")))
     val model = bf.join(
       bf.groupBy(col("l")).agg(sum(col("bf")).as("lcnt")), "l")
     // vocabulary size off the persisted edges (no corpus re-scan): every
@@ -676,12 +590,11 @@ object Curation {
     // doc roster = the sentinel rows: EXACTLY one per doc by
     // construction (the i == dl branch for dl >= 1, the all-NULL row
     // for dl == 0) — a filter on the cache, no distinct shuffle
-    val result = edges.filter(col("r").isNull).select(col("id"), col("dl"))
+    edges.filter(col("r").isNull).select(col("id"), col("dl"))
       .join(perDoc, Seq("id"), "left")
       .select(col("id"), col("dl").cast("long").as("n_tokens"),
         greatest(col("dl") - 1, lit(0)).cast("long").as("n_bigrams"),
         coalesce(col("ce"), lit(0.0)).as("ce"))
-    (result, Seq(edges, bf))
   }
 
   /** Builds a frozen unigram LM snapshot from a corpus: one row per
@@ -820,49 +733,15 @@ object Curation {
     * top-k.
     *
     * Scale: candidates tokenize ONCE — the persisted [[docTermFreq]]
-    * frame feeds the raw-LM rollup and both scoring joins (the
-    * [[unigramCrossEntropy]] cache contract); each LM is
-    * vocabulary-sized, not corpus-sized; the final join is doc-keyed
-    * between two doc-level aggregates. Nothing downstream of tf scales
-    * with token count.
+    * frame feeds the raw-LM rollup and both scoring joins (lifetime:
+    * [[graft.CacheScope]]); each LM is vocabulary-sized, not
+    * corpus-sized; the final join is doc-keyed between two doc-level
+    * aggregates. Nothing downstream of tf scales with token count.
     */
   def dsirImportance(candidates: DataFrame, target: DataFrame,
                      idCol: String, textCol: String,
-                     addK: Double = 1.0,
-                     tfStorage: org.apache.spark.storage.StorageLevel =
-                       org.apache.spark.storage.StorageLevel
-                         .MEMORY_AND_DISK): DataFrame =
-    dsirImportanceBuild(candidates, target, idCol, textCol, addK,
-      tfStorage)._1
-
-  /** [[dsirImportance]] with a SELF-ENFORCING cache lifetime (the
-    * [[unigramCrossEntropyScoped]] pattern): runs `action` on the
-    * result, then unpersists the internal tf cache before returning —
-    * the form a long-lived scoring service should call per batch, so
-    * corpus-sized cached frames never accumulate.
-    */
-  def dsirImportanceScoped[T](candidates: DataFrame, target: DataFrame,
-                              idCol: String, textCol: String,
-                              addK: Double = 1.0,
-                              tfStorage: org.apache.spark.storage
-                                .StorageLevel =
-                                org.apache.spark.storage.StorageLevel
-                                  .MEMORY_AND_DISK)
-                             (action: DataFrame => T): T = {
-    val (result, cached) =
-      dsirImportanceBuild(candidates, target, idCol, textCol, addK,
-        tfStorage)
-    try action(result)
-    finally cached.unpersist(blocking = true)
-  }
-
-  private def dsirImportanceBuild(candidates: DataFrame, target: DataFrame,
-                                  idCol: String, textCol: String,
-                                  addK: Double,
-                                  tfStorage: org.apache.spark.storage
-                                    .StorageLevel)
-      : (DataFrame, DataFrame) = {
-    val tf = docTermFreq(candidates, idCol, textCol).persist(tfStorage)
+                     addK: Double = 1.0): DataFrame = {
+    val tf = CacheScope.persist(docTermFreq(candidates, idCol, textCol))
     // FUSED single scoring pass (r17, guide §1.2): the two
     // unigramCrossEntropyAgainstTf calls each re-scanned the tf cache,
     // re-joined on term, and ran their own per-doc rollup, then met in a
@@ -893,7 +772,7 @@ object Curation {
       .withColumn("_nr", col("tf").cast("double") * -log(
         (coalesce(col("_rcf"), lit(0L)).cast("double") + lit(addK)) /
           denom("_rt", "_rv")))
-    val result = scored.groupBy(col("id"), col("dl"))
+    scored.groupBy(col("id"), col("dl"))
       .agg(
         sum(when(col("_oov"), col("tf")).otherwise(lit(0L)))
           .as("tgt_oov_tokens"),
@@ -909,7 +788,6 @@ object Curation {
       .withColumn("log_weight",
         round(col("n_tokens") * (col("ce_raw") - col("ce_target")), 6))
       .withColumn("keep", col("log_weight") >= 0)
-    (result, tf)
   }
 
   // ------------------------------------------------------------------

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.CacheScope
 import graft.functions.TextAnalysis
 
 /** Corpus deduplication: exact, n-gram Jaccard, MinHash+LSH, SimHash.
@@ -105,40 +106,15 @@ object Dedup {
     */
   def jaccardSimilarityJoin(df: DataFrame, idCol: String, textCol: String,
                             n: Int, threshold: Double,
-                            prefixDfThreshold: Long = 8192L): DataFrame =
-    jaccardSimilarityJoinBuild(df, idCol, textCol, n, threshold,
-      prefixDfThreshold)._1
-
-  /** [[jaccardSimilarityJoin]] with a SELF-ENFORCING cache lifetime
-    * (the unigramCrossEntropyScoped house pattern): runs `action` on
-    * the result, then unpersists the internal hashed-shingle cache
-    * before returning — even when the action throws. Use in long-lived
-    * sessions; the plain form's cache entry otherwise lives until
-    * something clears the session cache.
-    */
-  def jaccardSimilarityJoinScoped[T](df: DataFrame, idCol: String,
-                                     textCol: String, n: Int,
-                                     threshold: Double,
-                                     prefixDfThreshold: Long = 8192L)
-                                    (action: DataFrame => T): T = {
-    val (result, cached) = jaccardSimilarityJoinBuild(df, idCol, textCol,
-      n, threshold, prefixDfThreshold)
-    try action(result)
-    finally cached.unpersist(blocking = true)
-  }
-
-  private def jaccardSimilarityJoinBuild(
-      df: DataFrame, idCol: String, textCol: String, n: Int,
-      threshold: Double, prefixDfThreshold: Long)
-      : (DataFrame, DataFrame) = {
+                            prefixDfThreshold: Long = 8192L): DataFrame = {
     // cache: the shingle plan feeds the frequency agg, the prefix
     // self-join, AND two verify rejoins — without it, tokenization
     // recomputes 5x per query. Hashed (long) shingles: the prefix index,
-    // cache, and intersect all move 8-byte values.
-    val s = hashedShingleSets(widen(df), idCol, textCol, n)
+    // cache, and intersect all move 8-byte values. Lifetime:
+    // [[graft.CacheScope]].
+    val s = CacheScope.persist(hashedShingleSets(widen(df), idCol, textCol, n)
       .filter(size(col("shingles")) > 0)
-      .withColumn("sz", size(col("shingles")))
-      .cache()
+      .withColumn("sz", size(col("shingles"))))
     // +1 slack on the textbook sz − ceil(t·sz) + 1: ceil(sz*t) can land
     // one high OR one low of the true integer bound when the product
     // rounds across an integer (100*0.07 = 7.000…001), and the verify
@@ -207,7 +183,7 @@ object Dedup {
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
       .distinct()
     val sets = s.select(col("id"), col("shingles"), col("sz"))
-    val result = cand
+    cand
       .join(sets.select(col("id").as("id_a"), col("shingles").as("sh_a"),
         col("sz").as("sz_a")), "id_a")
       .join(sets.select(col("id").as("id_b"), col("shingles").as("sh_b"),
@@ -219,7 +195,6 @@ object Dedup {
         col("inter") / (col("sz_a") + col("sz_b") - col("inter")))
       .filter(col("jaccard") >= threshold)
       .select(col("id_a"), col("id_b"), round(col("jaccard"), 6).as("jaccard"))
-    (result, s)
   }
 
   /** Asymmetric CONTAINMENT near-dup pairs: C(a→b) = |S(a)∩S(b)| / |S(a)|
@@ -313,34 +288,13 @@ object Dedup {
     * and is lossless.
     */
   def containmentJoin(df: DataFrame, idCol: String, textCol: String,
-                      n: Int, threshold: Double): DataFrame =
-    containmentJoinBuild(df, idCol, textCol, n, threshold)._1
-
-  /** [[containmentJoin]] with a SELF-ENFORCING cache lifetime: runs
-    * `action` on the result, then unpersists the internal
-    * hashed-shingle cache before returning, even when the action
-    * throws (the unigramCrossEntropyScoped house pattern).
-    */
-  def containmentJoinScoped[T](df: DataFrame, idCol: String,
-                               textCol: String, n: Int, threshold: Double)
-                              (action: DataFrame => T): T = {
-    val (result, cached) =
-      containmentJoinBuild(df, idCol, textCol, n, threshold)
-    try action(result)
-    finally cached.unpersist(blocking = true)
-  }
-
-  private def containmentJoinBuild(df: DataFrame, idCol: String,
-                                   textCol: String, n: Int,
-                                   threshold: Double)
-      : (DataFrame, DataFrame) = {
+                      n: Int, threshold: Double): DataFrame = {
     require(threshold > 0 && threshold <= 1, "threshold in (0,1]")
     // cache: feeds the df agg, the prefix/full indexes, and the verify
     // rejoins — five consumers of one tokenize+shingle pass
-    val s = hashedShingleSets(widen(df), idCol, textCol, n)
+    val s = CacheScope.persist(hashedShingleSets(widen(df), idCol, textCol, n)
       .filter(size(col("shingles")) > 0)
-      .withColumn("sz", size(col("shingles")))
-      .cache()
+      .withColumn("sz", size(col("shingles"))))
     // k_min = smallest integer overlap passing the VERIFY compare
     // (inter/sz >= t as doubles). ceil(sz*t) alone is off by one when
     // the product rounds across an integer (100*0.07 = 7.000…001 →
@@ -397,7 +351,7 @@ object Dedup {
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
       .distinct()
     val sets = s.select(col("id"), col("shingles"), col("sz"))
-    val result = cand
+    cand
       .join(sets.select(col("id").as("id_a"), col("shingles").as("sh_a"),
         col("sz").as("sz_a")).hint("merge"), "id_a")
       .join(sets.select(col("id").as("id_b"), col("shingles").as("sh_b"))
@@ -409,7 +363,6 @@ object Dedup {
       .filter(col("containment") >= threshold)
       .select(col("id_a"), col("id_b"),
         round(col("containment"), 6).as("containment"))
-    (result, s)
   }
 
   /** MinHash signature: k-wide one-pass native expression using the
@@ -430,32 +383,13 @@ object Dedup {
     */
   def minHashLsh(df: DataFrame, idCol: String, textCol: String, n: Int,
                  threshold: Double, numHashes: Int = 64,
-                 bands: Int = 16): DataFrame =
-    minHashLshBuild(df, idCol, textCol, n, threshold, numHashes, bands)._1
-
-  /** [[minHashLsh]] with a SELF-ENFORCING cache lifetime: runs `action`
-    * on the result, then unpersists the internal signature cache before
-    * returning, even when the action throws.
-    */
-  def minHashLshScoped[T](df: DataFrame, idCol: String, textCol: String,
-                          n: Int, threshold: Double, numHashes: Int = 64,
-                          bands: Int = 16)(action: DataFrame => T): T = {
-    val (result, cached) =
-      minHashLshBuild(df, idCol, textCol, n, threshold, numHashes, bands)
-    try action(result)
-    finally cached.unpersist(blocking = true)
-  }
-
-  private def minHashLshBuild(df: DataFrame, idCol: String,
-                              textCol: String, n: Int, threshold: Double,
-                              numHashes: Int, bands: Int)
-      : (DataFrame, DataFrame) = {
+                 bands: Int = 16): DataFrame = {
     require(numHashes % bands == 0, "bands must divide numHashes")
-    val s = hashedShingleSets(widen(df), idCol, textCol, n)
+    // the banded self-join reads this twice
+    val s = CacheScope.persist(hashedShingleSets(widen(df), idCol, textCol, n)
       .filter(size(col("shingles")) > 0)
       .withColumn("sig",
-        graft.plans.SetExpressions.minHashLongs(col("shingles"), numHashes))
-      .cache() // the banded self-join reads this twice
+        graft.plans.SetExpressions.minHashLongs(col("shingles"), numHashes)))
     // Banded rows CARRY the shingle array, and the exact Jaccard verify
     // runs IN-FLIGHT inside the (band, bh) join partitions — a candidate
     // that fails the threshold dies where it was born and never reaches
@@ -481,7 +415,7 @@ object Dedup {
       }: _*)).as("bb"))
       .select(col("id"), col("shingles"),
         col("bb.band").as("band"), col("bb.bh").as("bh"))
-    val result = banded.as("a")
+    banded.as("a")
       .join(banded.as("b"),
         col("a.band") === col("b.band") && col("a.bh") === col("b.bh") &&
           col("a.id") < col("b.id"))
@@ -495,7 +429,6 @@ object Dedup {
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
         round(col("jaccard"), 6).as("jaccard"))
       .dropDuplicates("id_a", "id_b")
-    (result, s)
   }
 
   /** Connected components over near-dup pairs: every document gets the
@@ -848,38 +781,13 @@ object Dedup {
     * N_distinct — and the OUTPUT is per-row, never a quadratic pair
     * list (a cluster of k exact copies contributes k rows, not k²/2
     * pairs). The fingerprint frame is persisted internally (it feeds the
-    * code rollup and the final mapping join); lifetime follows the
-    * session-LRU contract of [[Similarity.semDedup]] — use
-    * [[hammingDedupCorpusScoped]] to bound it to an action instead.
+    * code rollup and the final mapping join); lifetime:
+    * [[graft.CacheScope]].
     */
   def hammingDedupCorpus(fps: DataFrame, idCol: String, fpCol: String,
-                         maxHamming: Int, numBlocks: Int = -1): DataFrame =
-    hammingDedupCorpusBuild(fps, idCol, fpCol, maxHamming, numBlocks)._1
-
-  /** [[hammingDedupCorpus]] with caller-scoped cache lifetime: runs
-    * `action` on the result, then unpersists the internal fingerprint
-    * frame — the twin [[graft.operators.Curation.dsirImportanceScoped]]/
-    * `unigramCrossEntropyScoped` pattern, for long-lived sessions where
-    * repeated corpus-dedup calls would otherwise accumulate
-    * MEMORY_AND_DISK blocks until LRU pressure.
-    */
-  def hammingDedupCorpusScoped[T](fps: DataFrame, idCol: String,
-                                  fpCol: String, maxHamming: Int,
-                                  numBlocks: Int = -1)
-                                 (action: DataFrame => T): T = {
-    val (result, cached) =
-      hammingDedupCorpusBuild(fps, idCol, fpCol, maxHamming, numBlocks)
-    try action(result)
-    finally cached.unpersist(blocking = true)
-  }
-
-  private def hammingDedupCorpusBuild(fps: DataFrame, idCol: String,
-                                      fpCol: String, maxHamming: Int,
-                                      numBlocks: Int)
-      : (DataFrame, DataFrame) = {
-    val f = fps.select(col(idCol).cast("long").as("id"),
-        col(fpCol).cast("long").as("fp"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+                         maxHamming: Int, numBlocks: Int = -1): DataFrame = {
+    val f = CacheScope.persist(fps.select(col(idCol).cast("long").as("id"),
+        col(fpCol).cast("long").as("fp")))
     // distinct codes, each represented by its min id — the only rows the
     // Hamming join ever sees
     val codes = f.groupBy(col("fp")).agg(min(col("id")).as("cid"))
@@ -891,12 +799,11 @@ object Dedup {
     // min id of its code)
     val comps = connectedComponents(codes.select(col("cid").as("id")),
       codePairs)
-    val result = f.join(codes, "fp")
+    f.join(codes, "fp")
       .join(comps.withColumnRenamed("id", "cid"), Seq("cid"))
       .select(col("id").as(idCol), col("fp"),
         col("label").as("canonical_id"),
         (col("id") === col("label")).as("kept"))
-    (result, f)
   }
 
   /** SimHash over whitespace tokens: per-bit majority vote of token hashes,

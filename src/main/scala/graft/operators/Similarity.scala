@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.CacheScope
 import graft.functions.VectorFunctions._
 
 /** Approximate-nearest-neighbor search over an embedding column.
@@ -313,8 +314,9 @@ object Similarity {
           // bounded buffer; the batch still materializes eagerly
           // (sequential stages, bounded concurrent exchange) and the
           // blocks pin the batch's shuffle from re-execution.
-          val p = cands(planeBatch, off).dropDuplicates("id_a", "id_b")
-            .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
+          val p = CacheScope.persist(
+            cands(planeBatch, off).dropDuplicates("id_a", "id_b"),
+            org.apache.spark.storage.StorageLevel.DISK_ONLY)
           p.count()
           off += planeBatch.size
           System.gc() // shuffle-file GC nudge, see the staged form
@@ -582,49 +584,12 @@ object Similarity {
   def semDedup(df: DataFrame, centroids: Seq[Seq[Double]],
                threshold: Double,
                idCol: String = "vec_id",
-               vecCol: String = "embedding",
-               assignStorage: org.apache.spark.storage.StorageLevel =
-                 org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      : DataFrame =
-    semDedupBuild(df, centroids, threshold, idCol, vecCol, assignStorage)._1
-
-  /** [[semDedup]] with a SELF-ENFORCING cache lifetime: runs `action`
-    * on the result and unpersists the internal cell-assignment cache
-    * before returning, whatever the action did (including throw). Use
-    * this from long-lived services where the plain [[semDedup]]
-    * session-LRU contract would leak blocks between calls:
-    * {{{ semDedupScoped(df, cts, 0.9) { _.write.parquet(out) } }}}
-    */
-  def semDedupScoped[T](df: DataFrame, centroids: Seq[Seq[Double]],
-                        threshold: Double,
-                        idCol: String = "vec_id",
-                        vecCol: String = "embedding",
-                        assignStorage: org.apache.spark.storage.StorageLevel =
-                          org.apache.spark.storage.StorageLevel
-                            .MEMORY_AND_DISK)
-                       (action: DataFrame => T): T = {
-    val (result, cached) =
-      semDedupBuild(df, centroids, threshold, idCol, vecCol, assignStorage)
-    try action(result)
-    finally cached.unpersist(blocking = true)
-  }
-
-  private def semDedupBuild(df: DataFrame, centroids: Seq[Seq[Double]],
-                            threshold: Double, idCol: String,
-                            vecCol: String,
-                            assignStorage: org.apache.spark.storage
-                              .StorageLevel): (DataFrame, DataFrame) = {
+               vecCol: String = "embedding"): DataFrame = {
     // PERSISTED: the assignment feeds both sides of the cell join AND the
     // final survivor join — without it the corpus scans (and the k×dim
-    // distance transform runs) three times. Same cache-lifetime contract
-    // as Curation.topTfidfTerm: blocks live until session LRU eviction;
-    // long-lived callers own the cleanup or pass DISK_ONLY (or use
-    // [[semDedupScoped]], which owns it for you).
-    val assigned = assignCells(df, centroids, idCol, vecCol)
-      .persist(assignStorage)
-    val result =
-      semDedupAgainst(assigned.limit(0), assigned, threshold)
-    (result, assigned)
+    // distance transform runs) three times. Lifetime: [[graft.CacheScope]].
+    val assigned = CacheScope.persist(assignCells(df, centroids, idCol, vecCol))
+    semDedupAgainst(assigned.limit(0), assigned, threshold)
   }
 
   /** Nearest-centroid cell assignment — the shared first stage of
@@ -708,11 +673,11 @@ object Similarity {
                         vecCol: String = "embedding"): DataFrame = {
     // PERSISTED: the batch assignment feeds the candidate union, the
     // probe side, and the final survivor join — uncached, the batch
-    // scans (and the k×dim distance transform runs) three times. Same
-    // session-LRU cache-lifetime contract as [[semDedup]]; the
-    // streaming shell owns its own persist/unpersist per micro-batch.
-    val assigned = assignCells(batch, centroids, idCol, vecCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // scans (and the k×dim distance transform runs) three times.
+    // Lifetime: [[graft.CacheScope]]; the streaming shell owns its own
+    // persist/unpersist per micro-batch.
+    val assigned =
+      CacheScope.persist(assignCells(batch, centroids, idCol, vecCol))
     semDedupAgainst(prior, assigned, threshold)
   }
 

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{CacheScope, Tables}
 import graft.functions.TextAnalysis
 import graft.operators.Dedup
 
@@ -921,11 +921,9 @@ object TextQueries {
     val docs = Tables.documents(s, dir)
     // ONE persisted tokenize pass feeds both rankers (r17): each ranker
     // otherwise re-tokenizes the corpus per aggregate subtree (measured
-    // 5 corpus scans in the q126 plan). Session-LRU cache-lifetime
-    // contract as elsewhere (the bench clears caches between draws).
-    val toks = docs.select(col("doc_id").as("id"),
-        graft.functions.TextAnalysis.tokens(col("text")).as("_toks"))
-      .persist()
+    // 5 corpus scans in the q126 plan). Lifetime: [[CacheScope]].
+    val toks = CacheScope.persist(docs.select(col("doc_id").as("id"),
+        graft.functions.TextAnalysis.tokens(col("text")).as("_toks")))
     val bm = graft.operators.Retrieval
       .bm25FromToks(toks, Bm25Terms)
       .select(col("id"), round(col("bm25"), 6).as("score"))

@@ -123,30 +123,6 @@ class CurationSpec extends SparkSpec {
     assert(got(2L) == "epsilon")
   }
 
-  test("topTfidfTerm honors the caller-chosen tf storage level") {
-    import org.apache.spark.storage.StorageLevel
-    // CacheManager dedups by plan: an entry left by an earlier call wins
-    // over a new storage level, so start from a clean cache
-    spark.catalog.clearCache()
-    // DISK_ONLY: the 100 TB knob — identical output, tf blocks never
-    // claim executor memory
-    val onDisk = Curation.topTfidfTerm(docs, "doc_id", "text",
-        tfStorage = StorageLevel.DISK_ONLY)
-      .orderBy("doc_id")
-      .select("doc_id", "top_term").as[(Long, String)].collect().toSeq
-    val default = Curation.topTfidfTerm(docs, "doc_id", "text")
-      .orderBy("doc_id")
-      .select("doc_id", "top_term").as[(Long, String)].collect().toSeq
-    assert(onDisk == default)
-    // the knob actually reached the cache manager: a DISK_ONLY RDD is
-    // registered (name check avoids pinning exact plan strings)
-    val levels = spark.sparkContext.getPersistentRDDs.values
-      .map(_.getStorageLevel).toSet
-    assert(levels.contains(StorageLevel.DISK_ONLY),
-      s"expected a DISK_ONLY cached frame, levels = $levels")
-    spark.catalog.clearCache() // caller-owned lifetime, as documented
-  }
-
   test("weightedSample is deterministic, bounded by k, and weight-biased") {
     import org.apache.spark.sql.DataFrame
     // one stratum, one extreme weight: doc 3's exponential race key is
@@ -361,21 +337,6 @@ class CurationSpec extends SparkSpec {
       assert(math.abs(r._6 - want) < 1e-12, s"doc ${r._1}")
       assert(r._7 == (r._6 >= 0))
     }
-    // the scoped form returns the same rows and releases its tf cache
-    // (the unigramCrossEntropyScoped lifetime contract). Note Spark's
-    // CacheManager is plan-keyed: an identical tf plan persisted twice
-    // shares one entry, so this must run on a clean slate to observe
-    // the release in isolation.
-    spark.catalog.clearCache()
-    val before = spark.sparkContext.getPersistentRDDs.keySet
-    val scoped = Curation.dsirImportanceScoped(
-        candidates, target, "doc_id", "text") { res =>
-      res.select("id", "log_weight", "keep")
-        .as[(Long, Double, Boolean)].collect().toSet
-    }
-    assert(scoped == got.map(r => (r._1, r._6, r._7)).toSet)
-    assert(spark.sparkContext.getPersistentRDDs.keySet == before,
-      "dsirImportanceScoped leaked a cached RDD")
   }
 
   // --------------------------------------------------- mixture sampling
@@ -499,31 +460,6 @@ class CurationSpec extends SparkSpec {
     val ce1 = math.rint(-math.log(0.4) * 1e6) / 1e6
     val ce2 = math.rint((-math.log(0.4) - math.log(0.2)) / 2 * 1e6) / 1e6
     assert(got == Seq((1L, 3, 2L, ce1), (2L, 2, 2L, ce2)))
-  }
-
-  test("scoped tf-cache operators leave no cached RDDs behind") {
-    spark.catalog.clearCache()
-    val before = spark.sparkContext.getPersistentRDDs.keySet
-    val top = Curation.topTfidfTermScoped(docs, "doc_id", "text") {
-      _.orderBy("doc_id").collect().toSeq
-    }
-    val ce = Curation.unigramCrossEntropyScoped(docs, "doc_id", "text") {
-      _.orderBy("id").collect().toSeq
-    }
-    intercept[RuntimeException] {
-      Curation.topTfidfTermScoped(docs, "doc_id", "text") { r =>
-        r.count(); throw new RuntimeException("boom")
-      }
-    }
-    assert(spark.sparkContext.getPersistentRDDs.keySet == before,
-      "scoped operators leaked cached RDDs")
-    // results match the plain APIs
-    val topPlain = Curation.topTfidfTerm(docs, "doc_id", "text")
-      .orderBy("doc_id").collect().toSeq
-    val cePlain = Curation.unigramCrossEntropy(docs, "doc_id", "text")
-      .orderBy("id").collect().toSeq
-    spark.catalog.clearCache()
-    assert(top == topPlain && ce == cePlain)
   }
 
   test("unigramCrossEntropyAgainst smooths unseen terms and reports OOV") {
@@ -1047,9 +983,12 @@ class CurationSpec extends SparkSpec {
       (3L, 1L, 0L, 0.0), (4L, 1L, 0L, 0.0)),
       s"bigram CE wrong: ${out.toSeq} (want ce=$exp)")
     // scoped form returns the action result and leaves no cached blocks
-    val n = Curation.bigramCrossEntropyScoped(docs, "doc_id", "text")(
-      _.count())
+    spark.catalog.clearCache()
+    val entries = org.apache.spark.sql.graft.CacheEntries.count(spark)
+    val n = CacheScope(
+      Curation.bigramCrossEntropy(docs, "doc_id", "text").count())
     assert(n == 4L)
+    assert(org.apache.spark.sql.graft.CacheEntries.count(spark) == entries)
   }
 
   test("packBestFit: degenerate numGroups clamps to the doc count and " +

@@ -461,32 +461,6 @@ class DedupSpec extends SparkSpec {
       s"jaccard unexpectedly caught the quote: $jac")
   }
 
-  test("scoped set-similarity joins release their internal caches and " +
-    "return the same pairs") {
-    val docs = Seq((1L, "a b c d e f g h"), (2L, "a b c d e f g x"),
-      (3L, "p q r s t u v w")).toDF("doc_id", "text")
-    def cachedRdds() = spark.sparkContext.getPersistentRDDs.size
-    val base = cachedRdds()
-    val plainJ = Dedup.jaccardSimilarityJoin(docs, "doc_id", "text", 3, 0.3)
-      .collect().toSet
-    spark.catalog.clearCache() // drop the plain form's session cache
-    val scopedJ = Dedup.jaccardSimilarityJoinScoped(
-      docs, "doc_id", "text", 3, 0.3)(_.collect().toSet)
-    assert(scopedJ == plainJ)
-    val scopedC = Dedup.containmentJoinScoped(
-      docs, "doc_id", "text", 3, 0.3)(_.collect().toSet)
-    assert(scopedC == Dedup.containmentJoin(docs, "doc_id", "text", 3, 0.3)
-      .collect().toSet)
-    spark.catalog.clearCache()
-    val scopedM = Dedup.minHashLshScoped(
-      docs, "doc_id", "text", 3, 0.3)(_.collect().toSet)
-    assert(scopedM == Dedup.minHashLsh(docs, "doc_id", "text", 3, 0.3)
-      .collect().toSet)
-    spark.catalog.clearCache()
-    assert(cachedRdds() <= base,
-      "scoped joins must not leave persistent RDDs behind")
-  }
-
   test("containmentPairs refuses above routeThreshold and names the " +
     "scale path") {
     val docs = (0L until 20L).map(i => (i, s"doc $i words $i end"))

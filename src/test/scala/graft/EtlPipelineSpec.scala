@@ -274,25 +274,10 @@ class EtlPipelineSpec extends SparkSpec {
     val d = Files.createTempDirectory("graft-etl-nocache").toString
     ExampleData.write(d)
     val out = Files.createTempDirectory("graft-out-nocache").toString
-    def cachesAdded(body: => Unit): Int = {
-      val before = CacheEntries.count(spark)
-      body
-      CacheEntries.count(spark) - before
-    }
-    val byRun = cachesAdded(
-      Pipeline.run(spark, s"$d/data", s"$d/configs", out))
-    // the same analyses over a copy of the loaded table, so they cannot
-    // reuse the run's entries
-    val copy = s"$out/all_transactions_copy"
-    spark.read.parquet(s"$out/all_transactions").write.parquet(copy)
-    val cfg2 = Pipeline.loadConfigs(spark, s"$d/configs")
-    val byAnalyses = cachesAdded {
-      val txns2 = spark.read.parquet(copy)
-      Analyze.merchantRfm(txns2, cfg2.merchants, cfg2.payments).count()
-      Analyze.paymentRfm(txns2, cfg2.payments).count()
-      Analyze.cardRfm(txns2).count()
-    }
-    assert(byRun == byAnalyses)
+    val before = CacheEntries.count(spark)
+    Pipeline.run(spark, s"$d/data", s"$d/configs", out)
+    // the analyses' own caches are scoped to the run, so none outlive it
+    assert(CacheEntries.count(spark) == before)
   }
 
   // ------------------------------------------------- decimal money mode

@@ -203,27 +203,6 @@ class SimilaritySpec extends SparkSpec {
     assert(got(0)._2 == got(1)._2) // dup pair shares a cell
   }
 
-  test("semDedupScoped leaves no cached RDDs behind, success or throw") {
-    val centroids = Seq(Seq(1.0, 0.0, 0.0), Seq(0.0, 1.0, 1.0))
-    spark.catalog.clearCache()
-    val before = spark.sparkContext.getPersistentRDDs.keySet
-    val scoped = Similarity.semDedupScoped(vecs, centroids,
-      threshold = 0.9) { _.orderBy("vec_id").collect().toSeq }
-    // unpersists even when the action throws
-    intercept[RuntimeException] {
-      Similarity.semDedupScoped(vecs, centroids, threshold = 0.9) { r =>
-        r.count(); throw new RuntimeException("boom")
-      }
-    }
-    assert(spark.sparkContext.getPersistentRDDs.keySet == before,
-      "scoped semDedup leaked cached RDDs")
-    // and the scoped result matches the plain (session-LRU) API
-    val plain = Similarity.semDedup(vecs, centroids, threshold = 0.9)
-      .orderBy("vec_id").collect().toSeq
-    spark.catalog.clearCache()
-    assert(scoped == plain)
-  }
-
   test("semDedup keeps exactly one copy of a mutual-dup group") {
     val trio = Seq(
       (7L, Seq(1.0f, 0.0f, 0.0f)),

@@ -112,9 +112,9 @@ class TextAnalysisSpec extends SparkSpec {
         "token statistics")
     // unigram CE: per-character LM over segmented text gives every doc
     // a real token count (dl == ideograph count), not dl == 1
-    val ce = graft.operators.Curation.unigramCrossEntropyScoped(
-        seg.drop("raw"), "doc_id", "text")(
-        _.select("id", "n_tokens").as[(Long, Long)].collect().toMap)
+    val ce = graft.operators.Curation.unigramCrossEntropy(
+        seg.drop("raw"), "doc_id", "text")
+      .select("id", "n_tokens").as[(Long, Long)].collect().toMap
     assert(ce.values.forall(_ >= 20L),
       s"CE token counts must be per-ideograph: $ce")
 

@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.Tables
-import graft.streaming.StreamingPipeline
+import graft.streaming.{BatchStore, StreamingPipeline}
 
 /** Oracle-gated streaming queries: a Structured Streaming pipeline run to
   * completion inside a registered query, with the union of its per-batch
@@ -538,11 +538,9 @@ object StreamingQueries {
         .start()
       q.awaitTermination()
     }
-    (0 to 2).map { b =>
-      val d = new File(snapDir, f"v$b%05d")
-      require(d.isDirectory, s"missing snapshot version dir ${d.getPath}")
-      s.read.parquet(d.getPath).withColumn("snap", lit(b.toLong))
-    }.reduce(_ unionByName _)
+    val store = new BatchStore(s, snapDir)
+    (0 to 2).map(b => store.version(b).withColumn("snap", lit(b.toLong)))
+      .reduce(_ unionByName _)
       .select(col("snap"), col("k"), col("ver"), col("o_totalprice"))
       .orderBy(col("snap"), col("k"))
   }

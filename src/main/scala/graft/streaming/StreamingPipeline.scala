@@ -120,20 +120,18 @@ object StreamingPipeline {
     * UNBOUNDED history at ~32 bytes/doc in parquet — the right trade when
     * the dedup horizon is "everything ever ingested": 100 TB of documents
     * is ~tens of GB of digests, and the anti-join reads only the digest
-    * column.
+    * column. `onBatch` must consume the survivors eagerly: the store
+    * advances when it returns.
     */
   def incrementalDedupStream(docs: DataFrame, idCol: String, textCol: String,
-                             digestDir: String,
-                             bucketMinStoreBytes: Long =
-                               DigestBucketMinStoreBytes,
-                             compactMinDirs: Int = DigestCompactMinDirs)(
+                             digestDir: String)(
       onBatch: (DataFrame, Long) => Unit) = {
     new java.io.File(digestDir).mkdirs()
     docs.writeStream
       .outputMode(OutputMode.Append)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        incrementalDedupBatch(batch, batchId, idCol, textCol, digestDir,
-          bucketMinStoreBytes, compactMinDirs)(onBatch)
+        incrementalDedupBatch(batch, batchId, idCol, textCol, digestDir)(
+          onBatch)
       }
   }
 
@@ -179,15 +177,6 @@ object StreamingPipeline {
     * layout choice; order-of-magnitude accuracy suffices. */
   private[graft] val DigestBytesPerRowEst: Long = 33L
 
-  /** Auto-compaction cadence: once the store accumulates this many
-    * batch subdirs, the batch merges all COMMITTED subdirs (ids strictly
-    * below its own — micro-batches run serially, so every lower id is
-    * checkpoint-committed) into one. Without it a trickle stream's
-    * per-batch probe union-reads O(batches) directories and its planning
-    * cost grows without bound; with it dir count stays ≤ this bound + 1.
-    */
-  private[graft] val DigestCompactMinDirs: Int = 16
-
   /** Recursive byte size of a local store dir — O(files) metadata, no
     * Spark job. (On a cluster store this is one
     * `FileSystem.getContentSummary` call — same O(files) namenode
@@ -222,13 +211,9 @@ object StreamingPipeline {
       // unset metrics surface as an EMPTY row (length 0), not None
       def row = m.invoke(obs).asInstanceOf[Option[org.apache.spark.sql.Row]]
         .filter(_.length > 0)
-      val t0 = System.nanoTime
-      val deadline = t0 + deadlineMs * 1000000L
+      val deadline = System.nanoTime + deadlineMs * 1000000L
       var r = row // getRowOrEmpty itself waits up to ~100 ms when empty
       while (r.isEmpty && System.nanoTime < deadline) r = row
-      if (sys.env.contains("GRAFT_STREAM_TIMING")) System.err.println(
-        f"[observedLong] waited ${(System.nanoTime - t0) / 1e6}%.1fms " +
-          s"fallback=${r.isEmpty}")
       r.map(_.getLong(0))
     }.getOrElse(fallback)
 
@@ -236,11 +221,11 @@ object StreamingPipeline {
       batch: DataFrame, batchId: Long, idCol: String, textCol: String,
       digestDir: String,
       bucketMinStoreBytes: Long = DigestBucketMinStoreBytes,
-      compactMinDirs: Int = DigestCompactMinDirs)(
+      compactMinDirs: Int = BatchStore.CompactMinDirs)(
       onBatch: (DataFrame, Long) => Unit): Unit = {
     val s = batch.sparkSession
-    val seenDirs = batchDirsBefore(digestDir, "b", Long.MaxValue)
-      .filterNot(_.getName == f"b$batchId%05d")
+    val store = new BatchStore(s, digestDir)
+    val seenDirs = store.historyDirs(exceptBatch = batchId)
     // ADAPTIVE layout (the house adaptive-threshold pattern): bucket
     // only once the store is big enough that touched-bucket pruning
     // pays for its per-batch jobs. The decision is per-batch from the
@@ -248,17 +233,10 @@ object StreamingPipeline {
     // mid-stream and the mixed layout reads fine.
     val storeBytes = seenDirs.iterator.map(treeBytes).sum
     val bucketed = storeBytes >= bucketMinStoreBytes
-    // per-dir reads + union (not one multi-root read): batch subdirs mix
-    // layouts legitimately — pfx-bucketed (normal batches), flat (empty
-    // batches, pre-bucketing stores) — and multi-root partition
-    // discovery rejects the mix (CONFLICTING_DIRECTORY_STRUCTURES).
-    // Filters still push through the Union into every child scan.
-    val seen =
-      if (seenDirs.nonEmpty)
-        seenDirs.map(d => s.read.parquet(d.getPath))
-          .reduce(_.unionByName(_, allowMissingColumns = true))
-      else s.range(0).select(lit("").as("content_hash"),
-        lit("").as("pfx"))
+    // batch subdirs mix layouts legitimately — pfx-bucketed (normal
+    // batches), flat (empty batches, pre-bucketing stores)
+    val seen = store.history(exceptBatch = batchId).getOrElse(
+      s.range(0).select(lit("").as("content_hash"), lit("").as("pfx")))
     // Bucket pruning: only store partitions whose digest prefix appears
     // in THIS batch can contain a match. The touched-prefix list is
     // model-scale (≤16 values, one tiny job over the small batch side),
@@ -315,18 +293,11 @@ object StreamingPipeline {
        out.repartition(col("pfx")).write.mode("overwrite").partitionBy("pfx")
      else if (nKept > 0) out.coalesce(1).write.mode("overwrite")
      else out.write.mode("overwrite"))
-      .parquet(f"$digestDir/b$batchId%05d")
+      .parquet(store.batchPath(batchId))
     kept.unpersist()
-    // Auto-compaction: keep the probe's per-batch directory count
-    // bounded. Everything strictly below batchId is checkpoint-committed
-    // (micro-batches run serially), so merging those dirs is replay-safe
-    // — a replay of THIS batch still finds its own subdir excluded and
-    // the compacted history intact. Layout is inferred from the source
-    // dirs, so a store that has crossed the bucketing threshold keeps
-    // its pfx pruning through compaction.
-    if (seenDirs.length + 1 >= compactMinDirs)
-      compactStateDirs(s, digestDir, beforeId = batchId)
-    ()
+    // compaction infers the layout from the source dirs, so a store that
+    // has crossed the bucketing threshold keeps its pfx pruning
+    store.compactIfDue(batchId, minDirs = compactMinDirs)
   }
 
   /** Streaming SemDeDup: each micro-batch is cell-assigned, scored
@@ -345,20 +316,20 @@ object StreamingPipeline {
     * cell-confined quadratic the published design bounds by growing k
     * with the corpus — an unbalanced HOT cell is the thing to watch,
     * and [[graft.operators.Similarity.ivfCellStats]] over the store is
-    * the diagnostic.
+    * the diagnostic. `onBatch` must consume the emission eagerly: the
+    * store advances when it returns.
     */
   def semDedupStream(vecs: DataFrame, centroids: Seq[Seq[Double]],
                      threshold: Double, stateDir: String,
                      idCol: String = "vec_id",
-                     vecCol: String = "embedding",
-                     compactMinDirs: Int = DigestCompactMinDirs)(
+                     vecCol: String = "embedding")(
       onBatch: (DataFrame, Long) => Unit) = {
     new java.io.File(stateDir).mkdirs()
     vecs.writeStream
       .outputMode(OutputMode.Append)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         semDedupBatch(batch, batchId, centroids, threshold, stateDir,
-          idCol, vecCol, compactMinDirs)(onBatch)
+          idCol, vecCol)(onBatch)
       }
   }
 
@@ -371,15 +342,9 @@ object StreamingPipeline {
   private[graft] def semDedupBatch(
       batch: DataFrame, batchId: Long, centroids: Seq[Seq[Double]],
       threshold: Double, stateDir: String, idCol: String, vecCol: String,
-      compactMinDirs: Int = DigestCompactMinDirs)(
+      compactMinDirs: Int = BatchStore.CompactMinDirs)(
       onBatch: (DataFrame, Long) => Unit): Unit = {
-    val s = batch.sparkSession
-    def tick(label: String, t0: Long): Long = {
-      if (sys.env.contains("GRAFT_STREAM_TIMING")) System.err.println(
-        f"[semDedupBatch b$batchId] $label ${(System.nanoTime - t0) / 1e9}%.2fs")
-      System.nanoTime
-    }
-    var t = System.nanoTime
+    val store = new BatchStore(batch.sparkSession, stateDir)
     val assigned = graft.operators.Similarity
       .assignCells(batch, centroids, idCol, vecCol)
       .persist()
@@ -392,22 +357,13 @@ object StreamingPipeline {
       .agg(count(lit(1)).as("n")).collect()
     val nBatch = cellCounts.map(_.getLong(1)).sum
     val touched = cellCounts.map(_.getLong(0)).toSeq
-    t = tick("assign+touched", t)
-    val dirs = batchDirsBefore(stateDir, "b", Long.MaxValue)
-      .filterNot(_.getName == f"b$batchId%05d")
-    // one read per batch dir (multi-root partition discovery conflicts),
-    // unioned; the cell filter pushes through the union into each scan's
+    // the cell filter pushes through the history union into each scan's
     // partition pruning
-    val prior =
-      if (dirs.nonEmpty)
-        dirs.map(d => s.read.parquet(d.getPath))
-          .reduce(_.unionByName(_))
-          .filter(col("cell").isin(touched: _*))
-      else assigned.limit(0)
-    t = tick("prior", t)
+    val prior = store.history(exceptBatch = batchId)
+      .map(_.filter(col("cell").isin(touched: _*)))
+      .getOrElse(assigned.limit(0))
     val result = graft.operators.Similarity
       .semDedupAgainst(prior, assigned, threshold)
-    t = tick("semdedup", t)
     // r17 single-materialization: onBatch is the batch's one pass over
     // the result (the gates write it to parquet). It runs BEFORE the
     // state write and compaction below, so the prior union it reads is
@@ -415,169 +371,29 @@ object StreamingPipeline {
     // bought with an extra job per batch. onBatch must consume eagerly:
     // a deferred read could race compaction's source-dir deletes.
     onBatch(result, batchId)
-    t = tick("onBatch", t)
     // an EMPTY batch must not write: a partitioned parquet write of zero
     // rows leaves a directory with no schema file, and every later
     // batch's store read dies on UNABLE_TO_INFER_SCHEMA
     if (nBatch > 0)
       assigned.write.mode("overwrite").partitionBy("cell")
-        .parquet(f"$stateDir/b$batchId%05d")
-    t = tick("stateWrite", t)
+        .parquet(store.batchPath(batchId))
     assigned.unpersist()
-    // same auto-compaction cadence as the digest store: the per-batch
-    // prior is a union over O(batches) subdirs, so a long-lived stream's
-    // planning cost grows without bound unless committed history merges.
     // Seq("cell") pins the layout so touched-cell pruning keeps working
-    // on the compacted dir.
-    if (dirs.length + 1 >= compactMinDirs)
-      compactStateDirs(s, stateDir, beforeId = batchId,
-        partitionCols = Seq("cell"))
-    t = tick("compact", t)
-    ()
+    // on the compacted dir
+    store.compactIfDue(batchId, Seq("cell"), compactMinDirs)
   }
 
   /** The accumulated [[semDedupStream]] assignment store (all batches). */
   def semDedupStore(spark: SparkSession, stateDir: String)
-      : Option[DataFrame] = {
-    val dirs = batchDirsBefore(stateDir, "b", Long.MaxValue)
-    if (dirs.nonEmpty)
-      Some(dirs.map(d => spark.read.parquet(d.getPath))
-        .reduce(_.unionByName(_)))
-    else None
-  }
+      : Option[DataFrame] = new BatchStore(spark, stateDir).history()
 
   /** The full digest store as one DataFrame (union of all batch subdirs).
     * The `pfx` bucket column is a LAYOUT detail — consumers see only the
     * digest column.
     */
-  def digestStore(spark: SparkSession, digestDir: String): DataFrame = {
-    val dirs = batchDirsBefore(digestDir, "b", Long.MaxValue)
-    if (dirs.nonEmpty)
-      dirs.map(d => spark.read.parquet(d.getPath))
-        .reduce(_.unionByName(_, allowMissingColumns = true))
-        .select("content_hash")
-    else spark.range(0).select(lit("").as("content_hash"))
-  }
-
-  /** Compacts the batchId-keyed subdirs of an APPEND-history state
-    * store ([[incrementalDedupStream]]'s digest store,
-    * [[semDedupStream]]'s assignment store): every subdir with id
-    * STRICTLY BELOW `beforeId` merges into one subdir keeping the
-    * highest compacted id. A stream writing thousands of micro-batches
-    * otherwise pays a per-batch directory listing + parquet footer read
-    * that grows without bound.
-    *
-    * Safety: pass `beforeId` ≤ the stream's last COMMITTED batchId
-    * (ids only move forward, so no replay will ever rewrite a compacted
-    * subdir). Crash-safe: the merge is written to an invisible
-    * `t<id>` scratch dir, atomically RENAMED to the visible `c<id>`
-    * compacted slot, and only then are the source dirs deleted — a
-    * crash at any point leaves either the originals intact (before the
-    * rename) or a complete compacted dir plus leftover sources (after
-    * it). A replay that finds `c<id>` already present just finishes the
-    * deletes. The duplicate-rows window between rename and deletes is
-    * harmless: both stores' readers tolerate duplicates (the digest
-    * anti-join ignores duplicate build keys; the semDedup dup rollup is a min, idempotent
-    * under row duplication). NOT for the latest-version stores (mixture
-    * inventory / LM / upsert snapshots), which already keep O(1) live
-    * state per version and prune by "latest strictly below".
-    *
-    * Returns the number of subdirs removed. `partitionCols` preserves
-    * the store's layout (pass `Seq("cell")` for the semDedup store so
-    * touched-cell pruning keeps working on the compacted dir); when left
-    * empty, partition columns are INFERRED from the union of ALL source
-    * dirs' `k=v` subdirs (sources legitimately mix flat and bucketed
-    * layouts), so compacting a bucketed store (the digest store's `pfx`
-    * layout) keeps its pruning without the caller knowing the layout.
-    */
-  def compactStateDirs(spark: SparkSession, dir: String, beforeId: Long,
-                       prefix: String = "b",
-                       partitionCols: Seq[String] = Nil): Int = {
-    val dirs = batchDirsBefore(dir, prefix, beforeId)
-    if (dirs.length < 2) return 0
-    // CRASH SAFETY: a source dir is deleted ONLY while a complete,
-    // reader-visible merged dir covering it exists. The merge is written
-    // to an invisible `t<id>` scratch dir, atomically renamed to the
-    // visible `c<id>` compacted slot (same-parent dir rename), and only
-    // then are sources dropped; readers union b- and c-dirs and tolerate
-    // the duplicate-rows window between rename and deletes (the digest
-    // anti-join ignores duplicate build keys; the semDedup dup rollup is a min). The old
-    // form overwrote the highest SOURCE dir in place — mode("overwrite")
-    // deletes the target before the write commits, so a crash mid-merge
-    // lost that dir's rows.
-    val lastId = dirId(dirs.last)
-    val target = new java.io.File(dir, f"c$lastId%05d")
-    if (dirs.last.getName == target.getName) {
-      // replay of a completed compaction (the rename landed; a crash
-      // then left some sources behind): everything with id <= lastId is
-      // covered by the target, so just finish the deletes
-      dirs.init.foreach(deleteRecursively)
-      return dirs.length - 1
-    }
-    val layout =
-      if (partitionCols.nonEmpty) partitionCols
-      else dirs.iterator.flatMap(d =>
-          Option(d.listFiles()).getOrElse(Array.empty)
-            .filter(f => f.isDirectory && f.getName.contains("="))
-            .map(_.getName.takeWhile(_ != '=')))
-        .distinct.toSeq
-    val merged = dirs.map(d => spark.read.parquet(d.getPath))
-      .reduce(_.unionByName(_, allowMissingColumns = true))
-      .persist() // one source read feeds both the count and the write
-    val nRows = merged.count()
-    // zero rows → write FLAT even if the sources were partitioned (a
-    // partitioned zero-row write leaves a schemaless unreadable dir);
-    // otherwise repartition on the layout so the compacted store has one
-    // file per partition value, not sourceTasks × partitions small files
-    val toWrite =
-      if (layout.nonEmpty && nRows > 0)
-        merged.repartition(layout.map(col): _*)
-      else merged
-    val scratch = new java.io.File(dir, f"t$lastId%05d")
-    deleteRecursively(scratch) // stale scratch from a crashed attempt
-    val writer = toWrite.write.mode("overwrite")
-    (if (layout.nonEmpty && nRows > 0) writer.partitionBy(layout: _*)
-     else writer).parquet(scratch.getPath)
-    merged.unpersist()
-    require(scratch.renameTo(target),
-      s"compactStateDirs: rename $scratch -> $target failed")
-    dirs.foreach(deleteRecursively)
-    dirs.length - 1
-  }
-
-  private def dirId(f: java.io.File): Long =
-    f.getName.dropWhile(!_.isDigit).toLong
-
-  private def deleteRecursively(f: java.io.File): Unit = {
-    Option(f.listFiles()).getOrElse(Array.empty).foreach(deleteRecursively)
-    f.delete()
-    ()
-  }
-
-  /** Versioned state subdirs `<prefix><paddedId>` with id strictly below
-    * `beforeId`, id-sorted. For the append-history stores (prefix "b")
-    * this ALSO accepts `c<paddedId>` compacted dirs — a compaction
-    * merges b-dirs into one c-dir (see [[compactStateDirs]]) and the
-    * readers must see both; `t<paddedId>` scratch dirs stay invisible.
-    * At equal id, `c` sorts AFTER `b` so a half-finished compaction
-    * (rename landed, source b-dir not yet deleted) resolves to the
-    * replay branch of compactStateDirs, never a rename collision.
-    */
-  private def batchDirsBefore(dir: String, prefix: String, beforeId: Long)
-      : Array[java.io.File] = {
-    val prefixes = if (prefix == "b") Seq("b", "c") else Seq(prefix)
-    Option(new java.io.File(dir).listFiles())
-      .getOrElse(Array.empty)
-      .filter { f =>
-        f.isDirectory && prefixes.exists { p =>
-          f.getName.startsWith(p) &&
-            f.getName.stripPrefix(p).nonEmpty &&
-            f.getName.stripPrefix(p).forall(_.isDigit) &&
-            f.getName.stripPrefix(p).toLong < beforeId
-        }
-      }
-      .sortBy(f => (f.getName.dropWhile(!_.isDigit).toLong, f.getName))
-  }
+  def digestStore(spark: SparkSession, digestDir: String): DataFrame =
+    new BatchStore(spark, digestDir).history().map(_.select("content_hash"))
+      .getOrElse(spark.range(0).select(lit("").as("content_hash")))
 
   /** Per-micro-batch benchmark contamination (q79 semantics): the
     * benchmark gram set is static and broadcast, each batch probes it
@@ -601,7 +417,8 @@ object StreamingPipeline {
     * however much streams through); each batch adds its own partial
     * aggregate — the arithmetic is exact longs, so the running plan is
     * IDENTICAL to the batch plan over everything seen so far
-    * (StreamingSpec asserts it).
+    * (StreamingSpec asserts it). `onBatch` must consume the plan eagerly:
+    * the store advances when it returns.
     */
   def mixturePlanStream(docs: DataFrame, sourceCol: String,
                         tokenCount: org.apache.spark.sql.Column,
@@ -643,7 +460,8 @@ object StreamingPipeline {
     * stream's lifetime; the emitted plan over everything seen so far is
     * IDENTICAL to the batch q100 plan on the same rows (StreamingSpec
     * asserts it — the inventory arithmetic is exact, and the tempered
-    * shares are a pure function of the inventory).
+    * shares are a pure function of the inventory). `onBatch` must
+    * consume the plan eagerly: the store advances when it returns.
     */
   def mixturePlanTemperatureStream(docs: DataFrame, sourceCol: String,
                                    tokenCount: org.apache.spark.sql.Column,
@@ -662,20 +480,20 @@ object StreamingPipeline {
 
   /** Shared micro-batch body of the mixture-upkeep streams: merge the
     * batch's per-source partial aggregate into the replay-safe versioned
-    * inventory, then emit `planOf(inventory)`.
+    * inventory, then emit `planOf(inventory)`. Retention keeps {prior,
+    * new}.
     */
   private[graft] def mixtureUpkeepBatch(
       batch: DataFrame, batchId: Long, sourceCol: String,
       tokenCount: org.apache.spark.sql.Column, stateDir: String,
       planOf: DataFrame => DataFrame)(
       onBatch: (DataFrame, Long) => Unit): Unit = {
-    val s = batch.sparkSession
+    val store = new BatchStore(batch.sparkSession, stateDir)
     val batchAgg = batch.groupBy(col(sourceCol))
       .agg(count(lit(1)).as("n_docs"),
         sum(tokenCount.cast("long")).as("n_tokens"))
-    val prevOpt = batchDirsBefore(stateDir, "v", batchId).lastOption
-      .map(f => s.read.parquet(f.getPath))
-    val merged = (prevOpt match {
+    val priorId = store.prior(batchId)
+    val merged = (priorId.map(store.version) match {
       case Some(prev) =>
         prev.union(batchAgg)
           .groupBy(col(sourceCol))
@@ -687,8 +505,11 @@ object StreamingPipeline {
     // count job removed) — the merge reads the version strictly BELOW
     // batchId, which this write never touches, and onBatch's plan then
     // reads the materialized cache
-    merged.write.mode("overwrite").parquet(f"$stateDir/v$batchId%05d")
+    merged.write.mode("overwrite").parquet(store.versionPath(batchId))
     onBatch(planOf(merged), batchId)
+    // prune AFTER onBatch: a cache miss on the plan read can still
+    // recompute merged from the prior version
+    store.retain(priorId)
     merged.unpersist()
     ()
   }
@@ -702,7 +523,8 @@ object StreamingPipeline {
     * ([[graft.operators.Curation.unigramLmMerge]] — exact-long counts,
     * so the maintained snapshot equals `unigramLm` over the
     * concatenated history). State is VOCAB-sized (Heaps-sublinear),
-    * never corpus-sized; one (term) shuffle per batch.
+    * never corpus-sized; one (term) shuffle per batch. `onBatch` must
+    * consume the scores eagerly: the store advances when it returns.
     */
   def unigramCeStream(docs: DataFrame, idCol: String, textCol: String,
                       lmDir: String, addK: Double = 1.0)(
@@ -719,15 +541,16 @@ object StreamingPipeline {
     * against (and merges onto) the latest LM version STRICTLY BELOW the
     * current batchId, overwriting `v<batchId>` — the [[mixturePlanBatch]]
     * recipe, so replays re-emit the same scores and converge to the
-    * same LM.
+    * same LM. Retention keeps {prior, new}.
     */
   private[graft] def unigramCeBatch(
       batch: DataFrame, batchId: Long, idCol: String, textCol: String,
       lmDir: String, addK: Double)(
       onBatch: (DataFrame, Long) => Unit): Unit = {
     val s = batch.sparkSession
-    val prior = batchDirsBefore(lmDir, "v", batchId).lastOption
-      .map(f => s.read.parquet(f.getPath))
+    val store = new BatchStore(s, lmDir)
+    val priorId = store.prior(batchId)
+    val prior = priorId.map(store.version)
       .getOrElse(s.range(0).select(lit("").as("term"), lit(0L).as("cf")))
     // ONE tokenization per batch: the tf rollup feeds both the scorer
     // and the LM delta from cache
@@ -742,16 +565,15 @@ object StreamingPipeline {
     onBatch(scored, batchId)
     graft.operators.Curation
       .unigramLmMerge(prior, graft.operators.Curation.unigramLmOfTf(tf))
-      .write.mode("overwrite").parquet(f"$lmDir/v$batchId%05d")
+      .write.mode("overwrite").parquet(store.versionPath(batchId))
+    store.retain(priorId)
     tf.unpersist()
     ()
   }
 
   /** The latest maintained LM snapshot under `lmDir`, if any. */
   def unigramLmSnapshot(spark: SparkSession, lmDir: String)
-      : Option[DataFrame] =
-    batchDirsBefore(lmDir, "v", Long.MaxValue).lastOption
-      .map(f => spark.read.parquet(f.getPath))
+      : Option[DataFrame] = new BatchStore(spark, lmDir).latest
 
   /** Streaming semantic decontamination — the q150 frozen-snapshot
     * surface in the [[unigramCeStream]] loop shape. One stream carries
@@ -774,7 +596,8 @@ object StreamingPipeline {
     * survive: a crash can replay only the current batch, whose
     * strictly-below lookup reads exactly that version. So the store
     * holds at most two snapshot copies at any time instead of one per
-    * micro-batch.
+    * micro-batch. `onBatch` must consume the scores eagerly: the store
+    * advances when it returns.
     */
   def decontamStream(vecs: DataFrame, benchFlagCol: String,
                      centroids: Seq[Seq[Double]], threshold: Double,
@@ -796,58 +619,38 @@ object StreamingPipeline {
       centroids: Seq[Seq[Double]], threshold: Double, snapDir: String,
       idCol: String, vecCol: String)(
       onBatch: (DataFrame, Long) => Unit): Unit = {
-    val s = batch.sparkSession
-    val priorDir = batchDirsBefore(snapDir, "v", batchId).lastOption
-    val prior = priorDir.map(f => s.read.parquet(f.getPath))
+    val store = new BatchStore(batch.sparkSession, snapDir)
+    val priorId = store.prior(batchId)
     // before any benchmark arrives, the snapshot is EMPTY (nothing to
     // be contaminated by) — same schema, zero rows
-    val snap = prior.getOrElse(graft.operators.Similarity
-      .benchmarkSnapshot(batch.filter(lit(false)), centroids, idCol,
-        vecCol))
-    // r17 single-materialization: onBatch is the batch's one pass over
-    // the scores (it runs before the snapshot write, so it reads the
-    // prior snapshot — the pin the old persist+count bought with an
-    // extra job), and the benchmark-row count rides that same action's
-    // observed metrics: the CollectMetrics node sits BELOW the train
-    // filter, so it sees every batch row — no separate isEmpty() probe.
-    val obs = new org.apache.spark.sql.Observation()
-    val observed = batch.observe(obs,
-      count(when(col(benchFlagCol), lit(1))).as("nb"))
+    val snap = priorId.map(store.version).getOrElse(graft.operators
+      .Similarity.benchmarkSnapshot(batch.filter(lit(false)), centroids,
+        idCol, vecCol))
+    // onBatch is the batch's one pass over the scores; it runs before
+    // the snapshot write, so it reads the prior snapshot
     val scored = graft.operators.Similarity.semanticContaminationAgainst(
-        observed.filter(!col(benchFlagCol)), snap, centroids, threshold,
+        batch.filter(!col(benchFlagCol)), snap, centroids, threshold,
         idCol, vecCol)
     onBatch(scored, batchId)
-    // empty-prior batches (before any benchmark arrived) collapse the
-    // scoring join to an empty relation at optimization time, PRUNING the
-    // CollectMetrics node — the observation would never complete; probe
-    // directly instead of burning the poll deadline
-    val nBench =
-      if (priorDir.isEmpty)
-        (if (batch.filter(col(benchFlagCol)).isEmpty) 0L else 1L)
-      else observedLong(obs)(batch.filter(col(benchFlagCol)).count())
     // a train-only batch (the common case) leaves the store untouched —
-    // no O(snapshot) rewrite per micro-batch
-    if (nBench > 0) {
+    // no O(snapshot) rewrite per micro-batch. The store write is decided
+    // by its own probe, never by metrics of onBatch's action: a partial
+    // action (limit, show) would undercount them and drop benchmark rows.
+    val bench = batch.filter(col(benchFlagCol))
+    if (!bench.isEmpty) {
       // benchmark rows are immutable per id, so the replay-dedup keeps
       // content-identical rows whichever copy survives
       val newBench = graft.operators.Similarity.benchmarkSnapshot(
-        batch.filter(col(benchFlagCol)), centroids, idCol, vecCol)
+        bench, centroids, idCol, vecCol)
       snap.unionByName(newBench).dropDuplicates("bench_id")
-        .write.mode("overwrite").parquet(f"$snapDir/v$batchId%05d")
-      // retention: keep {prior, new}; only the current batch can
-      // replay, and its strictly-below lookup reads the prior — every
-      // older version is dead
-      priorDir.foreach(p => batchDirsBefore(snapDir, "v", dirId(p))
-        .foreach(deleteRecursively))
+        .write.mode("overwrite").parquet(store.versionPath(batchId))
+      store.retain(priorId)
     }
-    ()
   }
 
   /** The latest maintained benchmark snapshot under `snapDir`, if any. */
   def decontamSnapshot(spark: SparkSession, snapDir: String)
-      : Option[DataFrame] =
-    batchDirsBefore(snapDir, "v", Long.MaxValue).lastOption
-      .map(f => spark.read.parquet(f.getPath))
+      : Option[DataFrame] = new BatchStore(spark, snapDir).latest
 
   /** Streaming BROADCAST-BLOOM n-gram decontamination — the q159
     * map-only surface in the [[decontamStream]] loop shape. One stream
@@ -866,6 +669,8 @@ object StreamingPipeline {
     * [[decontamBatch]]: strictly-below lookup + versioned overwrite
     * (at-least-once redelivery re-emits identical scores), train-only
     * batches write nothing, and a writing batch prunes to {prior, new}.
+    * `onBatch` must consume the scores eagerly: the store advances when
+    * it returns.
     */
   def bloomDecontamStream(docs: DataFrame, benchFlagCol: String,
                           storeDir: String, n: Int = 4,
@@ -894,7 +699,8 @@ object StreamingPipeline {
     * writes (stats always move), pruning to {prior, new}. Replay is
     * idempotent: the prior lookup is strictly below batchId, so a
     * redelivered batch re-merges the same inputs into the same store
-    * and re-emits the same estimates.
+    * and re-emits the same estimates. `onBatch` must consume the
+    * estimates eagerly: the store advances when it returns.
     */
   def hllStatsStream(rows: DataFrame, groupCol: String, valueCol: String,
                      p: Int, storeDir: String)(
@@ -913,11 +719,11 @@ object StreamingPipeline {
       batch: DataFrame, batchId: Long, groupCol: String, valueCol: String,
       p: Int, storeDir: String)(
       onBatch: (DataFrame, Long) => Unit): Unit = {
-    val s = batch.sparkSession
-    val priorDir = batchDirsBefore(storeDir, "v", batchId).lastOption
+    val store = new BatchStore(batch.sparkSession, storeDir)
+    val priorId = store.prior(batchId)
     val batchRegs = graft.operators.Sketches.hllRegisters(
       batch, Seq(groupCol), valueCol, p)
-    val merged = (priorDir.map(f => s.read.parquet(f.getPath)) match {
+    val merged = (priorId.map(store.version) match {
       case Some(prior) => prior.unionByName(batchRegs)
         .groupBy(col(groupCol), col("bucket"))
         .agg(max(col("reg")).as("reg"))
@@ -925,9 +731,8 @@ object StreamingPipeline {
     }).persist()
     onBatch(graft.operators.Sketches.hllEstimateFromRegisters(
       merged, Seq(groupCol), p), batchId)
-    merged.write.mode("overwrite").parquet(f"$storeDir/v$batchId%05d")
-    priorDir.foreach(pd => batchDirsBefore(storeDir, "v", dirId(pd))
-      .foreach(deleteRecursively))
+    merged.write.mode("overwrite").parquet(store.versionPath(batchId))
+    store.retain(priorId)
     merged.unpersist()
     ()
   }
@@ -938,41 +743,33 @@ object StreamingPipeline {
       storeDir: String, n: Int, mBits: Int, k: Int,
       flagThreshold: Double, idCol: String, textCol: String)(
       onBatch: (DataFrame, Long) => Unit): Unit = {
-    val s = batch.sparkSession
-    val priorDir = batchDirsBefore(storeDir, "v", batchId).lastOption
-    val priorWords = priorDir.map(f => s.read.parquet(f.getPath))
+    val store = new BatchStore(batch.sparkSession, storeDir)
+    val priorId = store.prior(batchId)
+    val priorWords = priorId.map(store.version)
     // before any benchmark arrives the filter is EMPTY: zero bits set,
     // every probe reports zero hits
     val bits = graft.operators.Curation.bloomBitsFromWordRows(
       priorWords.map(_.collect().toSeq
         .map(r => (r.getInt(0), r.getLong(1)))).getOrElse(Seq.empty),
       mBits)
-    // r17 single-materialization (the decontamBatch recipe): onBatch is
-    // the one pass over the prior-filter scores, and the benchmark-row
-    // count rides its observed metrics (CollectMetrics below the train
-    // filter sees every batch row) — no separate count or isEmpty jobs.
-    val obs = new org.apache.spark.sql.Observation()
-    val observed = batch.observe(obs,
-      count(when(col(benchFlagCol), lit(1))).as("nb"))
+    // the decontamBatch recipe: onBatch is the one pass over the
+    // prior-filter scores, and the store write is decided by its own probe
     val scored = graft.operators.Curation.bloomProbeReport(
-        observed.filter(!col(benchFlagCol)), bits, idCol, textCol,
+        batch.filter(!col(benchFlagCol)), bits, idCol, textCol,
         n, mBits, k, flagThreshold)
     onBatch(scored, batchId)
-    val nBench = observedLong(obs)(
-      batch.filter(col(benchFlagCol)).count())
-    if (nBench > 0) {
+    val bench = batch.filter(col(benchFlagCol))
+    if (!bench.isEmpty) {
       val newWords = graft.operators.Curation.bloomWordRows(
-        batch.filter(col(benchFlagCol)), textCol, n, mBits, k)
+        bench, textCol, n, mBits, k)
       val merged = priorWords match {
         case Some(p) => p.unionByName(newWords)
           .groupBy("w").agg(expr("bit_or(bits)").as("bits"))
         case None => newWords
       }
-      merged.write.mode("overwrite").parquet(f"$storeDir/v$batchId%05d")
-      priorDir.foreach(p => batchDirsBefore(storeDir, "v", dirId(p))
-        .foreach(deleteRecursively))
+      merged.write.mode("overwrite").parquet(store.versionPath(batchId))
+      store.retain(priorId)
     }
-    ()
   }
 
   /** Streaming upsert sink: each micro-batch merges into the latest
@@ -982,6 +779,10 @@ object StreamingPipeline {
     * the previous version stays readable until the new one commits (the
     * manifest-swap idiom; a table format replaces the directory listing
     * in a real deployment, and partition-overwrite bounds the rewrite).
+    *
+    * Unlike the other version stores it keeps its WHOLE chain (one
+    * `v<batchId>` per micro-batch, never pruned): readers of an older
+    * version are never broken, and the q121 gate reads every version.
     */
   def upsertStream(delta: DataFrame, keys: Seq[String], versionCol: String,
                    snapshotDir: String) = {
@@ -989,31 +790,24 @@ object StreamingPipeline {
     delta.writeStream
       .outputMode(OutputMode.Append)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val s = batch.sparkSession
+        val store = new BatchStore(batch.sparkSession, snapshotDir)
         // replay safety: merge against the last version committed by a
         // PREVIOUS batch, never the replaying batch's own output (see
         // mixturePlanBatch for the failure mode).
-        val merged = batchDirsBefore(snapshotDir, "v", batchId)
-          .lastOption match {
+        val merged = store.prior(batchId).map(store.version) match {
           case Some(prev) =>
-            graft.operators.Snapshot.mergeSnapshot(
-              s.read.parquet(prev.getPath), batch, keys, versionCol)
+            graft.operators.Snapshot.mergeSnapshot(prev, batch, keys,
+              versionCol)
           case None =>
             graft.operators.Snapshot.keepLatest(batch, keys, versionCol)
         }
-        merged.write.mode("overwrite")
-          .parquet(f"$snapshotDir/v$batchId%05d")
+        merged.write.mode("overwrite").parquet(store.versionPath(batchId))
       }
   }
 
   /** Latest committed snapshot version under `snapshotDir`, if any. */
   def latestSnapshot(spark: SparkSession, snapshotDir: String)
-      : Option[DataFrame] =
-    Option(new java.io.File(snapshotDir).listFiles())
-      .getOrElse(Array.empty)
-      .filter(f => f.isDirectory && f.getName.startsWith("v"))
-      .sortBy(_.getName).lastOption
-      .map(f => spark.read.parquet(f.getPath))
+      : Option[DataFrame] = new BatchStore(spark, snapshotDir).latest
 
   /** Input row for the streaming samplers: a document's stratum, id, and
     * (for the weighted variant) sampling weight.
@@ -1231,6 +1025,12 @@ object StreamingPipeline {
     * (bands × rows-per-band trade; the q26 gate corpus measures 1.0 at
     * 32×2, and the oracle is the exact-Jaccard replay, so any recall
     * loss fails the gate loudly).
+    *
+    * `onBatch` must consume the emission eagerly: the store advances when
+    * it returns. A state dir in the legacy split layout (batch dirs under
+    * `bands/` or `shingles/`, none under `store/`) fails the batch with an
+    * IllegalStateException instead of silently re-admitting every
+    * previously seen document.
     */
   def minHashDedupStream(docs: DataFrame, idCol: String, textCol: String,
                          stateDir: String, n: Int = 3,
@@ -1252,7 +1052,16 @@ object StreamingPipeline {
       bands: Int)(onBatch: (DataFrame, Long) => Unit): Unit = {
     require(numHashes % bands == 0, "bands must divide numHashes")
     val s = batch.sparkSession
-    val storeDir = s"$stateDir/store"
+    val store = new BatchStore(s, s"$stateDir/store")
+    if (store.historyDirs().isEmpty)
+      for (legacy <- Seq("bands", "shingles")
+           if new BatchStore(s, s"$stateDir/$legacy").historyDirs().nonEmpty)
+        throw new IllegalStateException(
+          s"$stateDir/$legacy holds minHashDedupStream state in the " +
+            s"legacy split band/shingle layout, but $stateDir/store is " +
+            "empty. Replay the source into a fresh state dir to migrate, " +
+            s"or delete $stateDir/bands and $stateDir/shingles to restart " +
+            "the dedup history.")
     val rowsPer = numHashes / bands
     // eager localCheckpoint, NOT lazy persist: the emission plan builds
     // several BROADCASTS from these frames concurrently, and racing
@@ -1280,17 +1089,11 @@ object StreamingPipeline {
         explode(col("bands")).as("bb"))
       .select(col("id"), col("shingles"),
         col("bb.band").as("band"), col("bb.bh").as("bh"))
-    val priorWide = {
-      val dirs = batchDirsBefore(storeDir, "b", Long.MaxValue)
-        .filterNot(_.getName == f"b$batchId%05d")
-      if (dirs.nonEmpty)
-        dirs.map(d => s.read.parquet(d.getPath))
-          .reduce(_.unionByName(_, allowMissingColumns = true))
-      else s.range(0).select(lit(0L).as("id"),
+    val priorWide = store.history(exceptBatch = batchId).getOrElse(
+      s.range(0).select(lit(0L).as("id"),
         lit(Array.empty[Long]).as("shingles"),
         expr("CAST(array() AS array<struct<band: int, bh: bigint>>)")
-          .as("bands"))
-    }
+          .as("bands")))
     val priorBands = priorWide
       .select(col("id"), explode(col("bands")).as("bb"))
       .select(col("bb.band").as("band"), col("bb.bh").as("bh"), col("id"))
@@ -1340,11 +1143,8 @@ object StreamingPipeline {
     // deletes merged source dirs).
     onBatch(emission, batchId)
     curWide.coalesce(1).write.mode("overwrite")
-      .parquet(f"$storeDir/b$batchId%05d")
-    if (batchDirsBefore(storeDir, "b", Long.MaxValue).length >=
-        DigestCompactMinDirs)
-      compactStateDirs(s, storeDir, beforeId = batchId)
-    ()
+      .parquet(store.batchPath(batchId))
+    store.compactIfDue(batchId)
   }
 
   // ------------------------------------------------------------------
@@ -1379,7 +1179,8 @@ object StreamingPipeline {
     * whole-store aggregation). Replay-idempotent: the pairs store keys
     * its subdirs by batchId and overwrites on replay (auto-compacting
     * like the digest store); the counter store replays by the
-    * strictly-below version lookup.
+    * strictly-below version lookup. `onBatch` must consume the rollup
+    * eagerly: the stores advance when it returns.
     */
   def domainQualityStream(docs: DataFrame, urlCol: String, idCol: String,
                           keepCol: String, wordsCol: String,
@@ -1404,8 +1205,8 @@ object StreamingPipeline {
       onBatch: (DataFrame, Long) => Unit): Unit = {
     import graft.operators.WebCuration
     val s = batch.sparkSession
-    val pairDir = s"$stateDir/pairs"
-    val ctrDir = s"$stateDir/counters"
+    val pairStore = new BatchStore(s, s"$stateDir/pairs")
+    val ctrStore = new BatchStore(s, s"$stateDir/counters")
     val proj = batch.select(
         WebCuration.registrableDomain(
           WebCuration.urlHost(col(urlCol)), psl).as("domain"),
@@ -1427,13 +1228,8 @@ object StreamingPipeline {
         md5(concat_ws("\u0000", col("domain"), col("c")))
           .as("content_hash"))
       .distinct()
-    val seenDirs = batchDirsBefore(pairDir, "b", Long.MaxValue)
-      .filterNot(_.getName == f"b$batchId%05d")
-    val seen =
-      if (seenDirs.nonEmpty)
-        seenDirs.map(d => s.read.parquet(d.getPath))
-          .reduce(_.unionByName(_, allowMissingColumns = true))
-      else s.range(0).select(lit("").as("content_hash"))
+    val seen = pairStore.history(exceptBatch = batchId)
+      .getOrElse(s.range(0).select(lit("").as("content_hash")))
     // no distinct (r17): the anti-join below tolerates duplicate build
     // keys — store-side duplicates (compaction window) change nothing
     val matched = seen.select("content_hash")
@@ -1463,8 +1259,8 @@ object StreamingPipeline {
     // Replay-idempotent by the strictly-below argument; a writing batch
     // prunes to {prior, new} (the prior must survive — only the current
     // batch can replay, and it reads exactly that version).
-    val prevCtr = batchDirsBefore(ctrDir, "v", batchId).lastOption
-    val merged = (prevCtr.map(f => s.read.parquet(f.getPath)) match {
+    val prevCtr = ctrStore.prior(batchId)
+    val merged = (prevCtr.map(ctrStore.version) match {
       case Some(prev) => prev.unionByName(counters)
         .groupBy(col("domain"))
         .agg(sum(col("n_docs")).as("n_docs"),
@@ -1476,9 +1272,9 @@ object StreamingPipeline {
     }).persist()
     // the version write doubles as the cache pin (the mixture recipe)
     merged.coalesce(1).write.mode("overwrite")
-      .parquet(f"$ctrDir/v$batchId%05d")
+      .parquet(ctrStore.versionPath(batchId))
     newPairs.select("content_hash").coalesce(1).write.mode("overwrite")
-      .parquet(f"$pairDir/b$batchId%05d")
+      .parquet(pairStore.batchPath(batchId))
     val g = greatest(col("parseable"), lit(1L)).cast("double")
     val rollup = merged.select(col("domain"), col("n_docs"),
         col("parseable"), col("n_canon_new").as("n_canonical"),
@@ -1494,12 +1290,8 @@ object StreamingPipeline {
     // retention: keep {prior, new} (a replay of THIS batch reads the
     // prior); prune AFTER onBatch so a cache miss on the rollup read can
     // still recompute merged from the prior version
-    prevCtr.foreach(p => batchDirsBefore(ctrDir, "v", dirId(p))
-      .foreach(deleteRecursively))
+    ctrStore.retain(prevCtr)
     merged.unpersist()
-    if (batchDirsBefore(pairDir, "b", Long.MaxValue).length >=
-        DigestCompactMinDirs)
-      compactStateDirs(s, pairDir, beforeId = batchId)
-    ()
+    pairStore.compactIfDue(batchId)
   }
 }

@@ -6,7 +6,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
-import graft.streaming.StreamingPipeline
+import graft.streaming.{BatchStore, StreamingPipeline}
 import graft.streaming.StreamingPipeline.{Session, UserEvent}
 
 /** Structured Streaming semantics: windowed aggregation parity with the
@@ -810,8 +810,7 @@ class StreamingSpec extends SparkSpec {
     val before = StreamingPipeline.digestStore(spark, digestDir)
       .as[String].collect().sorted.toSeq
     // compact everything committed before batch 2 (ids 0 and 1)
-    val removed = StreamingPipeline.compactStateDirs(spark, digestDir,
-      beforeId = 2L)
+    val removed = new BatchStore(spark, digestDir).compact(beforeId = 2L)
     assert(removed == 1)
     val dirNames = new java.io.File(digestDir).listFiles()
       .map(_.getName)
@@ -931,8 +930,8 @@ class StreamingSpec extends SparkSpec {
     run(Seq((3L, Seq(0.5f, 0.5f, 0.0f))), 2L)
     val before = StreamingPipeline.semDedupStore(spark, stateDir).get
       .select("vec_id", "cell").as[(Long, Long)].collect().toSet
-    assert(StreamingPipeline.compactStateDirs(spark, stateDir,
-      beforeId = 2L, partitionCols = Seq("cell")) == 1)
+    assert(new BatchStore(spark, stateDir).compact(beforeId = 2L,
+      partitionCols = Seq("cell")) == 1)
     // partition layout survives: the compacted dir has cell=N subdirs
     val compacted = new java.io.File(stateDir, "c00001")
     assert(compacted.listFiles().exists(_.getName.startsWith("cell=")),

@@ -9,11 +9,15 @@ import org.apache.spark.sql.functions._
 import graft.CacheScope
 import graft.etl.EtlConfigs.{MerchantRule, PaymentRule}
 import graft.functions.OracleSafe.dsum
-import graft.functions.PandasRank.pctRank
 import graft.operators.Rfm
 
 /** Analytics stage (EP3): merchant / payment / card RFM over
   * `all_transactions`, reference semantics end-to-end.
+  *
+  * Each analysis keeps what is its own — the merchant normalizer, payment
+  * tagging, the bank-fee/blacklist filters, card's trailing-365-day window,
+  * the reference-label segment ladders and the sorts — and takes the R/F/M
+  * aggregate, ranks and dual window from [[graft.operators.Rfm]].
   *
   * Plan shape per analysis (SURVEY §3 EP3): column-pruned scan → (UDF)
   * normalize → filters → two groupBy branches off one cached upstream →
@@ -94,40 +98,6 @@ object Analyze {
       .drop("_m")
   }
 
-  // ------------------------------------------------------------ shared RFM
-  private def rfmAgg(df: DataFrame, keys: Seq[String],
-                     analysisDate: java.sql.Date, prefix: String,
-                     extraAggs: Seq[Column] = Nil): DataFrame = {
-    val aggs = Seq(
-      datediff(lit(analysisDate), max(col("transaction_date")))
-        .cast("long").as(s"${prefix}recency_days"),
-      countDistinct(col("transaction_id")).as(s"${prefix}frequency"),
-      dsum(col("payment_amount")).as(s"${prefix}monetary")) ++ extraAggs
-    val agg = df.groupBy(keys.map(col): _*).agg(aggs.head, aggs.tail: _*)
-    // Adaptive rank path: windowed under the counted 2^17 threshold,
-    // prefix-sum joins above it (see Rfm.aggregate scaladoc).
-    graft.functions.PandasRank.pctRankScalableAll(agg, Seq(
-      (s"${prefix}recency_days", s"${prefix}r_rank", false),
-      (s"${prefix}frequency", s"${prefix}f_rank", true),
-      (s"${prefix}monetary", s"${prefix}m_rank", true)))
-  }
-
-  private def dualWindow(df: DataFrame, keys: Seq[String],
-                         extraLifeAggs: Seq[Column] = Nil): DataFrame = {
-    val cached = CacheScope.persist(df) // both windows + analysis date
-    val analysisDate = Rfm.analysisDate(cached, "transaction_date")
-    val life = rfmAgg(cached, keys, analysisDate, "life_", extraLifeAggs)
-    val cutoff = java.sql.Date.valueOf(
-      analysisDate.toLocalDate.minusDays(365)) // SHORT_TERM_DAYS
-    val short = rfmAgg(
-      cached.filter(col("transaction_date") >= lit(cutoff)),
-      keys, analysisDate, "short_")
-    life.join(short, keys, "left")
-      .na.fill(0, Seq("short_frequency", "short_monetary", "short_r_rank",
-        "short_f_rank", "short_m_rank"))
-      .na.fill(9999, Seq("short_recency_days"))
-  }
-
   // ------------------------------------------------------------ merchant
   /** Merchant RFM (db_to_RFManalysis.py:162-281). Output: one row per
     * clean merchant with life_/short_ R/F/M + ranks, Category/Sub_Category,
@@ -139,12 +109,15 @@ object Analyze {
       txns.select("transaction_id", "transaction_date", "merchant_name",
         "payment_amount", "transaction_type"),
       merchantRules, paymentPrefixes(paymentRules))
-    val filtered = normalized.filter(!col("RFM_Exclusion") && notBankFee)
+    // persisted: the analysis date and both windows read it
+    val filtered = CacheScope.persist(
+      normalized.filter(!col("RFM_Exclusion") && notBankFee))
     // Category/Sub_Category per group: 'first' in file order in pandas; we
     // take max() — deterministic under parallelism, identical whenever a
     // clean name maps to one rule (the designed case)
-    val joined = dualWindow(filtered, Seq("clean_merchant_name"),
-      extraLifeAggs = Seq(max(col("Category")).as("Category"),
+    val joined = Rfm.dualWindow(filtered, Seq("clean_merchant_name"),
+      "transaction_date", "transaction_id", "payment_amount",
+      lifeAggs = Seq(max(col("Category")).as("Category"),
         max(col("Sub_Category")).as("Sub_Category")))
     val highValue = col("life_m_rank") >= 0.8
     val active = col("short_frequency") > 0
@@ -200,12 +173,14 @@ object Analyze {
     * sorted life_frequency desc.
     */
   def paymentRfm(txns: DataFrame, paymentRules: Seq[PaymentRule]): DataFrame = {
-    val tagged = txns.select("transaction_id", "transaction_date",
-        "merchant_name", "payment_amount", "transaction_type")
-      .withColumn("Payment_Method",
-        paymentMethod(col("merchant_name"), paymentRules))
-      .filter(notBankFee)
-    val joined = dualWindow(tagged, Seq("Payment_Method"))
+    val tagged = CacheScope.persist(
+      txns.select("transaction_id", "transaction_date",
+          "merchant_name", "payment_amount", "transaction_type")
+        .withColumn("Payment_Method",
+          paymentMethod(col("merchant_name"), paymentRules))
+        .filter(notBankFee))
+    val joined = Rfm.dualWindow(tagged, Seq("Payment_Method"),
+      "transaction_date", "transaction_id", "payment_amount")
     val highFreq = col("life_f_rank") >= 0.7
     val active = col("short_frequency") > 0
     joined
@@ -243,17 +218,12 @@ object Analyze {
         .filter(notBankFee &&
           col("card_name").isNotNull && col("card_name") =!= ""))
     val analysisDate = Rfm.analysisDate(clean, "transaction_date")
-    val cutoff = java.sql.Date.valueOf(
-      analysisDate.toLocalDate.minusDays(1 + 365)) // latest − 365d
-    val windowed = clean.filter(col("transaction_date") >= lit(cutoff))
-    val agg = windowed.groupBy(col("bank_name"), col("card_name")).agg(
-        datediff(lit(analysisDate), max(col("transaction_date")))
-          .cast("long").as("recency_days"),
-        countDistinct(col("transaction_id")).as("frequency"),
-        dsum(col("payment_amount")).as("monetary"))
-    val ranked = graft.functions.PandasRank.pctRankScalableAll(agg, Seq(
-      ("frequency", "f_rank", true),
-      ("monetary", "m_rank", true)))
+    val windowed = Rfm.since(clean, "transaction_date", analysisDate,
+      1 + Rfm.ShortDays) // latest − 365d
+    val ranked = Rfm.ranks(
+      Rfm.metrics(windowed, Seq("bank_name", "card_name"), "transaction_date",
+        "transaction_id", "payment_amount", analysisDate),
+      recency = false)
     val highFreq = col("f_rank") >= 0.5
     val highMoney = col("m_rank") >= 0.5
     ranked
@@ -263,8 +233,7 @@ object Analyze {
           .when(!highFreq && highMoney, "🎯 狙擊手 (Sniper)")
           .when(highFreq && !highMoney, "🔄 後勤補給 (Utility)")
           .otherwise("📉 低效冗餘 (Inefficient)"))
-      .withColumn("avg_ticket",
-        (col("monetary") / col("frequency")).cast("long"))
+      .withColumn("avg_ticket", Rfm.avgTicket)
       .orderBy(col("monetary").desc)
   }
 }

@@ -8,9 +8,9 @@ import graft.etl.Schema._
 /** Load stage (load_to_db.py): refined transactions → the
   * `all_transactions` warehouse table.
   *
-  * SQLite is replaced by partitioned parquet (SURVEY §1.4): the 4 B-tree
-  * indexes (load_to_db.py:125-128) become parquet min/max statistics +
-  * optional partitioning; `if_exists='replace'` becomes
+  * SQLite is replaced by parquet (SURVEY §1.4): the 4 B-tree indexes
+  * (load_to_db.py:125-128) become parquet min/max statistics;
+  * `if_exists='replace'` becomes
   * `mode("overwrite")` — same idempotent-snapshot contract (K2).
   */
 object Load {
@@ -83,27 +83,6 @@ object Load {
   def readStageCsv(spark: SparkSession, path: String): DataFrame =
     spark.read.option("header", "true").csv(path)
 
-  /** K2 + K4: overwrite-load as a parquet-backed table, then count-check.
-    * Partitioning/bucketing: none by default (personal-finance scale); at
-    * warehouse scale, `partitionBy = Seq("transaction_date")` replaces the
-    * reference's date index with partition pruning, and
-    * `bucketBy = Some((64, "card_no"))` replaces the card index with
-    * shuffle-free co-located joins/aggregations on the bucket key
-    * (SURVEY §2.2 K3).
-    */
-  def loadToTable(spark: SparkSession, refined: DataFrame, table: String,
-                  partitionBy: Seq[String] = Nil,
-                  bucketBy: Option[(Int, String)] = None): Long = {
-    val shaped = toWarehouseShape(refined)
-    var writer = shaped.write.mode("overwrite")
-    if (partitionBy.nonEmpty) writer = writer.partitionBy(partitionBy: _*)
-    bucketBy.foreach { case (n, c) =>
-      writer = writer.bucketBy(n, c).sortBy(c)
-    }
-    writer.saveAsTable(table)
-    spark.table(table).count() // load_to_db.py:133-135
-  }
-
   /** The literal `Bills.db` sink (load_to_db.py:113-135): write the
     * warehouse-shaped frame into a REAL SQLite database file
     * (`Sqlite.writeTables`, replace semantics) and return the row count —
@@ -113,8 +92,8 @@ object Load {
     * The reference's four `CREATE INDEX` statements (load_to_db.py:125-128)
     * are replicated as real index B-trees, so a SQLite consumer doing
     * point lookups on date/merchant/card/id gets indexed access — a true
-    * drop-in. At engine scale the same access paths are partitioning/
-    * bucketing on the parquet table ([[loadToTable]], SURVEY §2.2 K3).
+    * drop-in. At engine scale the table stays the `all_transactions`
+    * parquet that `Pipeline.run` writes (SURVEY §2.2 K3).
     */
   def loadToSqlite(refined: DataFrame, dbPath: String,
                    table: String = "bills"): Long =

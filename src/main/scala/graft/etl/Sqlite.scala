@@ -33,7 +33,8 @@ import org.apache.spark.sql.types._
   * reference actually ships to SQLite — refined bills and RFM group
   * tables; an index additionally buffers its (key, rowid) pairs for the
   * sort, the same bound sqlite's own CREATE INDEX pays. Warehouse-scale
-  * data stays parquet (`Load.loadToTable`, SURVEY §2.2 K3).
+  * data stays the `all_transactions` parquet that `Pipeline.run` writes
+  * (SURVEY §2.2 K3).
   *
   * Large records spill to real overflow-page chains (spec K-local-bytes
   * split), so arbitrarily long TEXT loads correctly. The one asserted

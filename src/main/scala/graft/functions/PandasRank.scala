@@ -49,78 +49,24 @@ object PandasRank {
         .cast("double") / lit(2.0) / count(value).over(wAll).cast("double"))
   }
 
-  /** Distributed pandas-pct-rank: identical results to [[pctRank]] without
-    * a global single-partition window over the FACT rows. Tie counts come
-    * from a groupBy on the value (two-phase agg); the ordered cumulative
-    * sum runs over the DISTINCT-VALUE table (cardinality |values|, not
-    * |rows|); the ranks join back on the value (broadcast when small).
-    * This is the 100 TB path for ranking un-aggregated columns.
+  /** Fully distributed pandas-pct-rank LOOKUP TABLE (valueCol → outCol),
+    * one row per distinct non-null value — no single-partition window
+    * anywhere, exact to the bit vs [[pctRank]]. None ⇔ no non-null value.
     *
-    * Integer arithmetic `2*rank - 1 + ties` is kept exact and divided in
-    * the same fp order as [[pctRank]] / the oracle SQL, so results are
-    * bit-identical. Null values rank to null and are excluded from n
-    * (pandas NaN semantics), same as [[pctRank]].
-    */
-  def pctRankJoined(df: org.apache.spark.sql.DataFrame, valueCol: String,
-                    outCol: String, ascending: Boolean = true)
-      : org.apache.spark.sql.DataFrame = {
-    val ordered = if (ascending) col(valueCol).asc else col(valueCol).desc
-    val wCum = Window.orderBy(ordered)
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val wAll = Window.partitionBy()
-    val ranked = df.filter(col(valueCol).isNotNull)
-      .groupBy(valueCol).agg(count(lit(1)).as("_cnt"))
-      .withColumn("_before", coalesce(sum(col("_cnt")).over(wCum), lit(0L)))
-      .withColumn("_n", sum(col("_cnt")).over(wAll))
-      .withColumn(outCol,
-        (lit(2) * (col("_before") + lit(1)) - lit(1) + col("_cnt"))
-          .cast("double") / lit(2.0) / col("_n").cast("double"))
-      .select(col(valueCol), col(outCol))
-    // left join: null-valued rows keep their row with a null rank (pandas
-    // NaN semantics), matching pctRank's when(isNull, null) branch.
-    df.join(ranked, Seq(valueCol), "left")
-  }
-
-  /** Fully distributed pandas-pct-rank — no single-partition window
-    * anywhere, exact to the bit vs [[pctRank]].
-    *
-    * [[pctRankJoined]] still runs one ordered window over the
-    * DISTINCT-VALUE table; for continuous metrics (monetary sums) distinct
-    * ≈ rows, so that window is the scale ceiling. Here the distinct-value
-    * table is RANGE partitioned and sorted within partitions (equal values
-    * land in one partition, so tie groups never straddle boundaries), the
-    * per-partition totals round-trip the driver (one long per partition),
-    * and a per-partition prefix sum assigns global ranks. RDD
-    * mapPartitionsWithIndex is the honest tool for the prefix-sum — a
-    * genuinely imperative per-partition pass.
-    */
-  def pctRankScalable(df: org.apache.spark.sql.DataFrame, valueCol: String,
-                      outCol: String, ascending: Boolean = true,
-                      numPartitions: Int = 0)
-      : org.apache.spark.sql.DataFrame =
-    pctRankTable(df, valueCol, outCol, ascending, numPartitions) match {
-      // left join: null values never match the (null-free) lookup table,
-      // so they keep a null rank instead of vanishing — same rows as the
-      // window strategy.
-      case Some(table) => df.join(table, Seq(valueCol), "left")
-      case None => df.withColumn(outCol, lit(null).cast("double"))
-    }
-
-  /** The (valueCol → outCol) rank LOOKUP TABLE behind [[pctRankScalable]]
-    * — one row per distinct value. Separated so multi-rank callers
-    * ([[pctRankScalableAll]]) can derive every table from one cached
-    * input and join each exactly once, instead of re-deriving the chain.
-    * None ⇔ the input is empty.
+    * The distinct-value table is RANGE partitioned and sorted within
+    * partitions (equal values land in one partition, so tie groups never
+    * straddle boundaries), the per-partition totals round-trip the driver
+    * (one long per partition), and a per-partition prefix sum assigns
+    * global ranks. RDD mapPartitionsWithIndex is the honest tool for the
+    * prefix-sum — a genuinely imperative per-partition pass.
     */
   private def pctRankTable(df: org.apache.spark.sql.DataFrame,
                            valueCol: String, outCol: String,
-                           ascending: Boolean, numPartitions: Int = 0)
+                           ascending: Boolean)
       : Option[org.apache.spark.sql.DataFrame] = {
     val spark = df.sparkSession
     val ordered = if (ascending) col(valueCol).asc else col(valueCol).desc
-    val parts =
-      if (numPartitions > 0) numPartitions
-      else spark.sessionState.conf.numShufflePartitions
+    val parts = spark.sessionState.conf.numShufflePartitions
     val counts = df.filter(col(valueCol).isNotNull)
       .groupBy(valueCol).agg(count(lit(1)).as("_cnt"))
       .repartitionByRange(parts, ordered)
@@ -171,13 +117,14 @@ object PandasRank {
     * window sort — milliseconds of work, zero extra jobs, exactly what a
     * bounded group table wants. Above it, each rank becomes a
     * range-partitioned prefix-sum LOOKUP TABLE derived from the same
-    * cached input and joined back exactly once (deriving them from a
-    * naive pctRankScalable fold instead would make rank k's groupBy
+    * cached input and joined back exactly once (deriving each table from
+    * the previous rank's join instead would make rank k's groupBy
     * recompute ranks 1..k-1's joins — measured 7× on the RFM bench
-    * queries). Both strategies are bit-identical: same integer rank
-    * arithmetic, same fp division order, both hash-proven against the
-    * same oracle SQL (q05 pins scalable/joined/window against one
-    * formula; q06/q07 have hash-matched with each strategy).
+    * queries). A null value ranks to null and does not count toward n
+    * (pandas NaN semantics) on both sides. Both strategies are
+    * bit-identical: same integer rank arithmetic, same fp division
+    * order, both hash-proven against the same oracle SQL (q05/q06/q07;
+    * PandasRankSpec forces each side of the threshold).
     */
   def pctRankScalableAll(df: org.apache.spark.sql.DataFrame,
                          specs: Seq[(String, String, Boolean)],
@@ -193,6 +140,8 @@ object PandasRank {
       else
         specs.foldLeft(base) { case (acc, (v, o, asc)) =>
           pctRankTable(base, v, o, ascending = asc) match {
+            // left join: null values never match the (null-free) lookup
+            // table, so they keep a null rank instead of vanishing
             case Some(table) => acc.join(table, Seq(v), "left")
             case None => acc.withColumn(o, lit(null).cast("double"))
           }
@@ -213,7 +162,7 @@ object PandasRank {
     * and climbing superlinearly; cluster size is irrelevant because the
     * parallelism ceiling IS the group count).
     *
-    * Same recipe as [[pctRankScalable]], generalized to composite order +
+    * Same recipe as [[pctRankTable]], generalized to composite order +
     * grouping: range-repartition on (group ++ order) — a global sort in
     * which one group spans MANY partitions — then per-(partition, group)
     * row counts round-trip the driver (≤ partitions × groups longs), a
@@ -290,20 +239,5 @@ object PandasRank {
     // eager checkpoint decouples the output from `sorted`'s blocks
     // (pctRankTable's pattern) so they can be reclaimed independently
     spark.createDataFrame(outRdd, schema).localCheckpoint(eager = true)
-  }
-
-  /** The same formula as raw SQL text (for oracle parity / spark.sql use).
-    * Assumes a non-null rank column, which every oracle query satisfies
-    * (the reference never ranks nullable columns); the Scala entry points'
-    * null handling is a strict extension on top of this shared formula.
-    */
-  def sqlExpr(value: String, ascending: Boolean,
-              partition: Option[String] = None): String = {
-    val part = partition.map(p => s"PARTITION BY $p ").getOrElse("")
-    val dir = if (ascending) "ASC" else "DESC"
-    val tiePart = partition.map(p => s"$p, ").getOrElse("")
-    s"CAST(2 * RANK() OVER (${part}ORDER BY $value $dir) - 1 + " +
-      s"COUNT(*) OVER (PARTITION BY $tiePart$value) AS DOUBLE) / 2.0 / " +
-      s"CAST(COUNT(*) OVER (${partition.map(p => s"PARTITION BY $p").getOrElse("")}) AS DOUBLE)"
   }
 }

@@ -8,14 +8,17 @@ import org.apache.spark.sql.functions._
 import graft.functions.OracleSafe.dsum
 import graft.functions.PandasRank
 
-/** RFM (recency / frequency / monetary) analytics.
+/** RFM (recency / frequency / monetary) analytics — the one home of the
+  * reference's RFM recipe, shared by the pipeline's three analyses
+  * (`graft.etl.Analyze`) and the q06/q07 oracle queries.
   *
   * Semantics from the reference pipeline, re-keyed for arbitrary tables:
   *   - aggregation: db_to_RFManalysis.py:136-156 (merchant),
   *     db_to_card_RFM.py:26-53 (card) — recency = days between analysis date
   *     and max(date); frequency = distinct txn ids; monetary = sum(amount);
   *   - ranks: pandas pct-rank, r descending / f,m ascending
-  *     (db_to_RFManalysis.py:153-155);
+  *     (db_to_RFManalysis.py:153-155); card ranks f/m only
+  *     (db_to_card_RFM.py:47-48);
   *   - dual-window left join + fills (db_to_RFManalysis.py:245-255):
   *     short-window misses get frequency/monetary/ranks 0, recency 9999;
   *   - segment ladders: db_to_RFManalysis.py:258-268 (merchant: m_rank 0.8,
@@ -30,17 +33,47 @@ import graft.functions.PandasRank
   */
 object Rfm {
 
+  /** The dual window's short window in days (SHORT_TERM_DAYS,
+    * db_to_RFManalysis.py:245).
+    */
+  val ShortDays = 365
+
   /** `analysis_date = max(dateCol) + 1 day` — one driver round-trip, exactly
     * like the reference's `.max()` (db_to_RFManalysis.py:236). The action is
     * a column-pruned scan + max; cheap even at 100 TB (parquet stats help).
+    * Null when `dateCol` holds no date (an empty input): recencies are then
+    * null and [[since]] keeps no row, so an analysis of nothing is an empty
+    * table with its usual columns.
     */
-  def analysisDate(df: DataFrame, dateCol: String): Date = {
-    val row = df.agg(max(to_date(col(dateCol))).as("d")).head()
-    Date.valueOf(row.getDate(0).toLocalDate.plusDays(1))
+  def analysisDate(df: DataFrame, dateCol: String): Date =
+    Option(df.agg(max(to_date(col(dateCol)))).head().getDate(0))
+      .map(d => Date.valueOf(d.toLocalDate.plusDays(1))).orNull
+
+  /** The rows dated on or after `analysisDate − days`. */
+  def since(df: DataFrame, dateCol: String, analysisDate: Date,
+            days: Int): DataFrame = {
+    val cutoff = Option(analysisDate)
+      .map(d => Date.valueOf(d.toLocalDate.minusDays(days))).orNull
+    df.filter(to_date(col(dateCol)) >= lit(cutoff))
   }
 
-  /** One RFM aggregate with pandas-pct ranks, columns named
-    * `{prefix}recency_days/frequency/monetary/r_rank/f_rank/m_rank`.
+  /** Per-group R/F/M: `{prefix}recency_days` (long), `{prefix}frequency`,
+    * `{prefix}monetary`, then `extraAggs` as given.
+    */
+  def metrics(df: DataFrame, keys: Seq[String], dateCol: String,
+              idCol: String, amountCol: String, analysisDate: Date,
+              prefix: String = "",
+              extraAggs: Seq[Column] = Nil): DataFrame = {
+    val aggs = Seq(
+      datediff(lit(analysisDate), max(to_date(col(dateCol))))
+        .cast("long").as(s"${prefix}recency_days"),
+      countDistinct(col(idCol)).as(s"${prefix}frequency"),
+      dsum(col(amountCol)).as(s"${prefix}monetary")) ++ extraAggs
+    df.groupBy(keys.map(col): _*).agg(aggs.head, aggs.tail: _*)
+  }
+
+  /** Pandas pct-ranks of [[metrics]]' columns, appended as
+    * `{prefix}r_rank/f_rank/m_rank`; `recency = false` ranks f and m only.
     *
     * Ranks use `PandasRank.pctRankScalableAll` — the adaptive strategy:
     * group tables at or under the 2^17-row threshold take the windowed
@@ -48,38 +81,42 @@ object Rfm {
     * jobs); larger ones take range-partitioned prefix-sum lookup tables
     * with ZERO single-partition windows. The group key here is
     * cards/merchants — hundreds of millions at 100 TB, far past the
-    * threshold — so at scale the global window sort this used to plan
-    * never happens. Both strategies are bit-identical (same integer rank
-    * arithmetic and fp division order, oracle-proven via q05/q06/q07).
+    * threshold — so at scale no global window sort is planned. Both
+    * strategies are bit-identical (same integer rank arithmetic and fp
+    * division order, oracle-proven via q05/q06/q07).
     */
-  def aggregate(df: DataFrame, keys: Seq[String], dateCol: String,
-                idCol: String, amountCol: String, analysisDate: Date,
-                prefix: String = ""): DataFrame = {
-    val agg = df.groupBy(keys.map(col): _*).agg(
-      datediff(lit(analysisDate), max(to_date(col(dateCol))))
-        .as(s"${prefix}recency_days"),
-      countDistinct(col(idCol)).as(s"${prefix}frequency"),
-      dsum(col(amountCol)).as(s"${prefix}monetary"))
-    PandasRank.pctRankScalableAll(agg, Seq(
-      (s"${prefix}recency_days", s"${prefix}r_rank", false),
-      (s"${prefix}frequency", s"${prefix}f_rank", true),
-      (s"${prefix}monetary", s"${prefix}m_rank", true)))
+  def ranks(metrics: DataFrame, prefix: String = "",
+            recency: Boolean = true): DataFrame = {
+    val r = Seq((s"${prefix}recency_days", s"${prefix}r_rank", false))
+    val fm = Seq((s"${prefix}frequency", s"${prefix}f_rank", true),
+      (s"${prefix}monetary", s"${prefix}m_rank", true))
+    PandasRank.pctRankScalableAll(metrics, (if (recency) r else Nil) ++ fm)
   }
 
-  /** Lifetime + short-window RFM, left-joined on the group keys with the
-    * reference's fill discipline. The join inputs are post-aggregation group
+  /** One RFM aggregate with pandas-pct ranks: [[metrics]] then [[ranks]]. */
+  def aggregate(df: DataFrame, keys: Seq[String], dateCol: String,
+                idCol: String, amountCol: String, analysisDate: Date,
+                prefix: String = ""): DataFrame =
+    ranks(metrics(df, keys, dateCol, idCol, amountCol, analysisDate, prefix),
+      prefix)
+
+  /** Lifetime + short-window ([[ShortDays]]) RFM, left-joined on the group
+    * keys with the reference's fill discipline. `lifeAggs` ride along on
+    * the lifetime side. The analysis date and both windows read `df`, so
+    * a caller whose input is costly to recompute persists it first (the
+    * pipeline's analyses do; a cached plain scan would only add AQE's
+    * cache-materializing job). The join inputs are post-aggregation group
     * tables — at cluster scale Catalyst broadcast-joins the short side
     * (always <= lifetime side).
     */
   def dualWindow(df: DataFrame, keys: Seq[String], dateCol: String,
-                 idCol: String, amountCol: String, analysisDate: Date,
-                 shortDays: Int = 365): DataFrame = {
-    val life = aggregate(df, keys, dateCol, idCol, amountCol,
-      analysisDate, "life_")
-    val cutoff = Date.valueOf(analysisDate.toLocalDate.minusDays(shortDays))
-    val short = aggregate(
-      df.filter(to_date(col(dateCol)) >= lit(cutoff)),
-      keys, dateCol, idCol, amountCol, analysisDate, "short_")
+                 idCol: String, amountCol: String,
+                 lifeAggs: Seq[Column] = Nil): DataFrame = {
+    val ad = analysisDate(df, dateCol)
+    val life = ranks(metrics(df, keys, dateCol, idCol, amountCol, ad,
+      "life_", lifeAggs), "life_")
+    val short = aggregate(since(df, dateCol, ad, ShortDays),
+      keys, dateCol, idCol, amountCol, ad, "short_")
     life.join(short, keys, "left")
       .na.fill(0, Seq("short_frequency", "short_monetary",
         "short_r_rank", "short_f_rank", "short_m_rank"))

@@ -148,25 +148,19 @@ object RelationalQueries {
        |ORDER BY order_class""".stripMargin
 
   // ---------------------------------------------------------------- q05
-  // pandas pct-rank semantics (§2.7 W2). The two GLOBAL ranks use the
-  // distributed groupBy+join formulation (windows over distinct values,
-  // not fact rows — the 100 TB path); the per-segment rank keeps the
-  // window form (partitions parallelize it naturally).
+  // pandas pct-rank semantics (§2.7 W2). The two GLOBAL ranks take the
+  // adaptive strategy the RFM analyses use (a counted, bounded window at
+  // or under 2^17 rows, range-partitioned prefix sums above); the
+  // per-segment rank keeps the window form (partitions parallelize it
+  // naturally).
   private def q05(s: SparkSession, dir: String): DataFrame = {
     val base = Tables.customer(s, dir)
       .select(col("c_custkey"), col("c_mktsegment"), col("c_acctbal"))
-    // both distributed formulations, each oracle-checked: range-partitioned
-    // prefix-sum (no single-partition window at all) and groupBy+join
-    val asc = PandasRank.pctRankScalable(base, "c_acctbal", "bal_pct",
-      ascending = true)
-    val both = PandasRank.pctRankJoined(asc, "c_acctbal", "bal_pct_desc",
-      ascending = false)
-    both
+    PandasRank.pctRankScalableAll(base, Seq(
+        ("c_acctbal", "bal_pct", true), ("c_acctbal", "bal_pct_desc", false)))
       .withColumn("bal_pct_seg",
         pctRank(col("c_acctbal"), ascending = true,
           partitionBy = Seq(col("c_mktsegment"))))
-      .select(col("c_custkey"), col("c_mktsegment"), col("c_acctbal"),
-        col("bal_pct"), col("bal_pct_desc"), col("bal_pct_seg"))
       .orderBy(col("c_custkey"))
   }
 
@@ -239,9 +233,8 @@ object RelationalQueries {
   // segment ladder (db_to_RFManalysis.py:245-268).
   private def q07(s: SparkSession, dir: String): DataFrame = {
     val base = Tables.orders(s, dir).filter(col("o_orderstatus") =!= "P")
-    val ad = Rfm.analysisDate(base, "o_orderdate")
     Rfm.dualWindow(base, Seq("o_custkey"), "o_orderdate", "o_orderkey",
-        "o_totalprice", ad, shortDays = 365)
+        "o_totalprice")
       .withColumn("segment", Rfm.merchantSegment)
       .orderBy(col("life_monetary").desc, col("o_custkey").asc)
   }

@@ -249,6 +249,28 @@ class EtlPipelineSpec extends SparkSpec {
     assert(!unknown.exists(_("clean_merchant_name") == "全聯福利中心"))
   }
 
+  test("analyze: an empty qualifying set gives an empty table with the " +
+    "usual columns") {
+    def cols(df: DataFrame) =
+      df.schema.fields.toSeq.map(f => f.name -> f.dataType)
+    val none = txns.limit(0)
+    val noCardNames = txns.withColumn("card_name", lit(""))
+    CacheScope {
+      for ((name, full, empty) <- Seq(
+          ("merchant",
+            Analyze.merchantRfm(txns, cfg.merchants, cfg.payments),
+            Analyze.merchantRfm(none, cfg.merchants, cfg.payments)),
+          ("payment", Analyze.paymentRfm(txns, cfg.payments),
+            Analyze.paymentRfm(none, cfg.payments)),
+          ("card", Analyze.cardRfm(txns), Analyze.cardRfm(none)),
+          ("card without card names", Analyze.cardRfm(txns),
+            Analyze.cardRfm(noCardNames)))) {
+        assert(empty.count() == 0, name)
+        assert(cols(empty) == cols(full), name)
+      }
+    }
+  }
+
   test("load: csv export round-trips with a UTF-8 BOM (K1)") {
     val out = Files.createTempDirectory("graft-csv").toString + "/report.csv"
     Load.writeCsv(Analyze.cardRfm(txns), out, bom = true)
@@ -278,6 +300,29 @@ class EtlPipelineSpec extends SparkSpec {
     Pipeline.run(spark, s"$d/data", s"$d/configs", out)
     // the analyses' own caches are scoped to the run, so none outlive it
     assert(CacheEntries.count(spark) == before)
+  }
+
+  test("pipeline: rfm tables keep their column names, order and types") {
+    val out = Files.createTempDirectory("graft-out-contract").toString
+    Pipeline.run(spark, s"$dir/data", s"$dir/configs", out)
+    def schema(t: String): Seq[(String, String)] =
+      spark.read.parquet(s"$out/$t").schema.fields.toSeq
+        .map(f => f.name -> f.dataType.simpleString)
+    def metrics(p: String) = Seq(s"${p}recency_days" -> "bigint",
+      s"${p}frequency" -> "bigint", s"${p}monetary" -> "double")
+    def ranks(p: String) = Seq(s"${p}r_rank" -> "double",
+      s"${p}f_rank" -> "double", s"${p}m_rank" -> "double")
+    val short = metrics("short_") ++ ranks("short_")
+    assert(schema("rfm_merchant") == Seq("clean_merchant_name" -> "string") ++
+      metrics("life_") ++ Seq("Category" -> "string",
+        "Sub_Category" -> "string") ++ ranks("life_") ++ short ++
+      Seq("segment" -> "string"))
+    assert(schema("rfm_payment") == Seq("Payment_Method" -> "string") ++
+      metrics("life_") ++ ranks("life_") ++ short ++
+      Seq("segment" -> "string"))
+    assert(schema("rfm_card") == Seq("bank_name" -> "string",
+      "card_name" -> "string") ++ metrics("") ++ Seq("f_rank" -> "double",
+      "m_rank" -> "double", "segment" -> "string", "avg_ticket" -> "bigint"))
   }
 
   // ------------------------------------------------- decimal money mode

@@ -43,30 +43,20 @@ class PandasRankSpec extends SparkSpec {
     assert(got.toSeq == Seq(0.5, 1.0, 1.0 / 3, 2.0 / 3, 1.0))
   }
 
-  test("distributed groupBy+join rank is bit-identical to the window form") {
-    val df = Seq.tabulate(200)(i => (i, (i * 13 % 37).toDouble))
-      .toDF("id", "v")
-    for (asc <- Seq(true, false)) {
-      val win = df.withColumn("p", pctRank(col("v"), ascending = asc))
-        .orderBy("id").select("p").as[Double].collect().toSeq
-      val joined = graft.functions.PandasRank
-        .pctRankJoined(df, "v", "p", ascending = asc)
-        .orderBy("id").select("p").as[Double].collect().toSeq
-      assert(win == joined, s"ascending=$asc") // exact, not approximate
-    }
-  }
-
   test("range-partitioned prefix-sum rank is bit-identical to the window form") {
     // heavy ties + enough rows that values spread across range partitions
     val df = Seq.tabulate(500)(i => (i, (i * 7 % 23).toDouble)).toDF("id", "v")
-    for (asc <- Seq(true, false); parts <- Seq(1, 3, 16)) {
+    val key = "spark.sql.shuffle.partitions"
+    val saved = spark.conf.get(key)
+    try for (asc <- Seq(true, false); parts <- Seq(1, 3, 16)) {
+      spark.conf.set(key, parts.toString)
       val win = df.withColumn("p", pctRank(col("v"), ascending = asc))
         .orderBy("id").select("p").as[Double].collect().toSeq
       val scalable = graft.functions.PandasRank
-        .pctRankScalable(df, "v", "p", ascending = asc, numPartitions = parts)
+        .pctRankScalableAll(df, Seq(("v", "p", asc)), autoThreshold = 0)
         .orderBy("id").select("p").as[Double].collect().toSeq
       assert(win == scalable, s"ascending=$asc parts=$parts")
-    }
+    } finally spark.conf.set(key, saved)
   }
 
   test("pctRankScalableAll: both adaptive strategies are bit-identical " +
@@ -98,12 +88,7 @@ class PandasRankSpec extends SparkSpec {
     def run(d: org.apache.spark.sql.DataFrame): Seq[Option[Double]] =
       d.orderBy("id").select("p").as[Option[Double]].collect().toSeq
     val win = run(df.withColumn("p", pctRank(col("v"))))
-    val joined = run(graft.functions.PandasRank.pctRankJoined(df, "v", "p"))
-    val scalable = run(graft.functions.PandasRank
-      .pctRankScalable(df, "v", "p", numPartitions = 3))
     assert(win == expected)
-    assert(joined == expected)
-    assert(scalable == expected)
     // and through the adaptive entry point, both sides of the threshold
     for (thr <- Seq(0L, Long.MaxValue)) {
       val all = graft.functions.PandasRank

@@ -32,15 +32,14 @@ class PlanHealthSpec extends SparkSpec {
 
   // Queries allowed to plan an unpartitioned (single-partition) WindowExec,
   // each because the window input is BOUNDED, never fact-scale:
-  //   q05 — pctRankJoined demo: windows over the DISTINCT-VALUE table
-  //         (documented ceiling of that variant; the scalable variant in the
-  //         same query has none);
-  //   q06/q07 — RFM ranks via pctRankScalableAll's ADAPTIVE strategy: at
-  //         test scale the counted input is under the 2^17 auto threshold,
-  //         so the plan is the windowed form over a PROVABLY bounded input
-  //         (the count gates it); above the threshold the same call plans
-  //         range-partitioned prefix-sum joins with zero global windows
-  //         (PandasRankSpec pins both strategies bit-identical);
+  //   q05/q06/q07 — global ranks via pctRankScalableAll's ADAPTIVE
+  //         strategy (q05's two customer-balance ranks, q06/q07's RFM
+  //         ranks): at test scale the counted input is under the 2^17
+  //         auto threshold, so the plan is the windowed form over a
+  //         PROVABLY bounded input (the count gates it); above the
+  //         threshold the same call plans range-partitioned prefix-sum
+  //         joins with zero global windows (PandasRankSpec pins both
+  //         strategies bit-identical);
   //   q84/q86/q100 — mixture planning: windows over the per-domain table
   //         (#domains rows, ~20);
   //   q87/q88 — vocabulary: cumulative coverage over the top-k survivors of

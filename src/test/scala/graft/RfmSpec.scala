@@ -1,6 +1,9 @@
 package graft
 
+import java.nio.file.{Files, Path, Paths}
 import java.sql.Date
+
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.functions._
 
@@ -27,17 +30,42 @@ class RfmSpec extends SparkSpec {
     val got = Rfm.aggregate(txns, Seq("cust"), "d", "txn", "amt", ad)
       .orderBy("cust")
       .select("recency_days", "frequency", "monetary")
-      .as[(Int, Long, Double)].collect().toSeq
-    assert(got == Seq((1, 2L, 150.0), (426, 1L, 999.0), (3, 2L, 20.0)))
+      .as[(Long, Long, Double)].collect().toSeq
+    assert(got == Seq((1L, 2L, 150.0), (426L, 1L, 999.0), (3L, 2L, 20.0)))
   }
 
   test("dual window fills short-window misses with 0 / 9999") {
-    val ad = Rfm.analysisDate(txns, "d")
-    val got = Rfm.dualWindow(txns, Seq("cust"), "d", "txn", "amt", ad, 365)
+    val got = Rfm.dualWindow(txns, Seq("cust"), "d", "txn", "amt")
       .filter(col("cust") === 2L)
       .select("short_recency_days", "short_frequency", "short_monetary")
-      .as[(Int, Long, Double)].head()
-    assert(got == ((9999, 0L, 0.0)))
+      .as[(Long, Long, Double)].head()
+    assert(got == ((9999L, 0L, 0.0)))
+  }
+
+  test("the RFM recipe lives in Rfm and PandasRank keeps two rank paths") {
+    def scan(root: String): Seq[Path] = {
+      val walk = Files.walk(Paths.get(root))
+      try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+      finally walk.close()
+    }
+    def text(p: Path) = new String(Files.readAllBytes(p), "UTF-8")
+    val home = Paths.get("src/main/scala/graft/operators/Rfm.scala")
+    val self = Paths.get("src/test/scala/graft/RfmSpec.scala")
+    val sources = scan("src")
+    // self-check: the scan sees the recipe where it belongs
+    assert(sources.contains(home) && sources.contains(self) &&
+      text(home).contains("PandasRank") && text(home).contains("datediff("))
+    val inEtl = for {
+      p <- sources if p.startsWith("src/main/scala/graft/etl")
+      n <- Seq("PandasRank", "datediff(", "na.fill") if text(p).contains(n)
+    } yield s"$p: $n"
+    assert(inEtl.isEmpty, s"the etl analyses take RFM from Rfm: $inEtl")
+    val removed = for {
+      p <- sources if p != self
+      n <- Seq("pctRankJoined", "pctRankScalable(", "sqlExpr")
+      if text(p).contains(n)
+    } yield s"$p: $n"
+    assert(removed.isEmpty, s"use pctRank or pctRankScalableAll: $removed")
   }
 
   test("card segment ladder: dormancy beats rank splits") {

@@ -20,10 +20,10 @@ object Tables {
 
   /** Table row count from parquet FOOTER metadata — no scan, no job.
     *
-    * For adaptive strategy picks (q67's window-vs-scalable ntile, the
-    * pctRank auto threshold) a full `count()` action is a complete pass
-    * over the fact table charged to every invocation; the footers carry
-    * the exact count for free. Driver-side O(files) footer reads,
+    * For adaptive strategy picks (q67's window-vs-scalable ntile) a full
+    * `count()` action is a complete pass over the fact table charged to
+    * every invocation; the footers carry the exact count for free.
+    * Driver-side O(files) footer reads,
     * memoized per (path, listing signature): the signature folds every
     * file's name, length, and mtime, so a dataset REGENERATED in-session
     * invalidates its entry instead of driving a strategy pick off a

@@ -20,9 +20,10 @@ import graft.operators.Rfm
   * aggregate, ranks and dual window from [[graft.operators.Rfm]].
   *
   * Plan shape per analysis (SURVEY §3 EP3): column-pruned scan → (UDF)
-  * normalize → filters → two groupBy branches off one cached upstream →
-  * window ranks over the small group table → broadcast left join → segment
-  * ladder → sort. Two shuffles total; rule tables ride in closures.
+  * normalize → filters → persisted upstream (filled by the analysis-date
+  * query, the only job run while building) → two groupBy branches →
+  * range-partitioned pct-rank operators over each group table → left
+  * join → segment ladder → sort. Rule tables ride in closures.
   */
 object Analyze {
 

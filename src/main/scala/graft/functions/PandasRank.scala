@@ -30,10 +30,11 @@ object PandasRank {
   /** Percentile rank of `value` over the whole frame (optionally per
     * partition), ascending or descending, pandas-average semantics.
     *
-    * At scale, a global rank implies a single-direction sort; Spark plans a
-    * range-partitioned sort + window, which parallelizes — but prefer ranking
-    * *after* aggregation (group cardinality, not fact cardinality), exactly
-    * as the reference ranks post-RFM aggregates.
+    * Without `partitionBy` the `count(value) OVER ()` divisor plans a
+    * single-partition window; whole-frame ranks at scale take
+    * [[pctRankScalableAll]]. Either way, prefer ranking *after* aggregation
+    * (group cardinality, not fact cardinality), exactly as the reference
+    * ranks post-RFM aggregates.
     */
   def pctRank(value: Column, ascending: Boolean = true,
               partitionBy: Seq[Column] = Seq.empty): Column = {
@@ -49,110 +50,33 @@ object PandasRank {
         .cast("double") / lit(2.0) / count(value).over(wAll).cast("double"))
   }
 
-  /** Fully distributed pandas-pct-rank LOOKUP TABLE (valueCol → outCol),
-    * one row per distinct non-null value — no single-partition window
-    * anywhere, exact to the bit vs [[pctRank]]. None ⇔ no non-null value.
+  /** Multi-column pandas pct-rank over the whole frame: `df`'s columns
+    * with one rank column per `(value, out, ascending)` spec appended in
+    * spec order — a drop-in for a chain of `withColumn(out, pctRank(...))`
+    * calls, bit-identical to it, with no single-partition window.
     *
-    * The distinct-value table is RANGE partitioned and sorted within
-    * partitions (equal values land in one partition, so tie groups never
-    * straddle boundaries), the per-partition totals round-trip the driver
-    * (one long per partition), and a per-partition prefix sum assigns
-    * global ranks. RDD mapPartitionsWithIndex is the honest tool for the
-    * prefix-sum — a genuinely imperative per-partition pass.
-    */
-  private def pctRankTable(df: org.apache.spark.sql.DataFrame,
-                           valueCol: String, outCol: String,
-                           ascending: Boolean)
-      : Option[org.apache.spark.sql.DataFrame] = {
-    val spark = df.sparkSession
-    val ordered = if (ascending) col(valueCol).asc else col(valueCol).desc
-    val parts = spark.sessionState.conf.numShufflePartitions
-    val counts = df.filter(col(valueCol).isNotNull)
-      .groupBy(valueCol).agg(count(lit(1)).as("_cnt"))
-      .repartitionByRange(parts, ordered)
-      .sortWithinPartitions(ordered)
-      .cache()
-    val partSums = counts.select(col("_cnt")).rdd
-      .mapPartitionsWithIndex { (pid, it) =>
-        Iterator((pid, it.map(_.getLong(0)).sum))
-      }.collect().sortBy(_._1).map(_._2)
-    if (partSums.isEmpty) return None
-    val offsets = partSums.scanLeft(0L)(_ + _)
-    val total = offsets.last
-    val rankedRdd = counts.rdd.mapPartitionsWithIndex { (pid, it) =>
-      var before = offsets(pid)
-      it.map { row =>
-        val cnt = row.getLong(1)
-        // same integer form and fp order as pctRank: (2*rank-1+ties)/2/n
-        val pct = (2 * before + cnt + 1).toDouble / 2.0 / total.toDouble
-        before += cnt
-        org.apache.spark.sql.Row(row.get(0), pct)
-      }
-    }
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      counts.schema.fields.head,
-      org.apache.spark.sql.types.StructField(outCol,
-        org.apache.spark.sql.types.DoubleType)))
-    // Materialize the lookup table NOW (eager localCheckpoint): the prefix
-    // sums are only valid against the exact partitioning the cached counts
-    // produced, so the table must be computed while that cache is live; the
-    // truncated lineage then lets the counts cache be released immediately
-    // instead of pinning the block manager for the session. Checkpoint
-    // blocks are ContextCleaner-freed when the table is GC'd, unlike a
-    // CacheManager entry.
-    val table = spark.createDataFrame(rankedRdd, schema)
-      .localCheckpoint(eager = true)
-    counts.unpersist(blocking = false)
-    Some(table)
-  }
-
-  /** Multi-column pandas pct-rank with an ADAPTIVE physical strategy,
-    * preserving `df`'s column order with the rank columns appended in
-    * triple order — a drop-in for a chain of `withColumn(out,
-    * pctRank(...))` calls.
-    *
-    * Strategy choice is the rank analog of Spark's broadcast-join
-    * threshold: the input is cached and counted once; at or below
-    * `autoThreshold` rows (default 2^17) every rank is a single-partition
-    * window sort — milliseconds of work, zero extra jobs, exactly what a
-    * bounded group table wants. Above it, each rank becomes a
-    * range-partitioned prefix-sum LOOKUP TABLE derived from the same
-    * cached input and joined back exactly once (deriving each table from
-    * the previous rank's join instead would make rank k's groupBy
-    * recompute ranks 1..k-1's joins — measured 7× on the RFM bench
-    * queries). A null value ranks to null and does not count toward n
-    * (pandas NaN semantics) on both sides. Both strategies are
-    * bit-identical: same integer rank arithmetic, same fp division
-    * order, both hash-proven against the same oracle SQL (q05/q06/q07;
-    * PandasRankSpec forces each side of the threshold).
+    * Each spec is one lazy [[graft.plans.PctRank.PctRankPlan]] node (range
+    * exchange + sort on the value, one streaming pass), folded over `df`'s
+    * analyzed plan: building the result runs no Spark job, and Catalyst
+    * plans the ranks together with whatever consumes them. A null value
+    * ranks to null and does not count toward n (pandas NaN semantics).
     */
   def pctRankScalableAll(df: org.apache.spark.sql.DataFrame,
-                         specs: Seq[(String, String, Boolean)],
-                         autoThreshold: Long = 1L << 17)
+                         specs: Seq[(String, String, Boolean)])
       : org.apache.spark.sql.DataFrame = {
-    val base = df.cache()
-    val n = base.count() // materializes the cache; one cheap job
-    val out =
-      if (n <= autoThreshold)
-        specs.foldLeft(base) { case (acc, (v, o, asc)) =>
-          acc.withColumn(o, pctRank(col(v), ascending = asc))
-        }
-      else
-        specs.foldLeft(base) { case (acc, (v, o, asc)) =>
-          pctRankTable(base, v, o, ascending = asc) match {
-            // left join: null values never match the (null-free) lookup
-            // table, so they keep a null rank instead of vanishing
-            case Some(table) => acc.join(table, Seq(v), "left")
-            case None => acc.withColumn(o, lit(null).cast("double"))
-          }
-        }
-    // The cache exists so the k rank-table derivations (and the count) scan
-    // the input once, not k+1 times. The tables are eagerly checkpointed in
-    // pctRankTable, so nothing derived still needs the cache; release it
-    // here rather than pinning it for the session (the final consumption
-    // recomputes the input once — the cost it would have paid uncached).
-    base.unpersist(blocking = false)
-    out.select((df.columns ++ specs.map(_._2)).map(col).toIndexedSeq: _*)
+    import org.apache.spark.sql.catalyst.expressions.AttributeReference
+    import graft.plans.PctRank.PctRankPlan
+    val spark = df.sparkSession
+    graft.plans.GraftExtensions.register(spark)
+    val resolver = spark.sessionState.conf.resolver
+    val plan = specs.foldLeft(df.queryExecution.analyzed) {
+      case (child, (v, o, asc)) =>
+        val value = child.output.find(a => resolver(a.name, v)).getOrElse(
+          throw new IllegalArgumentException(s"no column $v"))
+        PctRankPlan(child, value, asc,
+          AttributeReference(o, org.apache.spark.sql.types.DoubleType)())
+    }
+    org.apache.spark.sql.graft.PlanBridge.ofRows(spark, plan)
   }
 
   /** Grouped ntile with NO single-task per-group sort — the scale path
@@ -162,8 +86,7 @@ object PandasRank {
     * and climbing superlinearly; cluster size is irrelevant because the
     * parallelism ceiling IS the group count).
     *
-    * Same recipe as [[pctRankTable]], generalized to composite order +
-    * grouping: range-repartition on (group ++ order) — a global sort in
+    * Range-repartition on (group ++ order) — a global sort in
     * which one group spans MANY partitions — then per-(partition, group)
     * row counts round-trip the driver (≤ partitions × groups longs), a
     * prefix sum turns them into starting offsets, and a second
@@ -237,7 +160,7 @@ object PandasRank {
       df.schema.fields :+ org.apache.spark.sql.types.StructField(
         outCol, org.apache.spark.sql.types.IntegerType))
     // eager checkpoint decouples the output from `sorted`'s blocks
-    // (pctRankTable's pattern) so they can be reclaimed independently
+    // so they can be reclaimed independently
     spark.createDataFrame(outRdd, schema).localCheckpoint(eager = true)
   }
 }

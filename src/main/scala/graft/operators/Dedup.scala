@@ -138,7 +138,7 @@ object Dedup {
     // per-document window (partitioned by id — thousands of rows max per
     // doc, no skew), all on 8-byte hashes.
     //
-    // ADAPTIVE below 8192 docs (the pctRankScalableAll threshold pattern):
+    // ADAPTIVE below 8192 docs (a counted size threshold):
     // the arrays are already hash-sorted, so the hash-order prefix is a
     // free slice, and the worst CONCEIVABLE candidate set at the
     // threshold (every pair shares a prefix token) is n²/2 ≈ 3.4e7 —

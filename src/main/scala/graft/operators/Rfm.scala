@@ -27,9 +27,10 @@ import graft.functions.PandasRank
   *
   * Scale notes: the groupBy is a standard two-phase hash aggregate (partial
   * map-side combine → final), so the shuffle carries group cardinality, not
-  * fact rows. Ranks run *after* aggregation over the (small) group table —
-  * a single window sort over |groups| rows. `countDistinct` plans as
-  * expand + two-phase agg; fine here because the distinct key is co-grouped.
+  * fact rows. Ranks run *after* aggregation over the group table — one
+  * range-partitioned sort per rank over |groups| rows, no single-partition
+  * window. `countDistinct` plans as expand + two-phase agg; fine here
+  * because the distinct key is co-grouped.
   */
 object Rfm {
 
@@ -75,15 +76,12 @@ object Rfm {
   /** Pandas pct-ranks of [[metrics]]' columns, appended as
     * `{prefix}r_rank/f_rank/m_rank`; `recency = false` ranks f and m only.
     *
-    * Ranks use `PandasRank.pctRankScalableAll` — the adaptive strategy:
-    * group tables at or under the 2^17-row threshold take the windowed
-    * form (a counted, provably bounded sort — milliseconds, no extra
-    * jobs); larger ones take range-partitioned prefix-sum lookup tables
-    * with ZERO single-partition windows. The group key here is
-    * cards/merchants — hundreds of millions at 100 TB, far past the
-    * threshold — so at scale no global window sort is planned. Both
-    * strategies are bit-identical (same integer rank arithmetic and fp
-    * division order, oracle-proven via q05/q06/q07).
+    * Ranks use `PandasRank.pctRankScalableAll`: one lazy range-partitioned
+    * pct-rank operator per metric, so building the ranks runs no Spark job
+    * and no single-partition window is planned at any group count (cards
+    * or merchants — hundreds of millions at 100 TB). Bit-identical to the
+    * window form (same integer rank arithmetic and fp division order,
+    * oracle-proven via q05/q06/q07).
     */
   def ranks(metrics: DataFrame, prefix: String = "",
             recency: Boolean = true): DataFrame = {

@@ -31,6 +31,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectOptimizerRule(_ => RangeJoinRewrite)
     // whole-operator as-of join (TemporalJoin.asOfMerge)
     ext.injectPlannerStrategy(_ => AsOfJoin.AsOfJoinStrategy)
+    // whole-operator pandas pct-rank (PandasRank.pctRankScalableAll)
+    ext.injectPlannerStrategy(_ => PctRank.PctRankStrategy)
   }
 }
 
@@ -93,8 +95,8 @@ object GraftExtensions {
         "Unicode canonical composition (NFC) of a string"),
       (args: Seq[Expression]) => NfcNormalize(args(0))))
 
-  /** Register the functions + optimizer rules on a live session (test /
-    * notebook use — sessions built without `spark.sql.extensions`).
+  /** Register the functions, optimizer rule and planner strategies on a
+    * live session (sessions built without `spark.sql.extensions`).
     */
   def register(spark: SparkSession): Unit = {
     definitions.foreach { case (name, einfo, builder) =>
@@ -104,9 +106,10 @@ object GraftExtensions {
     if (!spark.experimental.extraOptimizations.contains(RangeJoinRewrite))
       spark.experimental.extraOptimizations =
         spark.experimental.extraOptimizations :+ RangeJoinRewrite
-    if (!spark.experimental.extraStrategies.contains(
-        AsOfJoin.AsOfJoinStrategy))
+    val missing = Seq(AsOfJoin.AsOfJoinStrategy, PctRank.PctRankStrategy)
+      .filterNot(spark.experimental.extraStrategies.contains)
+    if (missing.nonEmpty)
       spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ AsOfJoin.AsOfJoinStrategy
+        spark.experimental.extraStrategies ++ missing
   }
 }

@@ -465,7 +465,7 @@ object ExtendedQueries {
   // groups; a GLOBAL ntile would funnel into one partition — at scale,
   // global equi-depth boundaries come from approx_percentile instead.
   private def q67(s: SparkSession, dir: String): DataFrame = {
-    // adaptive like pctRankScalableAll: l_returnflag has THREE distinct
+    // adaptive on the input's row count: l_returnflag has THREE distinct
     // values, so the plain window caps parallelism at 3 tasks no matter
     // the cluster (the ×100 soak measured 68 s, p = 1.14, all in 3
     // single-task sorts). Above the threshold, the range-partitioned

@@ -149,8 +149,7 @@ object RelationalQueries {
 
   // ---------------------------------------------------------------- q05
   // pandas pct-rank semantics (§2.7 W2). The two GLOBAL ranks take the
-  // adaptive strategy the RFM analyses use (a counted, bounded window at
-  // or under 2^17 rows, range-partitioned prefix sums above); the
+  // range-partitioned pct-rank operator the RFM analyses use; the
   // per-segment rank keeps the window form (partitions parallelize it
   // naturally).
   private def q05(s: SparkSession, dir: String): DataFrame = {

@@ -43,43 +43,105 @@ class PandasRankSpec extends SparkSpec {
     assert(got.toSeq == Seq(0.5, 1.0, 1.0 / 3, 2.0 / 3, 1.0))
   }
 
-  test("range-partitioned prefix-sum rank is bit-identical to the window form") {
-    // heavy ties + enough rows that values spread across range partitions
-    val df = Seq.tabulate(500)(i => (i, (i * 7 % 23).toDouble)).toDF("id", "v")
-    val key = "spark.sql.shuffle.partitions"
-    val saved = spark.conf.get(key)
-    try for (asc <- Seq(true, false); parts <- Seq(1, 3, 16)) {
-      spark.conf.set(key, parts.toString)
-      val win = df.withColumn("p", pctRank(col("v"), ascending = asc))
-        .orderBy("id").select("p").as[Double].collect().toSeq
-      val scalable = graft.functions.PandasRank
-        .pctRankScalableAll(df, Seq(("v", "p", asc)), autoThreshold = 0)
-        .orderBy("id").select("p").as[Double].collect().toSeq
-      assert(win == scalable, s"ascending=$asc parts=$parts")
-    } finally spark.conf.set(key, saved)
+  private def withConf[T](kv: (String, String)*)(body: => T): T = {
+    val saved = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kv.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
   }
 
-  test("pctRankScalableAll: both adaptive strategies are bit-identical " +
-    "and preserve column order") {
-    // multi-column ranks with ties, mixed directions — forced down each
-    // side of the auto threshold
+  /** Runs `body` and returns its result with the Spark jobs it started and
+    * the bytes its tasks spilled. The listener bus delivers events in
+    * order, so a marker job on each side bounds the window exactly.
+    */
+  private def observe[T](body: => T): (T, Int, Long) = {
+    import java.util.concurrent.ConcurrentLinkedQueue
+    import org.apache.spark.scheduler._
+    val sc = spark.sparkContext
+    val jobs = new ConcurrentLinkedQueue[(Int, String)]()
+    val spills = new ConcurrentLinkedQueue[(Int, Long)]()
+    val stageJob = new java.util.concurrent.ConcurrentHashMap[Int, Int]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        e.stageIds.foreach(stageJob.put(_, e.jobId))
+        jobs.add((e.jobId, Option(e.properties)
+          .map(_.getProperty("spark.job.description")).orNull))
+      }
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        Option(e.taskMetrics).foreach(m =>
+          spills.add((stageJob.getOrDefault(e.stageId, -1),
+            m.memoryBytesSpilled)))
+    }
+    def marker(tag: String): Int = {
+      sc.setJobDescription(tag)
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setJobDescription(null)
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      var id: Option[Int] = None
+      while (id.isEmpty && System.nanoTime() < deadline) {
+        id = jobs.toArray(Array.empty[(Int, String)])
+          .collectFirst { case (j, `tag`) => j }
+        if (id.isEmpty) Thread.sleep(10)
+      }
+      id.getOrElse(fail(s"marker job $tag never reached the listener"))
+    }
+    sc.addSparkListener(listener)
+    try {
+      val from = marker("observe-start")
+      val result = body
+      val to = marker("observe-end")
+      val inside = (j: Int) => j > from && j < to
+      val ids = jobs.toArray(Array.empty[(Int, String)]).map(_._1)
+      val spilled = spills.toArray(Array.empty[(Int, Long)])
+        .collect { case (j, b) if inside(j) => b }.sum
+      (result, ids.count(inside), spilled)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  private val adaptive = "spark.sql.adaptive.coalescePartitions.enabled"
+
+  test("pctRankScalableAll is bit-identical to the window pctRank: both " +
+    "directions, ties and nulls, one or many range partitions") {
+    // heavy ties + enough rows that values spread across range partitions
+    val df = Seq.tabulate(500)(i =>
+      (i, if (i % 41 == 0) None else Some((i * 7 % 23).toDouble)))
+      .toDF("id", "v")
+    // coalescing off keeps 3/16 shuffle partitions apart: the per-partition
+    // count job and offsets run, not only the single-partition buffer
+    for (asc <- Seq(true, false); parts <- Seq(1, 3, 16);
+         coalesce <- Seq(true, false))
+      withConf("spark.sql.shuffle.partitions" -> parts.toString,
+          adaptive -> coalesce.toString) {
+        val win = df.withColumn("p", pctRank(col("v"), ascending = asc))
+          .orderBy("id").select("p").as[Option[Double]].collect().toSeq
+        val op = graft.functions.PandasRank
+          .pctRankScalableAll(df, Seq(("v", "p", asc)))
+          .orderBy("id").select("p").as[Option[Double]].collect().toSeq
+        assert(win == op, s"ascending=$asc parts=$parts coalesce=$coalesce")
+      }
+  }
+
+  test("pctRankScalableAll: multi-column ranks equal the withColumn chain " +
+    "and keep column order") {
     val df = Seq.tabulate(300)(i =>
       (i, (i * 7 % 23).toDouble, (i * 13 % 17).toLong))
       .toDF("id", "a", "b")
     val specs = Seq(("a", "a_rank", true), ("b", "b_rank", false))
-    val windowed = graft.functions.PandasRank
-      .pctRankScalableAll(df, specs, autoThreshold = Long.MaxValue)
-    val scalable = graft.functions.PandasRank
-      .pctRankScalableAll(df, specs, autoThreshold = 0L)
-    assert(windowed.columns.toSeq == Seq("id", "a", "b", "a_rank", "b_rank"))
-    assert(scalable.columns.toSeq == windowed.columns.toSeq)
-    val w = windowed.orderBy("id").collect().map(_.toSeq).toSeq
-    val s = scalable.orderBy("id").collect().map(_.toSeq).toSeq
+    val chained = df
+      .withColumn("a_rank", pctRank(col("a")))
+      .withColumn("b_rank", pctRank(col("b"), ascending = false))
+    val ranked = graft.functions.PandasRank.pctRankScalableAll(df, specs)
+    assert(ranked.columns.toSeq == Seq("id", "a", "b", "a_rank", "b_rank"))
+    val w = chained.orderBy("id").collect().map(_.toSeq).toSeq
+    val s = ranked.orderBy("id").collect().map(_.toSeq).toSeq
     assert(w == s) // exact, not approximate
   }
 
   test("null values rank to null, are excluded from n, and never drop rows " +
-    "— identically across all three strategies") {
+    "— identically in both rank forms") {
     // pandas: NaN → rank NaN, n counts non-NaN only. 10,20,20,null,30 →
     // non-null avg ranks 1, 2.5, 2.5, 4 over n=4.
     val df = Seq((1, Some(10.0)), (2, Some(20.0)), (3, Some(20.0)),
@@ -87,15 +149,74 @@ class PandasRankSpec extends SparkSpec {
     val expected = Seq(Some(0.25), Some(0.625), Some(0.625), None, Some(1.0))
     def run(d: org.apache.spark.sql.DataFrame): Seq[Option[Double]] =
       d.orderBy("id").select("p").as[Option[Double]].collect().toSeq
-    val win = run(df.withColumn("p", pctRank(col("v"))))
-    assert(win == expected)
-    // and through the adaptive entry point, both sides of the threshold
-    for (thr <- Seq(0L, Long.MaxValue)) {
-      val all = graft.functions.PandasRank
-        .pctRankScalableAll(df, Seq(("v", "p", true)), autoThreshold = thr)
-      assert(run(all) == expected, s"autoThreshold=$thr")
-      assert(all.count() == 5, s"autoThreshold=$thr must not drop null rows")
+    assert(run(df.withColumn("p", pctRank(col("v")))) == expected)
+    val all = graft.functions.PandasRank
+      .pctRankScalableAll(df, Seq(("v", "p", true)))
+    assert(run(all) == expected)
+    assert(all.count() == 5, "null rows must not be dropped")
+  }
+
+  test("pctRankScalableAll: an empty frame and an all-null column") {
+    val specs = Seq(("v", "p", true), ("v", "q", false))
+    val empty = Seq.empty[(Int, Option[Double])].toDF("id", "v")
+    val none = graft.functions.PandasRank.pctRankScalableAll(empty, specs)
+    assert(none.columns.toSeq == Seq("id", "v", "p", "q"))
+    assert(none.collect().isEmpty)
+    val nulls = Seq.tabulate(7)(i => (i, Option.empty[Double])).toDF("id", "v")
+    for (coalesce <- Seq(true, false)) withConf(adaptive -> coalesce.toString) {
+      val got = graft.functions.PandasRank.pctRankScalableAll(nulls, specs)
+        .select("p", "q").collect()
+      assert(got.length == 7 && got.forall(r => r.isNullAt(0) && r.isNullAt(1)),
+        s"coalesce=$coalesce")
     }
+  }
+
+  test("a tie group past the window buffer thresholds spills and still " +
+    "ranks bit-identically") {
+    // 600 rows tie on 5.0 — far past an in-memory threshold of 2 rows and a
+    // spill threshold of 4 — between small groups on either side
+    val df = (Seq.tabulate(600)(i => (i, 5.0)) ++
+        Seq.tabulate(40)(i => (600 + i, (i % 10).toDouble)))
+      .toDF("id", "v").repartition(3)
+    for (coalesce <- Seq(true, false))
+      withConf("spark.sql.windowExec.buffer.in.memory.threshold" -> "2",
+          "spark.sql.windowExec.buffer.spill.threshold" -> "4",
+          adaptive -> coalesce.toString) {
+        val win = df.withColumn("p", pctRank(col("v"), ascending = false))
+          .orderBy("id").select("p").as[Double].collect().toSeq
+        val (op, _, spilled) = observe(graft.functions.PandasRank
+          .pctRankScalableAll(df, Seq(("v", "p", false)))
+          .orderBy("id").select("p").as[Double].collect().toSeq)
+        assert(win == op, s"coalesce=$coalesce")
+        assert(spilled > 0, s"coalesce=$coalesce: the tie group never spilled")
+      }
+  }
+
+  test("pctRankScalableAll leaves the caller's cached frame cached") {
+    val df = spark.range(200).selectExpr("id", "id % 7 AS v")
+    df.cache()
+    try {
+      df.count()
+      graft.functions.PandasRank
+        .pctRankScalableAll(df, Seq(("v", "p", true))).collect()
+      assert(df.storageLevel.useMemory, "the caller's cache entry was dropped")
+    } finally df.unpersist(blocking = true)
+  }
+
+  test("building the ranks runs no Spark job; building Rfm.dualWindow runs " +
+    "only its analysis-date query") {
+    val txns = spark.range(400).selectExpr("id % 37 AS cust",
+      "date_add(DATE'2023-01-01', CAST(id * 3 % 700 AS INT)) AS d",
+      "CAST(id AS STRING) AS txn", "CAST(id % 13 AS DOUBLE) AS amt")
+    val (_, rankJobs, _) = observe(graft.functions.PandasRank
+      .pctRankScalableAll(txns, Seq(("amt", "p", true), ("cust", "q", false))))
+    assert(rankJobs == 0)
+    val (_, dateJobs, _) =
+      observe(graft.operators.Rfm.analysisDate(txns, "d"))
+    val (_, dualJobs, _) = observe(
+      graft.operators.Rfm.dualWindow(txns, Seq("cust"), "d", "txn", "amt"))
+    assert(dateJobs > 0 && dualJobs == dateJobs,
+      s"analysis date $dateJobs jobs, dual window $dualJobs")
   }
 
   test("results lie in (0, 1] and are monotone in the input") {

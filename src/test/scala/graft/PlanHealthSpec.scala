@@ -32,14 +32,6 @@ class PlanHealthSpec extends SparkSpec {
 
   // Queries allowed to plan an unpartitioned (single-partition) WindowExec,
   // each because the window input is BOUNDED, never fact-scale:
-  //   q05/q06/q07 — global ranks via pctRankScalableAll's ADAPTIVE
-  //         strategy (q05's two customer-balance ranks, q06/q07's RFM
-  //         ranks): at test scale the counted input is under the 2^17
-  //         auto threshold, so the plan is the windowed form over a
-  //         PROVABLY bounded input (the count gates it); above the
-  //         threshold the same call plans range-partitioned prefix-sum
-  //         joins with zero global windows (PandasRankSpec pins both
-  //         strategies bit-identical);
   //   q84/q86/q100 — mixture planning: windows over the per-domain table
   //         (#domains rows, ~20);
   //   q87/q88 — vocabulary: cumulative coverage over the top-k survivors of
@@ -47,9 +39,9 @@ class PlanHealthSpec extends SparkSpec {
   //   q126 — hybrid retrieval: each ranker's rank window runs over the
   //         top-50 survivors of a TakeOrderedAndProject (50 rows by
   //         construction — the q87 shape, twice).
-  // Everything else must be window-clean.
-  private val windowExempt = Set("q05_pct_rank", "q06_rfm_card_style",
-    "q07_rfm_dual_window", "q84_mixture_plan", "q86_mixture_sample",
+  // Whole-frame pandas pct-ranks (q05–q07) take the range-partitioned
+  // PctRankExec, so they are checked like everything else.
+  private val windowExempt = Set("q84_mixture_plan", "q86_mixture_sample",
     "q87_vocabulary", "q88_curate_corpus", "q100_mixture_temperature",
     "q126_rrf_hybrid")
 

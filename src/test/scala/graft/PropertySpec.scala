@@ -50,19 +50,20 @@ class PropertySpec extends SparkSpec {
     val rows = sample(Gen.chooseNum(0, 30), 300).zipWithIndex
       .map { case (v, i) => (i, v.toDouble) }
     val df = rows.toDF("id", "v")
-    // both sides of the adaptive threshold: prefix sums, then the window
-    for (thr <- Seq(0L, Long.MaxValue)) {
-      val ranks = PandasRank
-        .pctRankScalableAll(df, Seq(("v", "p", true)), autoThreshold = thr)
-        .select("v", "p").as[(Double, Double)].collect()
+    // both rank forms: the pct-rank operator, then the window
+    val ranked = Seq(
+      PandasRank.pctRankScalableAll(df, Seq(("v", "p", true))),
+      df.withColumn("p", PandasRank.pctRank(col("v"))))
+    for ((frame, form) <- ranked.zip(Seq("operator", "window"))) {
+      val ranks = frame.select("v", "p").as[(Double, Double)].collect()
       val n = ranks.length
       assert(ranks.forall { case (_, p) => p > 0.0 && p <= 1.0 })
       // pandas invariant: average of average-ranks is exactly (n+1)/2
       val meanRank = ranks.map(_._2 * n).sum / n
-      assert(math.abs(meanRank - (n + 1) / 2.0) < 1e-6, s"threshold=$thr")
+      assert(math.abs(meanRank - (n + 1) / 2.0) < 1e-6, form)
       // tied values share one rank
       assert(ranks.groupBy(_._1).values
-        .forall(g => g.map(_._2).toSet.size == 1), s"threshold=$thr")
+        .forall(g => g.map(_._2).toSet.size == 1), form)
     }
   }
 

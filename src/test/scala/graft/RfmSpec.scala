@@ -62,7 +62,8 @@ class RfmSpec extends SparkSpec {
     assert(inEtl.isEmpty, s"the etl analyses take RFM from Rfm: $inEtl")
     val removed = for {
       p <- sources if p != self
-      n <- Seq("pctRankJoined", "pctRankScalable(", "sqlExpr")
+      n <- Seq("pctRankJoined", "pctRankScalable(", "sqlExpr",
+        "pctRankTable", "autoThreshold")
       if text(p).contains(n)
     } yield s"$p: $n"
     assert(removed.isEmpty, s"use pctRank or pctRankScalableAll: $removed")

@@ -60,6 +60,7 @@ object PandasRank {
     * analyzed plan: building the result runs no Spark job, and Catalyst
     * plans the ranks together with whatever consumes them. A null value
     * ranks to null and does not count toward n (pandas NaN semantics).
+    * Each `value` must name exactly one column and each `out` none.
     */
   def pctRankScalableAll(df: org.apache.spark.sql.DataFrame,
                          specs: Seq[(String, String, Boolean)])
@@ -71,8 +72,13 @@ object PandasRank {
     val resolver = spark.sessionState.conf.resolver
     val plan = specs.foldLeft(df.queryExecution.analyzed) {
       case (child, (v, o, asc)) =>
-        val value = child.output.find(a => resolver(a.name, v)).getOrElse(
-          throw new IllegalArgumentException(s"no column $v"))
+        val value = child.output.filter(a => resolver(a.name, v)) match {
+          case Seq(a) => a
+          case found => throw new IllegalArgumentException(
+            s"rank input $v matches ${found.size} columns, not one")
+        }
+        require(!child.output.exists(a => resolver(a.name, o)),
+          s"rank output $o already names a column")
         PctRankPlan(child, value, asc,
           AttributeReference(o, org.apache.spark.sql.types.DoubleType)())
     }

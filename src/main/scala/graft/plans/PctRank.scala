@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, Attribut
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
 import org.apache.spark.sql.catalyst.plans.physical.{Distribution, OrderedDistribution, Partitioning}
 import org.apache.spark.sql.catalyst.util.TypeUtils
-import org.apache.spark.sql.execution.{ExternalAppendOnlyUnsafeRowArray, SparkPlan, SparkStrategy, UnaryExecNode}
+import org.apache.spark.sql.execution.{ExternalAppendOnlyUnsafeRowArray, SortExec, SparkPlan, SparkStrategy, UnaryExecNode}
 
 /** Whole-operator pandas pct-rank (`Series.rank(pct=True)`, average ties,
   * divisor n = non-null count): custom `LogicalPlan` + `SparkStrategy` +
@@ -14,21 +14,20 @@ import org.apache.spark.sql.execution.{ExternalAppendOnlyUnsafeRowArray, SparkPl
   *
   * The window form ([[graft.functions.PandasRank.pctRank]]) needs a global
   * `count(value) OVER ()`, which plans a single-partition WindowExec. This
-  * operator instead requires its input range-partitioned and sorted on the
-  * value, so tie groups never straddle partitions and every partition is
-  * ranked in parallel. Partition offsets need each partition's non-null
-  * count; that one small job runs when the plan executes (where Spark's
-  * own `RangePartitioner` samples), never while a DataFrame is built. A
-  * single input partition (the usual case once AQE coalesces a small range
-  * shuffle) needs no count job: the partition is buffered and counted.
+  * operator instead requires its input range-partitioned on the value, so
+  * tie groups never straddle partitions and every partition is ranked in
+  * parallel. Partition offsets need each partition's non-null count; that
+  * one small job reads the exchange output before anything is sorted, and
+  * runs when the plan executes (where Spark's own `RangePartitioner`
+  * samples), never while a DataFrame is built. The ranking pass then sorts
+  * each partition with `SortExec`'s sorter and ranks it in one stream.
   *
   * Per row: `(2*before + ties + 1) / 2 / n` with `before` the non-null rows
   * ahead of the tie group — the window form's `(2*rank - 1 + ties)/2/n` in
   * the same integer arithmetic and fp division order, so results are
   * bit-identical. Null values sort last, rank to null and do not count
-  * toward n. Tie groups (and a buffered single partition) live in
-  * `ExternalAppendOnlyUnsafeRowArray` under the
-  * `spark.sql.windowExec.buffer.*` thresholds, so they spill the way
+  * toward n. Tie groups live in `ExternalAppendOnlyUnsafeRowArray` under
+  * the `spark.sql.windowExec.buffer.*` thresholds, so they spill the way
   * WindowExec does.
   */
 object PctRank {
@@ -66,56 +65,44 @@ object PctRank {
     private def order: Seq[SortOrder] = SortOrder(value,
       if (ascending) Ascending else Descending, NullsLast, Seq.empty) :: Nil
 
-    // EnsureRequirements plans a range exchange + sort on the value (or
-    // only the sort when the input already satisfies the distribution)
+    // EnsureRequirements plans a range exchange on the value (or none when
+    // the input already satisfies it); the sort happens in doExecute
     override def requiredChildDistribution: Seq[Distribution] =
       OrderedDistribution(order) :: Nil
-    override def requiredChildOrdering: Seq[Seq[SortOrder]] = order :: Nil
 
-    // rows pass through in input order with the rank appended
     override def outputPartitioning: Partitioning = child.outputPartitioning
-    override def outputOrdering: Seq[SortOrder] = child.outputOrdering
+    override def outputOrdering: Seq[SortOrder] = order
 
     override protected def withNewChildInternal(
         newChild: SparkPlan): PctRankExec = copy(child = newChild)
 
     override protected def doExecute(): RDD[InternalRow] = {
-      val sorted = child.execute()
+      val rows = child.execute()
       val idx = child.output.indexWhere(_.exprId == value.exprId)
+      // both jobs read this one RDD, so the counts describe exactly the
+      // partitions the second pass ranks
+      val counts = rows.mapPartitions { it =>
+        var n = 0L
+        it.foreach(r => if (!r.isNullAt(idx)) n += 1)
+        Iterator.single(n)
+      }.collect()
+      val offsets = counts.scanLeft(0L)(_ + _)
+      val n = offsets.last
+      val sort = SortExec(order, global = false, child)
       val ranker = new Ranker(idx, value.dataType, output,
         conf.windowExecBufferInMemoryThreshold,
         conf.windowExecBufferSpillThreshold,
         conf.windowExecBufferSpillSizeThreshold)
-      if (sorted.getNumPartitions == 1)
-        sorted.mapPartitions { rows =>
-          val all = ranker.buffer()
-          var n = 0L
-          rows.foreach { r =>
-            if (!r.isNullAt(idx)) n += 1
-            all.add(r.asInstanceOf[UnsafeRow])
-          }
-          ranker.rank(all.generateIterator(), 0L, n)
-        }
-      else {
-        // both jobs read the one shuffle output behind `sorted`, so the
-        // counts describe exactly the partitions the second pass ranks
-        val counts = sorted.mapPartitions { rows =>
-          var n = 0L
-          rows.foreach(r => if (!r.isNullAt(idx)) n += 1)
-          Iterator.single(n)
-        }.collect()
-        val offsets = counts.scanLeft(0L)(_ + _)
-        val n = offsets.last
-        sorted.mapPartitionsWithIndex { (pid, rows) =>
-          ranker.rank(rows.asInstanceOf[Iterator[UnsafeRow]], offsets(pid), n)
-        }
+      rows.mapPartitionsWithIndex { (pid, it) =>
+        val sorted = sort.createSorter()
+          .sort(it.asInstanceOf[Iterator[UnsafeRow]])
+        ranker.rank(sorted.asInstanceOf[Iterator[UnsafeRow]], offsets(pid), n)
       }
     }
   }
 
   /** The per-partition pass, shipped to tasks: input rows sorted on the
-    * value at `idx`, nulls last, as the `UnsafeRow`s a SortExec emits (the
-    * input WindowExec assumes too).
+    * value at `idx`, nulls last, as the `UnsafeRow`s a sorter emits.
     */
   private final class Ranker(idx: Int,
                              valueType: org.apache.spark.sql.types.DataType,
@@ -123,20 +110,16 @@ object PctRank {
                              spillRows: Int, spillBytes: Long)
       extends Serializable {
 
-    /** A row buffer with WindowExec's thresholds (its argument order:
-      * rows in memory, bytes, rows to spill, bytes).
-      */
-    def buffer(): ExternalAppendOnlyUnsafeRowArray =
-      new ExternalAppendOnlyUnsafeRowArray(
-        inMemoryRows, spillBytes, spillRows, spillBytes)
-
     /** Rank `rows` given `before` non-null rows in earlier partitions and
       * `n` non-null rows in all, buffering one tie group at a time.
       */
     def rank(rows: Iterator[UnsafeRow], before: Long,
              n: Long): Iterator[InternalRow] =
       new Iterator[InternalRow] {
-        private val ties = buffer()
+        // WindowExec's thresholds, in its argument order: rows in memory,
+        // bytes, rows to spill, bytes
+        private val ties = new ExternalAppendOnlyUnsafeRowArray(
+          inMemoryRows, spillBytes, spillRows, spillBytes)
         private val ord = TypeUtils.getInterpretedOrdering(valueType)
         private val proj = UnsafeProjection.create(output, output)
         private val joined = new JoinedRow

@@ -109,8 +109,8 @@ class PandasRankSpec extends SparkSpec {
     val df = Seq.tabulate(500)(i =>
       (i, if (i % 41 == 0) None else Some((i * 7 % 23).toDouble)))
       .toDF("id", "v")
-    // coalescing off keeps 3/16 shuffle partitions apart: the per-partition
-    // count job and offsets run, not only the single-partition buffer
+    // coalescing off keeps 3/16 shuffle partitions apart, so tie groups
+    // land in several partitions and their offsets matter
     for (asc <- Seq(true, false); parts <- Seq(1, 3, 16);
          coalesce <- Seq(true, false))
       withConf("spark.sql.shuffle.partitions" -> parts.toString,
@@ -154,6 +154,21 @@ class PandasRankSpec extends SparkSpec {
       .pctRankScalableAll(df, Seq(("v", "p", true)))
     assert(run(all) == expected)
     assert(all.count() == 5, "null rows must not be dropped")
+  }
+
+  test("pctRankScalableAll rejects an ambiguous input and an output name " +
+    "already in use") {
+    import graft.functions.PandasRank.pctRankScalableAll
+    val df = Seq((1, 2.0), (2, 3.0)).toDF("id", "v")
+    val twoVs = df.join(Seq((1, 5.0), (2, 4.0)).toDF("id", "v"), "id")
+    intercept[IllegalArgumentException](
+      pctRankScalableAll(twoVs, Seq(("v", "p", true))))
+    intercept[IllegalArgumentException](
+      pctRankScalableAll(df, Seq(("missing", "p", true))))
+    intercept[IllegalArgumentException](
+      pctRankScalableAll(df, Seq(("v", "id", true))))
+    intercept[IllegalArgumentException](
+      pctRankScalableAll(df, Seq(("v", "p", true), ("id", "p", false))))
   }
 
   test("pctRankScalableAll: an empty frame and an all-null column") {

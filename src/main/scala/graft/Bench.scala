@@ -1,16 +1,25 @@
 package graft
-import java.nio.file.{Files, Paths, StandardOpenOption}
+import java.nio.file.{Files, Path, Paths, StandardOpenOption}
 import java.nio.charset.StandardCharsets
+import java.util.concurrent.ConcurrentLinkedQueue
 
-/** Headline benchmark. Prints ONE JSON line (total + per-query seconds) and
-  * also writes the same line to BENCH_SELF.json so a truncated log capture
-  * can never lose the headline numbers.
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.executor.TaskMetrics
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graft.PlanBridge
+
+/** The query runner. Prints ONE JSON line (total, per-query seconds and
+  * per-query counters) and also writes the same line to BENCH_SELF.json so a
+  * truncated log capture can never lose the headline numbers; appends it to
+  * BENCH_HISTORY.jsonl and writes each query's per-stage profile to
+  * PROFILE.json, both next to BENCH_SELF.json.
   *
-  * Noise discipline: a preflight gate waits out co-tenant load BEFORE
-  * timing, and a self-assessing multi-sweep loop (see `runSweep`'s call
-  * site) re-times the whole surface when the completed sweep looks
-  * noise-contaminated, publishing per-query minima across all draws with
-  * `sweeps`/`draws_considered`/`sweep_clean` provenance in the artifact.
+  * Per query: one unbilled warm run with a listener attached, whose counters
+  * (jobs, build jobs, stages, tasks, executor time, bytes) are the
+  * deterministic regression signal; then best-of-`SPARK_GRAFT_REPS` timed
+  * runs with no listener on the bus, whose minimum is the wall-clock outcome.
   *
   * Timing discipline: Spark's whole-stage-codegen class cache is a static
   * 100-entry LRU (`spark.sql.codegen.cache.maxEntries`). 74 queries generate
@@ -24,95 +33,138 @@ import java.nio.charset.StandardCharsets
   * compiled code carries over — compilation is a one-time cost per plan
   * shape on a real cluster, not per-run work, so billing it would measure
   * the JVM, not the engine.
+  *
+  * Environment: `SPARK_GRAFT_SF_DIR` (tables, default sf0.1),
+  * `SPARK_GRAFT_REPS` (timed runs per query, default 2), `SPARK_GRAFT_ONLY`
+  * (comma-separated name substrings; `SPARK_GRAFT_ONLY=q07` profiles one
+  * query) and `SPARK_GRAFT_BENCH_OUT` (the line's file).
   */
 object Bench {
-  /** Best-known prior seconds per query, mined from every BENCH_*.json in the
-    * cwd (driver round artifacts wrap the JSON line in a "tail" string with
-    * escaped quotes; BENCH_SELF.json is the raw line — the regex accepts
-    * both). Per-query MIN across rounds: any single artifact may itself be
-    * noise-corrupted (r4's q54–q68 block), the minimum never is.
+
+  /** One completed stage of a profiled run: a row of PROFILE.json. */
+  final case class Stage(id: Int, name: String, tasks: Int, wallMs: Long,
+                         runMs: Long, cpuMs: Long, inputBytes: Long,
+                         shuffleReadBytes: Long, shuffleWriteBytes: Long,
+                         shuffleRecords: Long, spillBytes: Long)
+
+  /** Counters of one profiled run. `buildJobs` are the jobs submitted
+    * before the query function returned its DataFrame.
+    *
+    * Shuffle records, not bytes, are the line's shuffle counter: a range
+    * exchange seeds its bound sample with the RDD id, which depends on
+    * the session's history, so the same plan writes the same records but
+    * a few more or fewer compressed bytes (q06 at sf0.01: 306,439 and
+    * 306,423 bytes in two invocations). PROFILE.json keeps the bytes.
     */
-  private def priorTimes(sfDir: String): Map[String, Double] = {
-    import scala.jdk.CollectionConverters._
-    val pat = """\\?"(q[0-9]{2}[A-Za-z0-9_]*)\\?":([0-9]+(?:\.[0-9]+)?(?:[eE][+-]?[0-9]+)?)""".r
-    // Only trust artifacts measured at the SAME scale factor: the driver
-    // stamps `"sf":0.1` (number), our own line stamps the dir string; both
-    // contain the `sf<digits>` token with a non-digit terminator.
-    val sfTok = sfDir.split('/').reverse.find(_.startsWith("sf")).getOrElse("sf?")
-      .stripPrefix("sf")
-    val sfPat = ("""(?:sf|"sf":\s*)""" + java.util.regex.Pattern.quote(sfTok) + """(?:[^0-9]|$)""").r
-    val files =
-      try Files.list(Paths.get(".")).iterator().asScala
-        .filter(p => p.getFileName.toString.matches("BENCH_.*\\.json")).toList
-      catch { case _: Throwable => Nil }
-    files.flatMap { p =>
-      try {
-        val txt = new String(Files.readAllBytes(p), StandardCharsets.UTF_8)
-        if (sfPat.findFirstIn(txt).isEmpty) Nil
-        else pat.findAllMatchIn(txt).map(m => m.group(1) -> m.group(2).toDouble).toList
-      } catch { case _: Throwable => Nil }
-    }.groupBy(_._1).map { case (k, vs) => k -> vs.map(_._2).min }
+  final case class Profile(jobs: Int, buildJobs: Int, stages: Seq[Stage]) {
+    def tasks: Int = stages.map(_.tasks).sum
+    def shuffleRecords: Long = stages.map(_.shuffleRecords).sum
   }
+
+  /** The listener of one profiled run: job submit times, completed stages. */
+  private[graft] final class Recorder extends SparkListener {
+    val jobTimes = new ConcurrentLinkedQueue[Long]()
+    val stages = new ConcurrentLinkedQueue[Stage]()
+    override def onJobStart(e: SparkListenerJobStart): Unit =
+      jobTimes.add(e.time)
+    override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
+      val si = e.stageInfo
+      val wall = (for {
+        a <- si.submissionTime; b <- si.completionTime
+      } yield b - a).getOrElse(-1L)
+      def metric(f: TaskMetrics => Long) = Option(si.taskMetrics).map(f).getOrElse(0L)
+      stages.add(Stage(si.stageId, si.name.takeWhile(_ != '\n'), si.numTasks,
+        wall, metric(_.executorRunTime), metric(_.executorCpuTime) / 1000000L,
+        metric(_.inputMetrics.bytesRead),
+        metric(_.shuffleReadMetrics.totalBytesRead),
+        metric(_.shuffleWriteMetrics.bytesWritten),
+        metric(_.shuffleWriteMetrics.recordsWritten),
+        metric(_.diskBytesSpilled)))
+    }
+  }
+
+  /** Runs `fn` to a count once with a [[Recorder]] on the bus, and takes
+    * it off the bus before returning, so no other run is observed. The bus
+    * is drained on both sides: a listener also receives events that were
+    * posted before it was added but not yet delivered (a previous run's
+    * last stage, seen as a stray extra stage in 3 of 162 queries).
+    */
+  private[graft] def profile(spark: SparkSession, sfDir: String,
+                             fn: (SparkSession, String) => DataFrame): Profile = {
+    val rec = new Recorder
+    PlanBridge.drainListenerBus(spark)
+    spark.sparkContext.addSparkListener(rec)
+    val buildEnd =
+      try {
+        val df = fn(spark, sfDir)
+        val t = System.currentTimeMillis()
+        df.count()
+        t
+      } finally {
+        PlanBridge.drainListenerBus(spark)
+        spark.sparkContext.removeSparkListener(rec)
+      }
+    // a build job completes before `fn` returns, so it was submitted at
+    // least a millisecond before `buildEnd`; the count's jobs only after
+    val jobTimes = rec.jobTimes.asScala.toSeq
+    Profile(jobTimes.size, jobTimes.count(_ < buildEnd),
+      rec.stages.asScala.toSeq.sortBy(_.id))
+  }
+
+  /** Seconds of one run of `fn` to a count. */
+  private[graft] def timed(spark: SparkSession, sfDir: String,
+                           fn: (SparkSession, String) => DataFrame): Double = {
+    val t0 = System.nanoTime()
+    fn(spark, sfDir).count()
+    (System.nanoTime() - t0) / 1e9
+  }
+
+  /** The family of each query: the object that registers it. */
+  private[graft] def familyOf(name: String): String =
+    SparkEntry.families.collectFirst { case (f, qs) if qs.contains(name) => f }
+      .getOrElse(throw new NoSuchElementException(s"no such query: $name"))
+
+  /** `s` as a JSON string literal: quote, backslash and every control
+    * character escaped, so a tab or CR in a message or in oracle SQL
+    * cannot break a reader's `json.load`.
+    */
+  private[graft] def jsonString(s: String): String = "\"" + s.flatMap {
+    case '"' => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
 
   private def proc1(path: String): String =
     try new String(Files.readAllBytes(Paths.get(path)), StandardCharsets.UTF_8).trim
     catch { case _: Throwable => "" }
 
-  /** Pre-flight co-tenant gate: the r5 round artifact started at 1-min
-    * load 3.78 and self-flagged 8 suspects — numbers the retry machinery
-    * could only LABEL as noise, not avoid. This waits (bounded) for the
-    * box to go quiet BEFORE any timing, so driver artifacts are clean by
-    * construction. Returns the JSON fragment recorded as "preflight".
-    */
-  private def preflightGate(): String = {
-    val threshold = sys.env.getOrElse("SPARK_GRAFT_PREFLIGHT_LOAD", "2.0").toDouble
-    val maxWaitSec = sys.env.getOrElse("SPARK_GRAFT_PREFLIGHT_WAIT", "300").toInt
-    def load1: Double =
-      proc1("/proc/loadavg").split("\\s+").headOption
-        .flatMap(s => scala.util.Try(s.toDouble).toOption).getOrElse(0.0)
-    val startLoad = load1
-    var waited = 0
-    if (threshold > 0) {
-      while (load1 > threshold && waited < maxWaitSec) {
-        if (waited == 0) System.err.println(
-          f"[bench] preflight: 1-min load $startLoad%.2f > $threshold%.1f — waiting (max ${maxWaitSec}s)")
-        Thread.sleep(5000)
-        waited += 5
-      }
-    }
-    val endLoad = load1
-    val clean = threshold <= 0 || endLoad <= threshold
-    if (!clean) System.err.println(
-      f"[bench] preflight: still loaded ($endLoad%.2f) after ${waited}s — proceeding, numbers may be noisy")
-    s"""{"threshold":$threshold,"load_initial":$startLoad,"load_after_wait":$endLoad,"waited_sec":$waited,"clean":$clean}"""
-  }
+  private def obj(fields: Seq[(String, Any)]): String =
+    fields.map { case (k, v) => s"${jsonString(k)}:$v" }.mkString("{", ",", "}")
 
-  /** Coarse query-family partition for the per-family rollup (r14: with
-    * ~140 heterogeneous queries the scalar total is dominated by
-    * streaming-trigger constants and co-tenant noise — round-over-round
-    * deltas are only attributable per family). Streaming is name-keyed;
-    * the rest bucket by query number.
-    */
-  private[graft] def familyOf(name: String): String = {
-    if (name.contains("streaming")) return "streaming"
-    val num = name.drop(1).takeWhile(_.isDigit).toInt
-    val multimodal = Set(106, 107, 108, 109, 116, 117, 136, 144)
-    val vector = Set(30, 31, 32, 33, 91, 92, 93, 97, 99, 103, 104, 105,
-      126, 127, 128, 130)
-    val web = Set(133, 134, 135, 137, 138, 143)
-    val curation = (Set(20, 21, 22, 23, 24, 25, 26, 27, 28, 110, 119,
-      120, 122, 123, 124, 125, 131, 132, 139, 140, 141, 142) ++
-      (79 to 90) ++ (94 to 96) ++ Set(98, 100, 101, 102))
-    if (multimodal(num)) "multimodal"
-    else if (vector(num)) "vector"
-    else if (web(num)) "web"
-    else if (curation(num)) "curation"
-    else "relational"
+  private def profileJson(p: Profile): String = {
+    def sum(f: Stage => Long) = p.stages.map(f).sum
+    val rows = p.stages.map(s => obj(Seq("id" -> s.id,
+      "name" -> jsonString(s.name), "tasks" -> s.tasks, "wall_ms" -> s.wallMs,
+      "run_ms" -> s.runMs, "cpu_ms" -> s.cpuMs, "input_bytes" -> s.inputBytes,
+      "shuffle_read_bytes" -> s.shuffleReadBytes,
+      "shuffle_write_bytes" -> s.shuffleWriteBytes,
+      "shuffle_records" -> s.shuffleRecords, "spill_bytes" -> s.spillBytes)))
+    obj(Seq("jobs" -> p.jobs, "build_jobs" -> p.buildJobs,
+      "stages" -> p.stages.size, "tasks" -> p.tasks,
+      "run_ms" -> sum(_.runMs), "cpu_ms" -> sum(_.cpuMs),
+      "input_bytes" -> sum(_.inputBytes),
+      "shuffle_read_bytes" -> sum(_.shuffleReadBytes),
+      "shuffle_write_bytes" -> sum(_.shuffleWriteBytes),
+      "shuffle_records" -> p.shuffleRecords, "spill_bytes" -> sum(_.spillBytes),
+      "stage_rows" -> rows.mkString("[", ",", "]")))
   }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val preflight = preflightGate()
     val spark = Session.local(Session.cpus)
     // warm-up: JVM/codegen/scheduler init shouldn't bill the first query.
     // Tables.events (not raw parquet read) — the loader normalizes `ts` to
@@ -127,182 +179,84 @@ object Bench {
       }
     }
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "2").toInt.max(1)
-    val doWarm = sys.env.getOrElse("SPARK_GRAFT_WARM", "1") != "0"
-    // co-tenant-noise hardening: a query whose best-of-N exceeds
-    // outlierFactor × its best-known prior-round time gets extra timed reps
-    // (the noise windows observed on this box span minutes, so best-of-2
-    // back-to-back cannot escape them; more draws usually can). Queries that
-    // STILL exceed the bound after retries are listed in "suspect" so a
-    // reader of the artifact knows which numbers to distrust.
-    val prior = priorTimes(sfDir)
-    val outlierFactor = sys.env.getOrElse("SPARK_GRAFT_OUTLIER_FACTOR", "3.0").toDouble
-    val outlierReps = sys.env.getOrElse("SPARK_GRAFT_OUTLIER_REPS", "3").toInt
-    val outlierFloorSec = 0.3 // never retry sub-300ms jitter
     val loadStart = proc1("/proc/loadavg")
     var errors = List.empty[(String, String)]
-    var retried = List.empty[String]
-    var suspect = List.empty[String]
     // local-iteration / scale-study aid: comma-separated name substrings.
     // Absent (the driver's case) → every registered query runs.
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
     val queryList = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.forall(_.exists(name.contains)) }
-    // cumulative per-query draws across sweeps — declared BEFORE runSweep
-    // so the outlier check can see prior sweeps' times: the published
-    // number is the min across ALL draws, so a query with a clean draw
-    // in sweep 1 must not re-enter retry/suspect on a noisy sweep 2
-    // (that would force extra full sweeps and publish suspect for a
-    // number that is actually within the outlier bound).
-    val draws = scala.collection.mutable.LinkedHashMap
-      .empty[String, Seq[Double]]
 
-    /** One full sweep over the surface; returns draws per query. */
-    def runSweep(warm: Boolean): Seq[(String, Seq[Double])] = queryList.map {
-      case (name, fn) =>
-        // unbilled warm run: compiles this query's generated code while the
-        // raised codegen cache guarantees it survives until the timed runs.
-        if (warm) {
-          try fn(spark, sfDir).count() catch { case _: Throwable => () }
-          spark.catalog.clearCache()
-        }
-        // best-of-N timed runs (caches dropped between runs): the engine's
-        // repeatable cost, robust to co-tenant CPU noise on this box.
-        def timedRun(): Option[Double] = {
-          val t0 = System.nanoTime()
-          val ok =
-            try { fn(spark, sfDir).count(); true } catch {
-              case e: Throwable =>
-                // a swallowed failure must be visible in the metric line —
-                // a silently-timed aborted job reads as a (fast) success
-                if (!errors.exists(_._1 == name))
-                  errors ::= name -> e.toString.take(200)
-                e.printStackTrace(System.err)
-                false
-            }
-          val dt = (System.nanoTime() - t0) / 1e9
-          spark.catalog.clearCache()
-          if (ok) Some(dt) else None
-        }
-        var times = (1 to reps).flatMap(_ => timedRun())
-        val bound = prior.get(name).map(p => (p * outlierFactor).max(outlierFloorSec))
-        // the outlier condition is evaluated against the CUMULATIVE
-        // per-query min (prior sweeps' draws included), matching what
-        // the artifact publishes
-        def bestSoFar = (draws.getOrElse(name, Nil) ++ times).min
-        if (times.nonEmpty && bound.exists(bestSoFar > _)) {
-          if (!retried.contains(name)) retried ::= name
-          var extra = 0
-          while (extra < outlierReps && bestSoFar > bound.get) {
-            times ++= timedRun().toSeq
-            extra += 1
+    val results = queryList.map { case (name, fn) =>
+      // unbilled warm run: compiles this query's generated code while the
+      // raised codegen cache guarantees it survives until the timed runs,
+      // and records its counters
+      val prof = try Some(profile(spark, sfDir, fn)) catch { case _: Throwable => None }
+      spark.catalog.clearCache()
+      // best-of-N timed runs (caches dropped between runs)
+      val times = (1 to reps).flatMap { _ =>
+        val dt =
+          try Some(timed(spark, sfDir, fn)) catch {
+            case e: Throwable =>
+              // a swallowed failure must be visible in the metric line —
+              // a silently-timed aborted job reads as a (fast) success
+              if (!errors.exists(_._1 == name))
+                errors ::= name -> e.toString.take(200)
+              e.printStackTrace(System.err)
+              None
           }
-          if (bestSoFar > bound.get && !suspect.contains(name))
-            suspect ::= name
-        }
-        name -> times
-    }
-
-    // MULTI-SWEEP noise defense (the r11 lesson: the official artifact was
-    // the round's noisiest of six same-surface runs — a co-tenant spike
-    // DURING the sweep is invisible to the preflight gate and per-query
-    // best-of-2 can't escape a minutes-long window). After the first
-    // sweep, the run self-assesses: any suspect query, or median drift
-    // of the cumulative per-query minima vs the best-known prior times
-    // beyond SWEEP_DRIFT ⇒ sweep again (codegen is warm, so an extra
-    // sweep costs only the timed work) and keep per-query MIN across all
-    // draws. Bounded by SPARK_GRAFT_SWEEPS. NOT a criterion: end-of-sweep
-    // loadavg — the sweep's own local[32] work keeps 1-min load far above
-    // any idle threshold, so it reads dirty unconditionally (observed
-    // live: load 8.4 after a clean drift-1.07 sweep); contamination that
-    // matters shows up as drift/suspects.
-    val maxSweeps = sys.env.getOrElse("SPARK_GRAFT_SWEEPS", "3").toInt.max(1)
-    val sweepDrift =
-      sys.env.getOrElse("SPARK_GRAFT_SWEEP_DRIFT", "1.25").toDouble
-    var sweeps = 0
-    var cleanRun = false
-    while (sweeps < maxSweeps && !cleanRun) {
-      // suspects recompute per sweep: a query that recovers on a clean
-      // re-sweep must not keep its stale suspect flag in the artifact
-      suspect = Nil
-      runSweep(warm = doWarm && sweeps == 0).foreach { case (n, ts) =>
-        draws.update(n, draws.getOrElse(n, Nil) ++ ts)
+        spark.catalog.clearCache()
+        dt
       }
-      sweeps += 1
-      val mins = draws.collect { case (n, ts) if ts.nonEmpty => n -> ts.min }
-      val driftSamples = mins.toSeq.collect {
-        case (n, t) if prior.contains(n) && prior(n) > 0.05 => t / prior(n)
-      }.sorted
-      val drift =
-        if (driftSamples.isEmpty) 1.0
-        else driftSamples(driftSamples.size / 2)
-      cleanRun = suspect.isEmpty && drift <= sweepDrift
-      if (!cleanRun && sweeps < maxSweeps) System.err.println(
-        f"[bench] sweep $sweeps dirty (suspects=${suspect.size}, " +
-          f"drift=$drift%.2f) — re-sweeping")
+      (name, times, prof)
     }
-    val results = draws.toSeq
     val loadEnd = proc1("/proc/loadavg")
     val uptime = proc1("/proc/uptime")
-    val mins = results.map { case (k, ts) =>
+    val mins = results.map { case (k, ts, _) =>
       k -> (if (ts.nonEmpty) ts.min else Double.NaN)
     }
-    val qs = mins.map { case (k, v) => s"\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    // ALL timed draws per query (not just the min): two runs' draw
-    // intervals define the run-pair noise envelope — tools/bench_diff.py
-    // flags a move as SIGNAL only when the intervals don't overlap, so
-    // ±20% co-tenant noise stops tripping the 1.5x gate (r10: four runs
-    // on near-identical surfaces spanned 61.6→79.1 s)
-    val drawsJson = results.map { case (k, ts) =>
-      s"\"" + k + "\":" + ts.mkString("[", ",", "]")
-    }.mkString("{", ",", "}")
-    def jstr(s: String): String =
-      "\"" + s.flatMap {
-        case '"' => "\\\""; case '\\' => "\\\\"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"
-        case c => c.toString
-      } + "\""
-    val errJson = errors.reverse
-      .map { case (k, v) => s"${jstr(k)}:${jstr(v)}" }
-      .mkString("{", ",", "}")
-    val total = if (mins.nonEmpty) mins.map(_._2).filterNot(_.isNaN).sum else 0.0
-    val retriedJson = retried.reverse.map(jstr).mkString("[", ",", "]")
-    val suspectJson = suspect.reverse.map(jstr).mkString("[", ",", "]")
-    val drawsConsidered = results.map(_._2.size).sum
+    val qs = obj(mins)
+    // ALL timed draws per query (not just the min): tools/bench_diff.py
+    // reads two runs' draw intervals as their noise envelope
+    val drawsJson = obj(results.map { case (k, ts, _) => k -> ts.mkString("[", ",", "]") })
+    val errJson = obj(errors.reverse.map { case (k, v) => k -> jsonString(v) })
+    val total = mins.map(_._2).filterNot(_.isNaN).sum
     // per-family minima rollup — the attributable round-over-round unit
-    val famJson = mins.filterNot(_._2.isNaN)
+    val famJson = obj(mins.filterNot(_._2.isNaN)
       .groupBy { case (n, _) => familyOf(n) }.toSeq.sortBy(_._1)
       .map { case (f, qs2) =>
-        s"\"" + f + s"\":{\"total\":${qs2.map(_._2).sum},\"n\":${qs2.size}}"
-      }.mkString("{", ",", "}")
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"families":$famJson,"draws":$drawsJson,"errors":$errJson,"sf":"$sfDir","loadavg_start":${jstr(loadStart)},"loadavg_end":${jstr(loadEnd)},"uptime":${jstr(uptime)},"preflight":$preflight,"retried":$retriedJson,"suspect":$suspectJson,"sweeps":$sweeps,"draws_considered":$drawsConsidered,"sweep_clean":$cleanRun}"""
+        f -> obj(Seq("total" -> qs2.map(_._2).sum, "n" -> qs2.size))
+      })
+    val profiled = results.collect { case (k, _, Some(p)) => k -> p }
+    val countersJson = obj(profiled.map { case (k, p) =>
+      k -> obj(Seq("jobs" -> p.jobs, "build_jobs" -> p.buildJobs,
+        "stages" -> p.stages.size, "tasks" -> p.tasks,
+        "shuffle_records" -> p.shuffleRecords))
+    })
+    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"families":$famJson,"draws":$drawsJson,"errors":$errJson,"sf":${jsonString(sfDir)},"loadavg_start":${jsonString(loadStart)},"loadavg_end":${jsonString(loadEnd)},"uptime":${jsonString(uptime)},"counters":$countersJson}"""
     println(line)
     // self-contained artifact: the driver's tail-capture truncated r2's JSON;
-    // this file always holds the complete line.
+    // this file always holds the complete line. The run history (append-only,
+    // what tools/bench_diff.py diffs) and the profile sit next to it, never
+    // at a bare cwd-relative path.
+    def write(p: Path, text: String, mode: StandardOpenOption): Unit =
+      Files.write(p, text.getBytes(StandardCharsets.UTF_8),
+        StandardOpenOption.CREATE, mode)
     try {
       val out = Paths.get(sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_SELF.json"))
-      Files.write(out, (line + "\n").getBytes(StandardCharsets.UTF_8),
-        StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)
-      // run history (append-only): BENCH_SELF is overwritten per run and
-      // the driver's BENCH_r files keep only a truncated tail, so this is
-      // the one complete per-query record across runs. tools/bench_diff.py
-      // diffs its last two lines to separate real moves from load noise.
-      // Resolved NEXT TO the BENCH_SELF output (overridable), never a bare
-      // cwd-relative path — runs launched from another directory must not
-      // scatter or silently split the history the diff tool depends on.
-      val hist = sys.env.get("SPARK_GRAFT_BENCH_HISTORY")
-        .map(Paths.get(_))
-        .getOrElse {
-          val dir = out.toAbsolutePath.getParent
-          if (dir == null) Paths.get("BENCH_HISTORY.jsonl")
-          else dir.resolve("BENCH_HISTORY.jsonl")
-        }
-      Files.write(hist,
-        (line + "\n").getBytes(StandardCharsets.UTF_8),
-        StandardOpenOption.CREATE, StandardOpenOption.APPEND)
+        .toAbsolutePath
+      Files.createDirectories(out.getParent)
+      write(out, line + "\n", StandardOpenOption.TRUNCATE_EXISTING)
+      write(out.resolveSibling("BENCH_HISTORY.jsonl"), line + "\n",
+        StandardOpenOption.APPEND)
+      write(out.resolveSibling("PROFILE.json"),
+        s"""{"sf":${jsonString(sfDir)},"queries":{\n""" +
+          profiled.map { case (k, p) => s"${jsonString(k)}:${profileJson(p)}" }
+            .mkString(",\n") + "\n}}\n",
+        StandardOpenOption.TRUNCATE_EXISTING)
     } catch { case e: Throwable =>
-      System.err.println(s"[bench] could not write BENCH_SELF.json: $e")
+      System.err.println(s"[bench] could not write the bench artifacts: $e")
     }
     spark.stop()
   }

@@ -22,14 +22,23 @@ object SparkEntry {
     RelationalQueries.queries("q06_rfm_card_style")(
       spark, "/root/testdata/sf0.001")
 
+  /** Every query family: the `*Queries` object that registers its queries. */
+  def families: Seq[(String, Map[String, (SparkSession, String) => DataFrame])] =
+    Seq("relational" -> RelationalQueries.queries,
+      "text" -> TextQueries.queries,
+      "vector" -> VectorQueries.queries,
+      "scale" -> ScaleQueries.queries,
+      "analytics" -> AnalyticsQueries.queries,
+      "windowset" -> WindowSetQueries.queries,
+      "extended" -> ExtendedQueries.queries,
+      "curation" -> CurationQueries.queries,
+      "multimodal" -> MultimodalQueries.queries,
+      "streaming" -> StreamingQueries.queries,
+      "web" -> WebQueries.queries)
+
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    RelationalQueries.queries ++ TextQueries.queries ++
-      VectorQueries.queries ++ ScaleQueries.queries ++
-      AnalyticsQueries.queries ++ WindowSetQueries.queries ++
-      ExtendedQueries.queries ++ CurationQueries.queries ++
-      MultimodalQueries.queries ++ StreamingQueries.queries ++
-      WebQueries.queries
+    families.map(_._2).reduce(_ ++ _)
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted for non-SQL-expressible ops →

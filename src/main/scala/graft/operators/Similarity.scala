@@ -186,48 +186,6 @@ object Similarity {
       .dropDuplicates("id_a", "id_b")
   }
 
-  /** [[cosineNearDupPairsBucketed]] with BOUNDED PEAK SCRATCH: the plane
-    * tables are processed in batches of `stageTables`, each batch's TRUE
-    * pairs (already cosine-verified in-flight, so tiny) eagerly
-    * localCheckpoint-ed, and the final result is the deduplicated union.
-    *
-    * Why: the single-shot form replicates every vector once per hash
-    * table into the (t, b) join shuffle — at the ×1000 soak (2M × 64-dim
-    * vectors, 48 tables) that is ~29 GB PER SIDE and the run died on
-    * scratch (`SPILL_OUT_OF_MEMORY`, SCALE.md s33). Staging bounds the
-    * in-flight shuffle to `stageTables / tables` of that volume; total
-    * bytes are unchanged but batches complete and their shuffle files
-    * become collectable before the next batch starts. Output is
-    * IDENTICAL to the single-shot form: same plane sets, same in-flight
-    * verify, `dropDuplicates` over the union instead of over one join.
-    */
-  def cosineNearDupPairsBucketedStaged(df: DataFrame, threshold: Double,
-                                       tables: Seq[Seq[Seq[Double]]],
-                                       stageTables: Int,
-                                       idCol: String = "vec_id",
-                                       vecCol: String = "embedding")
-      : DataFrame = {
-    require(stageTables >= 1, s"stageTables must be >= 1, got $stageTables")
-    if (tables.size <= stageTables)
-      return cosineNearDupPairsBucketed(df, threshold, tables, idCol, vecCol)
-    val batches = tables.grouped(stageTables).toSeq.map { planeBatch =>
-      val pairs = cosineNearDupPairsBucketed(df, threshold, planeBatch,
-        idCol, vecCol)
-      // EAGER: materializes this batch now (sequential stages, bounded
-      // concurrent shuffle footprint) and truncates lineage, so the
-      // batch's join shuffle files are GC-collectable before the next
-      // batch runs. True pairs are a tiny fraction of the corpus.
-      val cp = pairs.localCheckpoint(true)
-      // nudge the ContextCleaner: shuffle files are only deleted when
-      // the driver GCs the dereferenced RDDs — without this, a long
-      // staged run accumulates every batch's shuffle on scratch and
-      // staging buys nothing (Spark's own periodic GC is 30 min apart)
-      System.gc()
-      cp
-    }
-    batches.reduce(_ unionByName _).dropDuplicates("id_a", "id_b")
-  }
-
   /** Signature-prefiltered near-dup pairs — the heavy-corpus arm of
     * [[cosineNearDupPairsAuto]]. Same candidate generation as
     * [[cosineNearDupPairsBucketed]] (multi-table RHP buckets, equi-join
@@ -252,10 +210,13 @@ object Similarity {
     * further for pairs above it) — documented slack inside the bucket
     * geometry's own recall budget, same may-only-miss contract.
     *
-    * `stageTables` bounds peak scratch exactly as
-    * [[cosineNearDupPairsBucketedStaged]] (per-batch localCheckpoint of
-    * already-tiny survivor ids + shuffle GC); pass `tables.size` to run
-    * single-shot.
+    * `stageTables` bounds peak scratch: the plane tables run in batches
+    * of `stageTables`, each batch's survivor ids materialized on disk and
+    * its shuffle files GC-nudged off scratch before the next batch, so the
+    * in-flight exchange is `stageTables / tables` of the single-shot one
+    * (which filled the ×1000 soak's scratch, SCALE.md s33). Total bytes are
+    * unchanged and the output equals the single-shot form's; pass
+    * `tables.size` to run single-shot.
     */
   def cosineNearDupPairsSig(df: DataFrame, threshold: Double,
                             tables: Seq[Seq[Seq[Double]]],
@@ -319,7 +280,10 @@ object Similarity {
             org.apache.spark.storage.StorageLevel.DISK_ONLY)
           p.count()
           off += planeBatch.size
-          System.gc() // shuffle-file GC nudge, see the staged form
+          // nudge the ContextCleaner: shuffle files are deleted only
+          // when the driver GCs the dereferenced RDDs, and Spark's own
+          // periodic GC is 30 min apart
+          System.gc()
           p
         }
         parts.reduce(_ unionByName _).dropDuplicates("id_a", "id_b")
@@ -517,7 +481,7 @@ object Similarity {
   private val SigBits = 256
 
   /** Per-side (t, b)-exchange volume above which [[cosineNearDupPairsAuto]]
-    * routes through the staged form (4 GiB — well under any healthy
+    * stages the signature arm (4 GiB — well under any healthy
     * scratch pool, well above anything a test-scale corpus produces).
     */
   private val StagedShuffleMinBytes = 4L << 30

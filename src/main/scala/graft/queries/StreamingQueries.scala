@@ -48,9 +48,9 @@ object StreamingQueries {
     * (gate, table dir, geometry). Splitting the static table into
     * mtime-ordered chunk files is test-FIXTURE construction — the
     * streaming analog of the parquet testdata every batch query reads
-    * directly — not engine work; Bench runs each gate 3+ times (warm +
-    * best-of-2 + outlier retries) and re-splitting identical input
-    * re-times the fixture, not the pipeline. State dirs (checkpoint /
+    * directly — not engine work; Bench runs each gate 3 times (warm +
+    * best-of-2) and re-splitting identical input re-times the fixture,
+    * not the pipeline. State dirs (checkpoint /
     * store / output) stay PER-RUN: every run still drives the full
     * micro-batch pipeline from a cold store. Chunk mtimes are pinned
     * constants, so a cached dir admits files in the same order as a

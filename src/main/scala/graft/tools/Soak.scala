@@ -6,12 +6,15 @@ import java.nio.file.{Files, Paths, StandardOpenOption}
 import java.nio.charset.StandardCharsets
 
 import graft.{Session, SparkEntry, Tables}
+import graft.Bench.jsonString
 import graft.operators.{Dedup, Similarity}
 
 /** Scale-soak driver: times the headline operator families over the FULL
-  * tables of a (possibly ScaleGen-replicated) dataset and emits the same
-  * one-line JSON shape as [[graft.Bench]], so `tools/scale_report.py` can
-  * fit per-query scaling exponents across sf0.1 / ×10 / ×100 runs.
+  * tables of a (possibly ScaleGen-replicated) dataset and emits a one-line
+  * JSON with [[graft.Bench]]'s `metric`/`value`/`unit`/`queries`/`errors`/`sf`
+  * keys, so `tools/scale_report.py` can fit per-query scaling exponents
+  * across sf0.1 / ×10 / ×100 runs. For per-query counters, run the
+  * registered queries through [[graft.Bench]].
   *
   * Two workload groups:
   *
@@ -78,30 +81,9 @@ object Soak {
     "q159_bloom_decontam", "q160_hll_distinct", "q162_cluster_balance",
     "q163_curation_balance")
 
-  /** Same co-tenant preflight as [[graft.Bench]]: exponent fits across
-    * scale runs are meaningless if one run raced a loaded box, so wait
-    * (bounded) for 1-min load below threshold before timing anything.
-    */
-  private def preflight(): Unit = {
-    val threshold = sys.env.getOrElse("SPARK_GRAFT_PREFLIGHT_LOAD", "2.0").toDouble
-    val maxWaitSec = sys.env.getOrElse("SPARK_GRAFT_PREFLIGHT_WAIT", "600").toInt
-    def load1: Double =
-      try new String(Files.readAllBytes(Paths.get("/proc/loadavg")))
-        .split("\\s+")(0).toDouble
-      catch { case _: Throwable => 0.0 }
-    var waited = 0
-    while (threshold > 0 && load1 > threshold && waited < maxWaitSec) {
-      if (waited == 0) System.err.println(
-        f"[soak] preflight: load ${load1}%.2f > $threshold%.1f — waiting")
-      Thread.sleep(5000); waited += 5
-    }
-    System.err.println(f"[soak] preflight done: load ${load1}%.2f after ${waited}s")
-  }
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val outPath = args.headOption.getOrElse("target/scale/SOAK.json")
-    preflight()
     val spark = Session.local(Session.cpus)
 
     def docs = Tables.documents(spark, sfDir)
@@ -289,17 +271,11 @@ object Soak {
 
     val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
-    def jstr(s: String): String =
-      "\"" + s.flatMap {
-        case '"' => "\\\""; case '\\' => "\\\\"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"
-        case c => c.toString
-      } + "\""
     val errJson = errors.reverse
-      .map { case (k, v) => s"${jstr(k)}:${jstr(v)}" }
+      .map { case (k, v) => s"${jsonString(k)}:${jsonString(v)}" }
       .mkString("{", ",", "}")
     val total = results.map(_._2).sum
-    val line = s"""{"metric":"soak_total","value":$total,"unit":"sec","queries":$qs,"errors":$errJson,"sf":"$sfDir"}"""
+    val line = s"""{"metric":"soak_total","value":$total,"unit":"sec","queries":$qs,"errors":$errJson,"sf":${jsonString(sfDir)}}"""
     println(line)
     val p = Paths.get(outPath)
     if (p.getParent != null) Files.createDirectories(p.getParent)

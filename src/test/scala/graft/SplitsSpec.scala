@@ -66,27 +66,16 @@ class SplitsSpec extends SparkSpec {
       s"auto recall $autoRecall (${auto.size}/${exact.size})")
   }
 
-  test("staged bucketed near-dup is pair-identical to single-shot; " +
-    "routed entry picks exact below exactMaxVectors, bucketed above") {
+  test("routed entry picks exact below exactMaxVectors, bucketed above") {
     val base = Tables.embeddings(spark, sf).filter(col("vec_id") < 200)
     val copies = base
       .withColumn("vec_id", col("vec_id") + 1000)
       .withColumn("embedding", expr(
         "transform(embedding, (x, i) -> x * (1.0f + float(0.03 * sin(i + vec_id))))"))
     val corpus = base.unionByName(copies)
-    val dim = base.select(size(col("embedding"))).head().getInt(0)
-    val tables = (0 until 6).map(t => planes(6, dim, seed = 100 + t))
     def pairs(df: org.apache.spark.sql.DataFrame) =
       df.select("id_a", "id_b", "sim")
         .as[(Long, Long, Double)].collect().toSet
-    val oneShot = pairs(Similarity
-      .cosineNearDupPairsBucketed(corpus, 0.95, tables))
-    val staged = pairs(Similarity
-      .cosineNearDupPairsBucketedStaged(corpus, 0.95, tables,
-        stageTables = 2))
-    assert(staged == oneShot,
-      s"staged != single-shot: ${staged.size} vs ${oneShot.size}")
-
     // routed: exact arm below the bound (output == exact all-pairs),
     // bucketed arm above it (subset of exact, never a false positive)
     val exact = pairs(Similarity.cosineNearDupPairs(corpus, 0.95))

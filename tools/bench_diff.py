@@ -17,6 +17,12 @@ Two noise defenses on top of the raw 1.5x ratio gate:
      Runs recorded before the draws field fall back to the ratio gate
      alone.
 
+Plan changes come first: graft.Bench records each query's warm-run
+counters ("counters": jobs, build jobs, stages, tasks, shuffle records),
+which do not move with co-tenant load, so every query whose counters
+differ between the two runs is printed as a plan change. Runs recorded
+before the counters field fall back to the wall diff alone.
+
 Usage:
   python3 tools/bench_diff.py              # last two BENCH_HISTORY.jsonl runs
   python3 tools/bench_diff.py old.json new.json
@@ -58,6 +64,24 @@ def last_two_history():
     return json.loads(lines[-2]), json.loads(lines[-1])
 
 
+COUNTERS = ("jobs", "build_jobs", "stages", "tasks", "shuffle_records")
+
+
+def counter_changes(old, new):
+    """[(query, [(counter, old, new)])] for every query whose counters
+    differ, or None when either run predates the counters field."""
+    oc, nc = old.get("counters"), new.get("counters")
+    if oc is None or nc is None:
+        return None
+    changes = []
+    for q in sorted(set(oc) & set(nc)):
+        moved = [(k, oc[q].get(k), nc[q].get(k)) for k in COUNTERS
+                 if oc[q].get(k) != nc[q].get(k)]
+        if moved:
+            changes.append((q, moved))
+    return changes
+
+
 def ok_num(x):
     return isinstance(x, (int, float)) and not math.isnan(x)
 
@@ -72,12 +96,6 @@ def main():
         old, new = last_two_history()
     oq, nq = old["queries"], new["queries"]
     od, nd = old.get("draws", {}), new.get("draws", {})
-    # a query whose draws Bench itself flagged as outlier-contaminated
-    # ("retried": extra draws were taken because best-of-N exceeded the
-    # prior-round bound) has a noise-widened interval — using it as an
-    # envelope would let one old-run co-tenant spike silence a genuine
-    # new-run regression, so those queries fall back to the ratio gate
-    tainted = set(old.get("retried", [])) | set(new.get("retried", []))
     # NaN times (a query whose every timed draw errored) must not reach
     # the drift median — NaN poisons sorted() and the division chain
     ratios = [nq[q] / oq[q] for q in set(oq) & set(nq)
@@ -103,7 +121,7 @@ def main():
         why = (f"{'slower' if raw > 1 else 'faster'} {raw:.2f}x "
                f"({norm:.2f}x drift-adj)")
         da, db = od.get(q), nd.get(q)
-        if q not in tainted and da and db:
+        if da and db:
             ov = min(max(da), max(db)) - max(min(da), min(db))
             wa, wb = max(da) - min(da), max(db) - min(db)
             wmin = min(wa, wb)
@@ -124,6 +142,21 @@ def main():
           f"({len(oq)} queries)")
     print(f"new: {new_path} total={new['value']:.2f}s "
           f"({len(nq)} queries)  run-drift={drift:.2f}x")
+    changes = counter_changes(old, new)
+    if changes is None:
+        print("counters: missing from a run (older history line); "
+              "wall diff only")
+    elif not changes:
+        print(f"counters: no plan change "
+              f"({len(set(old['counters']) & set(new['counters']))} "
+              f"queries in both runs)")
+    else:
+        print(f"\nPLAN CHANGES ({len(changes)} queries whose warm-run "
+              f"counters differ):")
+        for q, moved in changes:
+            print(f"  {q:35s} " + ", ".join(
+                f"{k} {a} -> {b}" for k, a, b in moved))
+        print()
     # family rollup (r14): with ~140 heterogeneous queries the scalar
     # total is noise-dominated — per-family minima totals are the
     # attributable round-over-round unit. graft.Bench emits "families";

@@ -2,15 +2,16 @@ package graft.etl
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.SparkSession
 import org.yaml.snakeyaml.Yaml
 
 /** Config-table model + loaders (SURVEY §2.1 S8).
   *
   * All rule tables are tiny (≤ dozens of rows — configs/payment_gateway.csv
-  * has 20) and user-editable. They load DRIVER-SIDE into case classes and
-  * ride into executors inside the serialized plan / UDF closures — the Spark
-  * analog of the reference's in-process rule dicts; no shuffle, no join.
+  * has 20) and user-editable. They are parsed on the driver — YAML by
+  * snakeyaml, CSV by [[Ingest.csvRows]], so loading them runs no Spark job
+  * and takes no session — into case classes that ride into executors
+  * inside the serialized plan / UDF closures: the Spark analog of the
+  * reference's in-process rule dicts; no shuffle, no join.
   */
 object EtlConfigs {
 
@@ -114,19 +115,16 @@ object EtlConfigs {
       list("fee_keywords"))
   }
 
-  /** CSV rule-table read via Spark (quote/BOM handling for free), collected
-    * driver-side — these files are KB-sized by design.
+  /** CSV rule-table rows by column name: the file is decoded on the driver
+    * (a leading UTF-8 BOM, which other tools glue on, dropped) and
+    * tokenized by [[Ingest.csvRows]]; the names follow the statements'
+    * header rule, so a repeated column's first copy keeps its name.
     */
-  private def readCsvRows(spark: SparkSession, path: String)
-      : Seq[Map[String, String]] = {
-    val df = spark.read.option("header", "true").csv(path)
-    // strip a UTF-8 BOM glued onto the first header by other tools
-    val cols = df.columns.map(_.replace("﻿", ""))
-    df.toDF(cols.toIndexedSeq: _*).collect().toSeq.map { r =>
-      cols.zipWithIndex.map { case (c, i) =>
-        c -> Option(r.getString(i)).getOrElse("")
-      }.toMap
-    }
+  private def readCsvRows(path: String): Seq[Map[String, String]] = {
+    val (header, rows) = Ingest.csvRows(
+      Ingest.lines(Ingest.decode(path, "UTF-8").stripPrefix("\uFEFF")))
+    val names = Ingest.columnNames(header, caseSensitive = true)
+    rows.map(r => names.zip(r.map(Option(_).getOrElse(""))).toMap)
   }
 
   private def num(s: String, default: Double = 999.0): Double =
@@ -135,9 +133,9 @@ object EtlConfigs {
   /** cards.csv in FILE ORDER — order is semantics-bearing (last match wins,
     * refine.py:142). All fields trimmed (refine.py:133).
     */
-  def loadCardRules(spark: SparkSession, path: String): Seq[CardRule] =
+  def loadCardRules(path: String): Seq[CardRule] =
     if (!new java.io.File(path).exists()) Nil
-    else readCsvRows(spark, path).map { m =>
+    else readCsvRows(path).map { m =>
       CardRule(
         cardType = m.getOrElse("對應卡片", "").trim,
         cardNo = m.getOrElse("卡號", "").trim,
@@ -149,9 +147,9 @@ object EtlConfigs {
   /** payment_gateway.csv sorted priority-DESC (refine.py:68-72). Stable sort
     * keeps file order among equal priorities, like pandas sort_values.
     */
-  def loadPaymentRules(spark: SparkSession, path: String): Seq[PaymentRule] =
+  def loadPaymentRules(path: String): Seq[PaymentRule] =
     if (!new java.io.File(path).exists()) Nil
-    else readCsvRows(spark, path).map { m =>
+    else readCsvRows(path).map { m =>
       PaymentRule(
         pattern = m.getOrElse("Pattern", ""),
         category = m.getOrElse("Category", ""),
@@ -163,9 +161,9 @@ object EtlConfigs {
   /** merchants.csv sorted priority-DESC, blank patterns dropped
     * (refine.py:94-105, db_to_RFManalysis.py:57-99).
     */
-  def loadMerchantRules(spark: SparkSession, path: String): Seq[MerchantRule] =
+  def loadMerchantRules(path: String): Seq[MerchantRule] =
     if (!new java.io.File(path).exists()) Nil
-    else readCsvRows(spark, path).map { m =>
+    else readCsvRows(path).map { m =>
       MerchantRule(
         pattern = m.getOrElse("Pattern", ""),
         replacement = m.getOrElse("Replacement", ""),

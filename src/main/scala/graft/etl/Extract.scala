@@ -96,21 +96,24 @@ object Extract {
         val isMaster = coalesce(col(Merchant), lit("")).rlike(p.trigger)
         val isPayment =
           coalesce(col(Merchant), lit("")).rlike("繳款|轉帳")
-        val masterText = last(when(isMaster, col(Merchant)),
-          ignoreNulls = true).over(wFill)
-        val hasMaster = max(isMaster.cast("int")).over(wFile) === 1
+        // each window is planned once: both card columns read the temporaries
+        val (masterText, hasMaster) = ("_master_text", "_has_master")
         def extracted(pat: String) =
-          nullif(regexp_extract(masterText, pat, 1), lit(""))
+          nullif(regexp_extract(col(masterText), pat, 1), lit(""))
+        def card(c: String, pat: String) =
+          when(!col(hasMaster), col(c))
+            .when(isPayment, lit(null))
+            .otherwise(extracted(pat))
         df
-          .withColumn(CardNo,
-            when(!hasMaster, col(CardNo))
-              .when(isPayment, lit(null))
-              .otherwise(extracted(p.cardNo)))
-          .withColumn(CardType,
-            when(!hasMaster, col(CardType))
-              .when(isPayment, lit(null))
-              .otherwise(extracted(p.cardType)))
+          .withColumns(Map(
+            masterText -> last(when(isMaster, col(Merchant)),
+              ignoreNulls = true).over(wFill),
+            hasMaster -> (max(isMaster.cast("int")).over(wFile) === 1)))
+          .withColumns(Map(
+            CardNo -> card(CardNo, p.cardNo),
+            CardType -> card(CardType, p.cardType)))
           .filter(!isMaster)
+          .drop(masterText, hasMaster)
     }
 
   // ------------------------------------------------------------ Node 4-1
@@ -177,8 +180,9 @@ object Extract {
     val available = cfg.columnsMapping.filter {
       case (src, _) => raw.columns.contains(src)
     }
-    val mapped0 = raw.select(
-      (available.map { case (src, dst) => col(src).as(dst) } :+
+    val mapped0 = raw.select( // quoted: a source name may hold a dot (`金額.1`)
+      (available.map { case (src, dst) =>
+        col(s"`${src.replace("`", "``")}`").as(dst) } :+
         col(Ingest.RowIdx)): _*)
       .withColumn(BankName, lit(bankId))
     val needed = Seq(Location, Currency, ConvDate, CardNo, CardType,

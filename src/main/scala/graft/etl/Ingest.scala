@@ -2,30 +2,109 @@ package graft.etl
 
 import java.nio.charset.{Charset, CodingErrorAction}
 import java.nio.file.{Files, Paths}
+import java.util.Locale
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import scala.collection.mutable
+
+import com.univocity.parsers.csv.CsvParser
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.csv.CSVOptions
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 /** Statement-file ingestion (SURVEY §2.1 S1-S4).
   *
-  * Bank statements are KB-sized monthly files, so the header hunt and HTML
-  * parse run driver-side; the parsed body still becomes a real DataFrame so
-  * every downstream transform is Spark. Each file lands in ONE partition
-  * with an explicit `_row_idx` — statement row order is semantics-bearing
-  * (master-row fill-down, SURVEY §2.7 W1/W3).
+  * Statements and rule tables are KB-sized files, so every reader decodes
+  * its file on the driver — CSV through [[csvRows]], HTML here, Excel in
+  * [[Xlsx]] — and hands a header plus string rows to [[table]], the one
+  * place driver-parsed rows become a DataFrame. No Spark job runs to read
+  * them; every transform downstream of the raw frame is Spark. Each file
+  * lands in ONE partition with `_row_idx` stored as data — statement row
+  * order is semantics-bearing (master-row fill-down, SURVEY §2.7 W1/W3).
   */
 object Ingest {
 
   /** Row-order column added to every ingested file. */
   val RowIdx = "_row_idx"
 
-  private def decode(path: String, encoding: String): String = {
+  private[etl] def decode(path: String, encoding: String): String = {
     // errors='replace' (etl.py:133): malformed bytes → U+FFFD, never throw
     val dec = Charset.forName(encoding).newDecoder()
       .onMalformedInput(CodingErrorAction.REPLACE)
       .onUnmappableCharacter(CodingErrorAction.REPLACE)
     dec.decode(java.nio.ByteBuffer.wrap(Files.readAllBytes(Paths.get(path))))
       .toString
+  }
+
+  /** `\n`-split lines of a decoded file, `\r` line ends dropped. */
+  private[etl] def lines(text: String): Seq[String] =
+    text.split("\n", -1).toSeq.map(_.stripSuffix("\r"))
+
+  /** Column names by pandas' header rule (the reference reads every format
+    * through pandas): trimmed (etl.py:319), a blank cell is `Unnamed: i`,
+    * and a repeated name gets `.1`, `.2`, … — repeats compared the way the
+    * caller resolves names, and never clashing with `_row_idx`.
+    */
+  def columnNames(cells: Seq[String],
+                  caseSensitive: Boolean): Seq[String] = {
+    def key(n: String) = if (caseSensitive) n else n.toLowerCase(Locale.ROOT)
+    val seen = mutable.Map(key(RowIdx) -> 1).withDefaultValue(0)
+    cells.zipWithIndex.map { case (c, i) =>
+      val trimmed = Option(c).map(_.trim).getOrElse("")
+      var name = if (trimmed.isEmpty) s"Unnamed: $i" else trimmed
+      var n = seen(key(name))
+      while (n > 0) { // pandas' _dedup_names: a new name may repeat too
+        seen(key(name)) = n + 1
+        name = s"$name.$n"
+        n = seen(key(name))
+      }
+      seen(key(name)) = 1
+      name
+    }
+  }
+
+  /** The one constructor of a DataFrame from a driver-parsed file:
+    * all-string columns named by [[columnNames]], plus `_row_idx` = the
+    * row's position, in a single partition (one plan branch per file; a
+    * local relation would split the file, and once coalesced Spark's union
+    * would merge files).
+    */
+  def table(spark: SparkSession, header: Seq[String],
+            rows: Seq[Seq[String]]): DataFrame = {
+    val names = columnNames(header,
+      spark.sessionState.conf.caseSensitiveAnalysis)
+    val data = rows.zipWithIndex.map { case (r, i) =>
+      require(r.length == names.length,
+        s"row $i has ${r.length} cells, header has ${names.length}")
+      Row.fromSeq(r :+ i.toLong)
+    }
+    val schema = StructType(names.map(StructField(_, StringType)) :+
+      StructField(RowIdx, LongType, nullable = false))
+    spark.createDataFrame(spark.sparkContext.parallelize(data, 1), schema)
+  }
+
+  private val csvOptions = new CSVOptions(
+    Map("header" -> "true", "mode" -> "DROPMALFORMED"), false, "UTC")
+
+  /** Header cells and rows of in-memory CSV lines, tokenized by Spark's own
+    * parser settings, as `spark.read` with header and DROPMALFORMED (pandas
+    * on_bad_lines='skip') reads a `Dataset[String]`: blank lines and later
+    * copies of the header line are skipped, a line whose field count
+    * differs from the header's is dropped, and empty fields are null.
+    */
+  def csvRows(lines: Seq[String]): (Seq[String], Seq[Seq[String]]) = {
+    // Spark's blank-line filter trims spaces only
+    val kept = lines.filter(_.exists(_ != ' '))
+    kept.headOption match {
+      case None => (Nil, Nil)
+      case Some(first) =>
+        val parser = new CsvParser(csvOptions.asParserSettings)
+        val header = parser.parseLine(first).toSeq
+        val rows = kept.tail.filter(_ != first)
+          .flatMap(l => Option(parser.parseLine(l)))
+          .filter(_.length == header.length)
+          .map(_.toSeq.map(v => if (v == csvOptions.nullValue) null else v))
+        (header, rows)
+    }
   }
 
   /** Smart CSV (etl.py:129-152): scan the first 50 lines for the configured
@@ -35,30 +114,12 @@ object Ingest {
     */
   def smartReadCsv(spark: SparkSession, path: String, encoding: String,
                    headerKeyword: String): DataFrame = {
-    val text = decode(path, encoding)
-    val lines = text.split("\n", -1).toSeq.map(_.stripSuffix("\r"))
-    val headerIdx = lines.take(51).zipWithIndex.collectFirst {
+    val all = lines(decode(path, encoding))
+    val headerIdx = all.take(51).zipWithIndex.collectFirst {
       case (l, i) if headerKeyword.nonEmpty && l.contains(headerKeyword) => i
     }
-    val body = headerIdx.map(lines.drop).getOrElse(lines)
-      .filter(_.nonEmpty)
-    csvFromLines(spark, body)
-  }
-
-  /** Parse in-memory CSV lines into a single-partition all-string DataFrame
-    * with `_row_idx`. DROPMALFORMED mirrors pandas on_bad_lines='skip'.
-    */
-  def csvFromLines(spark: SparkSession, lines: Seq[String]): DataFrame = {
-    import spark.implicits._
-    val ds = spark.createDataset(lines).coalesce(1)
-    val df = spark.read
-      .option("header", "true")
-      .option("mode", "DROPMALFORMED")
-      .csv(ds)
-    val trimmed = df.columns.map(_.trim) // etl.py:319
-    df.toDF(trimmed.toIndexedSeq: _*)
-      .coalesce(1)
-      .withColumn(RowIdx, monotonically_increasing_id())
+    val (header, rows) = csvRows(headerIdx.map(all.drop).getOrElse(all))
+    table(spark, header, rows)
   }
 
   /** HTML table source (etl.py:289-304, hncb): find the `<table>` whose text
@@ -82,14 +143,7 @@ object Ingest {
     val header = rows.head.map(h =>
       h.replace("\n", " ").split("\\s+").filter(_.nonEmpty).mkString(" "))
     val width = header.length
-    val data = rows.tail.map(r =>
-      org.apache.spark.sql.Row.fromSeq(r.padTo(width, "").take(width)))
-    val schema = org.apache.spark.sql.types.StructType(header.map(
-      org.apache.spark.sql.types.StructField(_,
-        org.apache.spark.sql.types.StringType)))
-    spark.createDataFrame(
-        spark.sparkContext.parallelize(data, 1), schema)
-      .withColumn(RowIdx, monotonically_increasing_id())
+    table(spark, header, rows.tail.map(_.padTo(width, "").take(width)))
   }
 
   private def stripTags(s: String): String =

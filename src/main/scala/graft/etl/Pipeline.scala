@@ -32,9 +32,9 @@ object Pipeline {
         if (new java.io.File(p("banks_config.yaml")).exists())
           EtlConfigs.loadBankConfigs(p("banks_config.yaml"))
         else EtlConfigs.loadBankConfigs(p("banks_configs_example.yaml")),
-      cards = EtlConfigs.loadCardRules(spark, p("cards.csv")),
-      payments = EtlConfigs.loadPaymentRules(spark, p("payment_gateway.csv")),
-      merchants = EtlConfigs.loadMerchantRules(spark, p("merchants.csv")),
+      cards = EtlConfigs.loadCardRules(p("cards.csv")),
+      payments = EtlConfigs.loadPaymentRules(p("payment_gateway.csv")),
+      merchants = EtlConfigs.loadMerchantRules(p("merchants.csv")),
       keywords = EtlConfigs.loadTxnTypeKeywords(p("transaction_types.yaml")))
   }
 

@@ -9,9 +9,7 @@ import javax.xml.stream.{XMLInputFactory, XMLStreamConstants, XMLStreamReader}
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Dependency-free XLSX source (SURVEY §2.1 S5).
   *
@@ -34,8 +32,8 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
   * consume them like any CSV date field).
   *
   * Statement files are KB-sized monthly exports, so — exactly like the
-  * smart-CSV header hunt and the HTML table parse (Ingest.scala) — the
-  * decode runs driver-side and the parsed body becomes a real DataFrame;
+  * smart-CSV and HTML sources (Ingest.scala) — the decode runs on the
+  * driver and the parsed body enters Spark through [[Ingest.table]];
   * everything downstream is distributed Spark. This is NOT a path for
   * warehouse-scale data (that stays parquet).
   */
@@ -98,23 +96,16 @@ object Xlsx {
   }
 
   /** `pd.read_excel(filepath)` shape: first sheet, first row = header,
-    * body as an all-string single-partition DataFrame with `_row_idx`
-    * (statement row order is semantics-bearing — master-row fill-down,
-    * SURVEY §2.7 W1/W3). Blank header cells get pandas' `Unnamed: N`.
+    * body as [[Ingest.table]] builds every driver-parsed file — all-string
+    * columns under pandas' header rule, one partition, `_row_idx` row
+    * order (master-row fill-down, SURVEY §2.7 W1/W3).
     */
   def readFirstSheet(spark: SparkSession, path: String): DataFrame = {
     val sheet = readSheets(path).headOption.getOrElse(
       throw new IllegalArgumentException(s"$path: workbook has no sheets"))
     require(sheet.rows.nonEmpty, s"$path: first sheet is empty")
-    val header = sheet.rows.head.zipWithIndex.map {
-      case (c, i) => c.filter(_.nonEmpty).getOrElse(s"Unnamed: $i")
-    }
-    val data = sheet.rows.tail.map(r =>
-      Row.fromSeq(r.map(_.orNull)))
-    val schema = StructType(header.map(StructField(_, StringType)))
-    spark.createDataFrame(
-        spark.sparkContext.parallelize(data, 1), schema)
-      .withColumn(Ingest.RowIdx, monotonically_increasing_id())
+    Ingest.table(spark, sheet.rows.head.map(_.orNull),
+      sheet.rows.tail.map(_.map(_.orNull)))
   }
 
   /** convert_model.py:56-67: read every sheet, and for each

@@ -365,14 +365,6 @@ object Dedup {
         round(col("containment"), 6).as("containment"))
   }
 
-  /** MinHash signature: k-wide one-pass native expression using the
-    * Broder construction h_i = (h1 + i*h2) mod P
-    * (graft.plans.MinHashArray) — one traversal of the shingle set
-    * instead of k.
-    */
-  def minHashSignature(shingles: Column, k: Int): Column =
-    graft.plans.SetExpressions.minHash(shingles, k)
-
   /** MinHash + LSH banding near-dup candidates, verified with exact Jaccard.
     *
     * `numHashes` hashes split into `bands` bands; documents sharing any

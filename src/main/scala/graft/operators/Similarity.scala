@@ -1233,14 +1233,6 @@ object Similarity {
     })
   }
 
-  /** Asymmetric distance: left fold of `lut[j][codes[j]]` over subspaces
-    * (sequential — bit-reproducible and oracle-matching).
-    */
-  private def adcCol(lut: Column, codes: Column, m: Int): Column =
-    aggregate(sequence(lit(1), lit(m)), lit(0.0), (acc, j) =>
-      acc + element_at(element_at(lut, j),
-        element_at(codes, j).cast("int")))
-
   /** Encode a corpus to PQ codes: (id, codes array&lt;long&gt; of length m).
     * At ksub <= 256 each code is a byte of information — a 64-dim float
     * corpus (256 B/vector) becomes m bytes/vector for candidate scoring,

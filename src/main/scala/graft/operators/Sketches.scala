@@ -56,15 +56,6 @@ object Sketches {
                confidence: Double = 0.99, seed: Int = 42): Column =
     count_min_sketch(c, lit(eps), lit(confidence), lit(seed))
 
-  /** Per-group distinct-count profile of `df` — the shape a corpus-stats
-    * job runs daily at scale: one pass, O(kB) state per group.
-    */
-  def distinctProfile(df: DataFrame, groupCols: Seq[String],
-                      valueCol: String): DataFrame =
-    df.groupBy(groupCols.map(col): _*)
-      .agg(approxDistinct(col(valueCol)).as("approx_distinct"),
-        count(col(valueCol)).as("n"))
-
   /** Engine-portable, ORACLE-REPLAYABLE HyperLogLog distinct estimate.
     *
     * [[approxDistinct]] (Spark's HLL++) is the production default, but

@@ -107,6 +107,18 @@ class EtlPipelineSpec extends SparkSpec {
     assert(coffee(Schema.CardType) == "華南經典卡")
   }
 
+  test("extract: a master-row file plans its fill-down and per-file " +
+    "windows once for both card columns") {
+    def windows(df: DataFrame) = df.queryExecution.optimizedPlan.collect {
+      case w: org.apache.spark.sql.catalyst.plans.logical.Window => w
+    }.size
+    for ((file, bank) <- Seq("玉山113年1月帳單.csv" -> "esun_bank",
+        "華南202401.html" -> "hncb_bank"))
+      assert(windows(Extract.processBankFile(spark, s"$dir/data/$file", bank,
+        cfg.banks(bank))) == 2, file)
+    assert(windows(Extract.extractAll(spark, s"$dir/data", cfg.banks)) == 4)
+  }
+
   test("extract: esun foreign split fills place/location/conversion date") {
     val steam = rows(extracted).find(
       _("Merchant").toString.startsWith("STEAMGAMES")).get

@@ -1,14 +1,20 @@
 package graft
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths}
 
-import graft.etl.Ingest
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row}
+
+import graft.etl._
 
 /** Ingest edge cases: header-scan fallback, filename year parsing
   * (including the reference's ROC-regex quirk, reproduced faithfully),
-  * file routing.
+  * file routing, the driver-side CSV tokenizer against Spark's reader,
+  * the one header rule, and the no-Spark-job ingest contract.
   */
 class IngestSpec extends SparkSpec {
+  import spark.implicits._
 
   test("smart csv falls back to plain read when keyword is absent") {
     val f = Files.createTempFile("graft", ".csv")
@@ -47,5 +53,155 @@ class IngestSpec extends SparkSpec {
       (p.split('/').last, b) }.toSet
     assert(routed == Set(
       ("玉山202401.csv", "esun_bank"), ("國泰202401.csv", "cube_bank")))
+  }
+
+  test("csvRows tokenizes like Spark's CSV reader with header and " +
+    "DROPMALFORMED") {
+    val lines = Seq(
+      "",
+      "a,b,c",
+      "1,\"x, y\",3",           // quoted comma
+      "2,\"say \"\"hi\"\"\",4",  // "" escape
+      "3,\"back \\\"slash\\\"\",5", // \" escape
+      "4,crlf,6\r",             // CRLF line end left on the line
+      "5,,7",                   // empty field
+      "6,\"\",8",               // quoted-empty field
+      "7,short",                // fewer fields than the header
+      "8,long,9,10",            // more fields than the header
+      "   ",                    // blank line
+      "a,b,c",                  // repeated header line
+      "9, padded ,\"\"")
+    val (header, rows) = Ingest.csvRows(lines)
+    val df = spark.read.option("header", "true")
+      .option("mode", "DROPMALFORMED").csv(lines.toDS())
+    assert(header == df.columns.toSeq)
+    val want = df.collect().toSeq.map(_.toSeq.map(_.asInstanceOf[String]))
+    assert(rows == want)
+    assert(rows.map(_.head) == Seq("1", "2", "3", "4", "5", "6", "9"))
+    assert(rows(4)(1) == null && rows(5)(1) == null)
+  }
+
+  /** The three formats share pandas' header rule: trimmed, a blank cell is
+    * `Unnamed: i`, a repeat gets `.1`; the first copy of a repeated mapped
+    * header keeps its name, so its column is mapped, and the second copy
+    * maps by its `.1` name.
+    */
+  private def assertHeaderRule(df: DataFrame, path: String,
+                               fileType: String): Unit = {
+    assert(df.columns.toSeq ==
+      Seq("交易日期", "Unnamed: 1", "金額", "金額.1", Ingest.RowIdx))
+    val cfg = EtlConfigs.BankConfig("test_bank", "test", fileType, "utf-8",
+      "交易日期", Seq("交易日期" -> Schema.TxnDate, "金額" -> Schema.Amount,
+        "金額.1" -> Schema.PayAmount))
+    val got = Extract.processBankFile(spark, path, "test_bank", cfg)
+      .select(Schema.TxnDate, Schema.Amount, Schema.PayAmount).collect().toSeq
+    assert(got == Seq(Row(java.sql.Date.valueOf("2024-01-05"), 100.0, 200.0)))
+  }
+
+  private def statement(dir: Path, name: String, text: String): String = {
+    val f = dir.resolve(name)
+    Files.write(f, text.getBytes("UTF-8"))
+    f.toString
+  }
+
+  test("header rule: CSV") {
+    val d = Files.createTempDirectory("graft-hdr")
+    val f = statement(d, "x202401.csv", " 交易日期 ,,金額,金額\n01/05,x,100,200\n")
+    assertHeaderRule(Ingest.smartReadCsv(spark, f, "utf-8", "交易日期"),
+      f, "csv")
+  }
+
+  test("header rule: HTML") {
+    val d = Files.createTempDirectory("graft-hdr")
+    val f = statement(d, "x202401.html",
+      "<table><tr><th> 交易日期 </th><th> </th><th>金額</th><th>金額</th></tr>" +
+        "<tr><td>01/05</td><td>x</td><td>100</td><td>200</td></tr></table>")
+    assertHeaderRule(Ingest.readHtmlTable(spark, f, "utf-8", "交易日期"),
+      f, "html")
+  }
+
+  test("header rule: XLSX") {
+    val f = Files.createTempDirectory("graft-hdr").resolve("x202401.xlsx")
+      .toString
+    Xlsx.writeSheets(f, Seq("s" -> Seq(
+      Seq(" 交易日期 ", null, "金額", "金額"),
+      Seq("01/05", "x", "100", "200"))))
+    assertHeaderRule(Xlsx.readFirstSheet(spark, f), f, "excel")
+  }
+
+  test("header rule: repeats compare case-insensitively, a new name may " +
+    "repeat too, and no header takes the row-index name") {
+    assert(Ingest.columnNames(Seq("a", "A", "a.1", "", "_ROW_IDX"),
+      caseSensitive = false) ==
+      Seq("a", "A.1", "a.1.1", "Unnamed: 3", "_ROW_IDX.1"))
+    assert(Ingest.columnNames(Seq("a", "A"), caseSensitive = true) ==
+      Seq("a", "A"))
+  }
+
+  test("rule tables: BOM dropped, a repeated column's first copy is read, " +
+    "blank and repeated header lines skipped") {
+    val d = Files.createTempDirectory("graft-rules")
+    val f = statement(d, "payment_gateway.csv",
+      "\uFEFFPattern,Category,Prefix_Label,Priority,Pattern\r\n" +
+        "LINE.*PAY,Line Pay,LinePay－,25,ignored\r\n\r\n" +
+        "Pattern,Category,Prefix_Label,Priority,Pattern\r\n" +
+        "街口,JKOPay,JKOPAY－,30,ignored\r\n")
+    assert(EtlConfigs.loadPaymentRules(f) == Seq(
+      EtlConfigs.PaymentRule("街口", "JKOPay", "JKOPAY－", 30.0),
+      EtlConfigs.PaymentRule("LINE.*PAY", "Line Pay", "LinePay－", 25.0)))
+  }
+
+  test("loading configs and decoding statements runs no Spark job") {
+    val d = Files.createTempDirectory("graft-ingest").toString
+    ExampleData.write(d)
+    val (extracted, jobs, _) = observe {
+      val cfg = Pipeline.loadConfigs(spark, s"$d/configs")
+      Extract.extractAll(spark, s"$d/data", cfg.banks)
+    }
+    assert(jobs == 0)
+    assert(extracted.count() == 13) // EtlPipelineSpec's extract count
+  }
+
+  /** Offences against the ingest contract in one `graft/etl` source: a
+    * driver-side Dataset, a partition-assigned row id, a DataFrame built
+    * outside `Ingest.table`, or a Spark CSV read outside `readStageCsv`.
+    */
+  private def offences(file: String, text: String): Seq[String] = {
+    val readStageCsv = "defreadStageCsv(spark:SparkSession,path:String)" +
+      """:DataFrame=spark.read.option("header","true").csv(path)"""
+    val flat = text.replaceAll("\\s+", "") match {
+      case t if file == "Load.scala" => t.replace(readStageCsv, "")
+      case t => t
+    }
+    val csvRead =
+      """\.read(?:\.option\([^)]*\))*\.(?:csv\(|format\("csv"\))""".r
+    Seq("createDataset", "monotonically_increasing_id")
+      .filter(flat.contains) ++
+      Seq("createDataFrame").filter(c =>
+        file != "Ingest.scala" && flat.contains(c)) ++
+      csvRead.findAllIn(flat).toSeq
+  }
+
+  test("under graft/etl, Ingest.table alone builds driver-parsed frames " +
+    "and readStageCsv is the one Spark CSV read") {
+    val dir = Paths.get("src/main/scala/graft/etl")
+    val walk = Files.list(dir)
+    val files = try walk.iterator().asScala.toList finally walk.close()
+    val texts = files.filter(_.toString.endsWith(".scala")).map(p =>
+      p.getFileName.toString -> new String(Files.readAllBytes(p), "UTF-8"))
+    assert(texts.map(_._1).contains("Load.scala"))
+    val found = texts.flatMap { case (f, t) => offences(f, t).map(f -> _) }
+    assert(found.isEmpty, s"ingest contract broken: $found")
+    // the scan sees the forms it forbids
+    val old = "val ds = spark.createDataset(lines).coalesce(1)\n" +
+      "val df = spark.read\n  .option(\"header\", \"true\")\n" +
+      "  .option(\"mode\", \"DROPMALFORMED\")\n  .csv(ds)\n" +
+      ".withColumn(RowIdx, monotonically_increasing_id())\n" +
+      "spark.createDataFrame(rdd, schema)"
+    assert(offences("Xlsx.scala", old).size == 4)
+    assert(offences("EtlConfigs.scala",
+      "spark.read.option(\"header\", \"true\").csv(path)").size == 1)
+    assert(offences("Load.scala", texts.toMap.apply("Load.scala")
+      .replace("readStageCsv", "readOther")).size == 1)
   }
 }

@@ -15,15 +15,18 @@ import graft.operators.Rfm
   * `all_transactions`, reference semantics end-to-end.
   *
   * Each analysis keeps what is its own — the merchant normalizer, payment
-  * tagging, the bank-fee/blacklist filters, card's trailing-365-day window,
-  * the reference-label segment ladders and the sorts — and takes the R/F/M
-  * aggregate, ranks and dual window from [[graft.operators.Rfm]].
+  * tagging and its segment ladder, the bank-fee/blacklist filters, card's
+  * trailing-365-day window, the reference's segment labels and the sorts —
+  * and takes the R/F/M aggregate, ranks, dual window and the merchant and
+  * card ladders from [[graft.operators.Rfm]].
   *
   * Plan shape per analysis (SURVEY §3 EP3): column-pruned scan → (UDF)
-  * normalize → filters → persisted upstream (filled by the analysis-date
-  * query, the only job run while building) → two groupBy branches →
-  * range-partitioned pct-rank operators over each group table → left
-  * join → segment ladder → sort. Rule tables ride in closures.
+  * normalize → filters → two groupBy branches → range-partitioned pct-rank
+  * operators over each group table → left join → segment ladder → sort.
+  * The analysis-date query is the only job run while building. Merchant
+  * persists its normalized input, which that query fills, so the UDF runs
+  * once; payment and card re-read their cheap scan. Rule tables ride in
+  * closures.
   */
 object Analyze {
 
@@ -110,7 +113,8 @@ object Analyze {
       txns.select("transaction_id", "transaction_date", "merchant_name",
         "payment_amount", "transaction_type"),
       merchantRules, paymentPrefixes(paymentRules))
-    // persisted: the analysis date and both windows read it
+    // persisted: the analysis date and both windows read it, and the
+    // normalizer UDF would otherwise run once per reader
     val filtered = CacheScope.persist(
       normalized.filter(!col("RFM_Exclusion") && notBankFee))
     // Category/Sub_Category per group: 'first' in file order in pandas; we
@@ -120,16 +124,10 @@ object Analyze {
       "transaction_date", "transaction_id", "payment_amount",
       lifeAggs = Seq(max(col("Category")).as("Category"),
         max(col("Sub_Category")).as("Sub_Category")))
-    val highValue = col("life_m_rank") >= 0.8
-    val active = col("short_frequency") > 0
     joined
-      .withColumn("segment",
-        when(highValue && active, "核心商家 (Core)")
-          .when(highValue && !active, "流失高價值 (Churned VIP)")
-          .when(!highValue && active && col("short_m_rank") >= 0.8,
-            "潛力新星 (Rising Star)")
-          .when(active, "一般活躍 (Active)")
-          .otherwise("沉睡商家 (Dormant)"))
+      .withColumn("segment", Rfm.merchantSegment(Seq("核心商家 (Core)",
+        "流失高價值 (Churned VIP)", "潛力新星 (Rising Star)",
+        "一般活躍 (Active)", "沉睡商家 (Dormant)")))
       .orderBy(col("life_monetary").desc)
   }
 
@@ -174,12 +172,11 @@ object Analyze {
     * sorted life_frequency desc.
     */
   def paymentRfm(txns: DataFrame, paymentRules: Seq[PaymentRule]): DataFrame = {
-    val tagged = CacheScope.persist(
-      txns.select("transaction_id", "transaction_date",
-          "merchant_name", "payment_amount", "transaction_type")
-        .withColumn("Payment_Method",
-          paymentMethod(col("merchant_name"), paymentRules))
-        .filter(notBankFee))
+    val tagged = txns.select("transaction_id", "transaction_date",
+        "merchant_name", "payment_amount", "transaction_type")
+      .withColumn("Payment_Method",
+        paymentMethod(col("merchant_name"), paymentRules))
+      .filter(notBankFee)
     val joined = Rfm.dualWindow(tagged, Seq("Payment_Method"),
       "transaction_date", "transaction_id", "payment_amount")
     val highFreq = col("life_f_rank") >= 0.7
@@ -213,11 +210,10 @@ object Analyze {
     * integer avg_ticket, sorted monetary desc.
     */
   def cardRfm(txns: DataFrame): DataFrame = {
-    val clean = CacheScope.persist(
-      txns.select("transaction_id", "transaction_date",
-          "payment_amount", "transaction_type", "bank_name", "card_name")
-        .filter(notBankFee &&
-          col("card_name").isNotNull && col("card_name") =!= ""))
+    val clean = txns.select("transaction_id", "transaction_date",
+        "payment_amount", "transaction_type", "bank_name", "card_name")
+      .filter(notBankFee &&
+        col("card_name").isNotNull && col("card_name") =!= "")
     val analysisDate = Rfm.analysisDate(clean, "transaction_date")
     val windowed = Rfm.since(clean, "transaction_date", analysisDate,
       1 + Rfm.ShortDays) // latest − 365d
@@ -225,15 +221,11 @@ object Analyze {
       Rfm.metrics(windowed, Seq("bank_name", "card_name"), "transaction_date",
         "transaction_id", "payment_amount", analysisDate),
       recency = false)
-    val highFreq = col("f_rank") >= 0.5
-    val highMoney = col("m_rank") >= 0.5
     ranked
-      .withColumn("segment",
-        when(col("recency_days") > 180, "❄️ 冷凍/沉睡卡 (Dormant)")
-          .when(highFreq && highMoney, "👑 主力攻擊手 (Main Driver)")
-          .when(!highFreq && highMoney, "🎯 狙擊手 (Sniper)")
-          .when(highFreq && !highMoney, "🔄 後勤補給 (Utility)")
-          .otherwise("📉 低效冗餘 (Inefficient)"))
+      .withColumn("segment", Rfm.cardSegment(Seq(
+        "❄️ 冷凍/沉睡卡 (Dormant)", "👑 主力攻擊手 (Main Driver)",
+        "🎯 狙擊手 (Sniper)", "🔄 後勤補給 (Utility)",
+        "📉 低效冗餘 (Inefficient)")))
       .withColumn("avg_ticket", Rfm.avgTicket)
       .orderBy(col("monetary").desc)
   }

@@ -123,7 +123,7 @@ object EtlConfigs {
   private def readCsvRows(path: String): Seq[Map[String, String]] = {
     val (header, rows) = Ingest.csvRows(
       Ingest.lines(Ingest.decode(path, "UTF-8").stripPrefix("\uFEFF")))
-    val names = Ingest.columnNames(header, caseSensitive = true)
+    val names = Ingest.columnNames(header)
     rows.map(r => names.zip(r.map(Option(_).getOrElse(""))).toMap)
   }
 

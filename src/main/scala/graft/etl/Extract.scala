@@ -1,7 +1,8 @@
 package graft.etl
 
+import java.util.regex.Pattern
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.etl.EtlConfigs.BankConfig
@@ -10,9 +11,12 @@ import graft.etl.Schema._
 /** Extract stage (etl.py EP1): per-bank statement files → unified
   * transaction table.
   *
-  * Everything is Column algebra — one narrow, shuffle-free whole-stage
-  * codegen pipeline per file (SURVEY §3 EP1). The only window (master-row
-  * fill-down) is per-file and ordered by the ingest `_row_idx`.
+  * Each file is read, header-mapped and master-row folded on the driver,
+  * where its rows already are in file order; all files then enter Spark
+  * as ONE table through [[Ingest.table]], and one narrow Column pipeline
+  * (SURVEY §3 EP1) runs the card extraction, bank-specific parses and
+  * cleanup over every file at once. The plan does not grow with the file
+  * count: no window, no union, no row-order column.
   */
 object Extract {
 
@@ -40,42 +44,63 @@ object Extract {
     * year−1; Dec bill + Jan txn → year+1); `YYYY/MM/DD` parses directly;
     * junk → null. try_to_date keeps invalid calendar dates null under ANSI.
     */
-  def parseDateWithYear(c: Column, baseYear: Int, billMonth: Int): Column = {
+  def parseDateWithYear(c: Column, baseYear: Int, billMonth: Int): Column =
+    // billMonth is a plan-time constant: branch in Scala rather than
+    // building `lit(billMonth) === 1` (a trivially-true/false Column
+    // predicate that fires Spark's "trivially true equals" warning and
+    // noises over real instances of that bug class)
+    parseDate(c) { m =>
+      billMonth match {
+        case 1 =>
+          when(m.cast("int") === 12, lit(baseYear - 1)).otherwise(lit(baseYear))
+        case 12 =>
+          when(m.cast("int") === 1, lit(baseYear + 1)).otherwise(lit(baseYear))
+        case _ => lit(baseYear)
+      }
+    }
+
+  /** [[parseDateWithYear]] with the filename year and month per row. The
+    * month test uses `try_cast`: Catalyst may hoist it out of its `when`,
+    * and under ANSI a plain cast of a non-date string would throw there.
+    */
+  def parseDateWithYear(c: Column, baseYear: Column,
+                        billMonth: Column): Column =
+    parseDate(c) { m =>
+      val month = m.try_cast("int")
+      when(billMonth === 1 && month === 12, baseYear - 1)
+        .when(billMonth === 12 && month === 1, baseYear + 1)
+        .otherwise(baseYear)
+    }
+
+  private def parseDate(c: Column)(year: Column => Column): Column = {
     val s = trim(c.cast("string"))
     val parts = split(s, "[/-]")
     val isTwo = s.rlike("^\\d{1,2}[/-]\\d{1,2}$")
     val isThree = s.rlike("^\\d{4}[/-]\\d{1,2}[/-]\\d{1,2}$")
     val m = parts.getItem(0)
     val d = parts.getItem(1)
-    // billMonth is a plan-time constant: branch in Scala rather than
-    // building `lit(billMonth) === 1` (a trivially-true/false Column
-    // predicate that fires Spark's "trivially true equals" warning and
-    // noises over real instances of that bug class)
-    val year = billMonth match {
-      case 1 =>
-        when(m.cast("int") === 12, lit(baseYear - 1)).otherwise(lit(baseYear))
-      case 12 =>
-        when(m.cast("int") === 1, lit(baseYear + 1)).otherwise(lit(baseYear))
-      case _ => lit(baseYear)
-    }
     when(isTwo,
-        try_to_date(concat_ws("-", year, m, d), "yyyy-M-d"))
+        try_to_date(concat_ws("-", year(m), m, d), "yyyy-M-d"))
       .when(isThree,
         try_to_date(concat_ws("-", parts.getItem(0), parts.getItem(1),
           parts.getItem(2)), "yyyy-M-d"))
       .otherwise(lit(null).cast("date"))
   }
 
-  // ------------------------------------------------------------ W1 + C2
-  /** Master-row card extraction (etl.py:154-203): esun/hncb statements put
-    * the card number/type on "master" header rows followed by that card's
-    * transactions. Tag masters by trigger regex, fill the raw master text
-    * down the file order, regex-extract card no/type, clear both on payment
-    * rows (繳款/轉帳 must not inherit a card, etl.py:186-196), drop masters.
-    *
-    * Per-file semantics: the reference only rewrites Card_No when the file
-    * has at least one master row (`if mask_master.any()`) — expressed here
-    * as a per-file window max over the master flag.
+  // ------------------------------------------------------------ S2-S5 + P1-P3
+  /** Canonical columns a bank's header cells map onto (etl.py:13-29). */
+  private val mappedColumns = extractOrder.filter(_ != BankName) :+
+    RawCountryCurr
+  /** Per-file columns: the filename's billing year and month (X8) and the
+    * folded master text (W1).
+    */
+  private val (baseYear, billMonth, masterText) =
+    ("_base_year", "_bill_month", "_master_text")
+
+  // ------------------------------------------------------------ W1 + F2
+  /** Master-row patterns (etl.py:154-203): esun/hncb statements put the
+    * card number/type on "master" rows, tagged by `trigger`, followed by
+    * that card's transactions.
     */
   private case class CardPatterns(trigger: String, cardNo: String,
                                   cardType: String)
@@ -85,158 +110,125 @@ object Extract {
     "hncb_bank" -> CardPatterns("\\*{12}", "\\*{12}(\\d{4})",
       "^(.*?)\\*{12}"))
 
-  def extractCardInfo(df: DataFrame, bankId: String): DataFrame =
-    cardPatterns.get(bankId) match {
-      case None => df
-      case Some(p) if !df.columns.contains(Merchant) => df
-      case Some(p) =>
-        val wFill = Window.orderBy(col(Ingest.RowIdx))
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        val wFile = Window.partitionBy() // one partition per statement file
-        val isMaster = coalesce(col(Merchant), lit("")).rlike(p.trigger)
-        val isPayment =
-          coalesce(col(Merchant), lit("")).rlike("繳款|轉帳")
-        // each window is planned once: both card columns read the temporaries
-        val (masterText, hasMaster) = ("_master_text", "_has_master")
-        def extracted(pat: String) =
-          nullif(regexp_extract(col(masterText), pat, 1), lit(""))
-        def card(c: String, pat: String) =
-          when(!col(hasMaster), col(c))
-            .when(isPayment, lit(null))
-            .otherwise(extracted(pat))
-        df
-          .withColumns(Map(
-            masterText -> last(when(isMaster, col(Merchant)),
-              ignoreNulls = true).over(wFill),
-            hasMaster -> (max(isMaster.cast("int")).over(wFile) === 1)))
-          .withColumns(Map(
-            CardNo -> card(CardNo, p.cardNo),
-            CardType -> card(CardType, p.cardType)))
-          .filter(!isMaster)
-          .drop(masterText, hasMaster)
+  /** One statement file's rows in file order, mapped onto
+    * [[mappedColumns]] by header index, plus the per-file columns. A master
+    * row is one whose `Merchant` (`""` when null) has a trigger match, the
+    * way `rlike` finds one; master rows are dropped and each other row
+    * carries the latest master text above it — `""` before the file's first
+    * master row, null when the file has none, which keeps its card columns
+    * (the reference rewrites cards only `if mask_master.any()`).
+    */
+  private def statementRows(path: String, bankId: String,
+                            cfg: BankConfig): Seq[Seq[String]] = {
+    val (header, rows) = cfg.fileType match {
+      case "html" => Ingest.htmlFile(path, cfg.encoding, cfg.headerKeyword)
+      case "excel" => Xlsx.firstSheet(path) // S5 (etl.py:311-315)
+      case _ => Ingest.csvFile(path, cfg.encoding, cfg.headerKeyword)
     }
-
-  // ------------------------------------------------------------ Node 4-1
-  /** esun foreign-detail split (etl.py:206-242): `merchant<2+ spaces|tab>
-    * place[ MM/DD]` → fixed merchant, Consumption_Place, Conversion_Date;
-    * then place copied into Merchant_Location (etl.py:354-357).
-    */
-  def parseEsunDetails(df: DataFrame): DataFrame = {
-    if (!df.columns.contains(Merchant)) return df
-    val m = trim(col(Merchant).cast("string"))
-    val pat = "^(.*?)(?:\\s{2,}|\\t)(.*?)(?:\\s+(\\d{2}/\\d{2}))?$"
-    val matches = m.rlike("(?:\\s{2,}|\\t)") // group 2 exists iff separator
-    val g1 = trim(regexp_extract(m, pat, 1))
-    val g2 = trim(regexp_extract(m, pat, 2))
-    val g3 = nullif(regexp_extract(m, pat, 3), lit(""))
-    // Location/place/date first — the Merchant overwrite must come LAST,
-    // since every expression here reads the original Merchant column
-    df
-      .withColumn(ConsumptionPlace,
-        when(matches, g2).otherwise(col(ConsumptionPlace)))
-      .withColumn(ConvDate,
-        when(matches && g3.isNotNull, g3).otherwise(col(ConvDate)))
-      .withColumn(Location,
-        when(matches, g2).otherwise(col(Location)))
-      .withColumn(Merchant, when(matches, g1).otherwise(m))
-  }
-
-  // ------------------------------------------------------------ Node 4-2
-  /** cube combined `TW / TWD` split (etl.py:244-254): location part is
-    * country-normalized immediately; currency part only set when present.
-    */
-  def parseCubeDetails(df: DataFrame): DataFrame = {
-    if (!df.columns.contains(RawCountryCurr)) return df
-    val raw = col(RawCountryCurr).cast("string")
-    val parts = split(raw, " / ", 2)
-    df
-      .withColumn(Location,
-        when(raw.isNotNull, normalizeCountry(trim(parts.getItem(0))))
-          .otherwise(col(Location)))
-      .withColumn(Currency,
-        when(raw.isNotNull && size(parts) >= 2, trim(parts.getItem(1)))
-          .otherwise(col(Currency)))
-      .drop(RawCountryCurr)
+    val names = Ingest.columnNames(header)
+    val sources = cfg.columnsMapping.filter { case (src, dst) =>
+      names.contains(src) && mappedColumns.contains(dst)
+    }
+    val repeated = sources.groupBy(_._2).filter(_._2.size > 1).keys
+    require(repeated.isEmpty,
+      s"two source columns map to ${repeated.mkString(", ")}")
+    val index = sources.map { case (src, dst) => dst -> names.indexOf(src) }
+      .toMap
+    val mapped = rows.map(r => mappedColumns.map(index.get(_).map(r).orNull))
+    val (year, month) =
+      Ingest.parseFilenameYearMonth(new java.io.File(path).getName)
+    val file = Seq(bankId, year.toString, month.toString)
+    val merchant = mappedColumns.indexOf(Merchant)
+    val trigger = cardPatterns.get(bankId).map(p => Pattern.compile(p.trigger))
+    def isMaster(r: Seq[String]) = trigger.exists(
+      _.matcher(Option(r(merchant)).getOrElse("")).find())
+    if (!mapped.exists(isMaster)) mapped.map(_ ++ file :+ null)
+    else mapped.foldLeft(("", Vector.empty[Seq[String]])) {
+      case ((master, out), r) =>
+        if (isMaster(r)) (Option(r(merchant)).getOrElse(master), out)
+        else (master, out :+ (r ++ file :+ master))
+    }._2
   }
 
   // ------------------------------------------------------------ pipeline
-  /** Nodes 2-5 for one ingested statement file (etl.py:259-440). */
-  def processBankFile(spark: SparkSession, path: String, bankId: String,
-                      cfg: BankConfig): DataFrame = {
-    val (baseYear, billMonth) =
-      Ingest.parseFilenameYearMonth(new java.io.File(path).getName)
+  /** Nodes 3-5 over the statement table (etl.py:154-440): card extraction
+    * from the folded master text (W1, C2), the bank-specific parses
+    * (Node 4, each guarded by `Bank_Name`), dates, amounts and the C1-C6
+    * cleanup, in extract order (P5).
+    */
+  private def transform(df: DataFrame): DataFrame = {
+    def is(bank: String) = col(BankName) === bank
+    val isPayment = coalesce(col(Merchant), lit("")).rlike("繳款|轉帳")
 
-    // Node 1: ingest (S2/S4 by file type)
-    val raw = cfg.fileType match {
-      case "html" =>
-        Ingest.readHtmlTable(spark, path, cfg.encoding, cfg.headerKeyword)
-      case "excel" => // S5 (etl.py:311-315, pd.read_excel)
-        Xlsx.readFirstSheet(spark, path)
-      case _ =>
-        Ingest.smartReadCsv(spark, path, cfg.encoding, cfg.headerKeyword)
+    // Node 3: card extraction (W1); payment rows (繳款/轉帳) must not
+    // inherit a card (C2, etl.py:186-196)
+    def card(c: String, pattern: CardPatterns => String) = {
+      val extracted = cardPatterns.foldLeft(lit(null).cast("string")) {
+        case (acc, (bank, p)) => when(is(bank),
+          nullif(regexp_extract(col(masterText), pattern(p), 1), lit("")))
+          .otherwise(acc)
+      }
+      when(col(masterText).isNull, col(c))
+        .when(isPayment, lit(null))
+        .otherwise(extracted)
     }
+    val carded = df.withColumns(Map(
+      CardNo -> card(CardNo, _.cardNo),
+      CardType -> card(CardType, _.cardType)))
 
-    // Node 2: mapped select + rename (P1), bank tag (P2), null init (P3)
-    val available = cfg.columnsMapping.filter {
-      case (src, _) => raw.columns.contains(src)
-    }
-    val mapped0 = raw.select( // quoted: a source name may hold a dot (`金額.1`)
-      (available.map { case (src, dst) =>
-        col(s"`${src.replace("`", "``")}`").as(dst) } :+
-        col(Ingest.RowIdx)): _*)
-      .withColumn(BankName, lit(bankId))
-    val needed = Seq(Location, Currency, ConvDate, CardNo, CardType,
-      PayAmount, PayCurrency, CurrAmount, Merchant, PostDate, TxnDate,
-      Amount, ConsumptionPlace, TxnType, MobilePay, RawCountryCurr)
-    val mapped = needed.foldLeft(mapped0) { (d, c) =>
-      if (d.columns.contains(c)) d
-      else d.withColumn(c, lit(null).cast("string"))
-    }
-
-    // Node 3: card extraction (W1)
-    val carded = extractCardInfo(mapped, bankId)
-
-    // Node 4: bank-specific parse
-    val banked = bankId match {
-      case "esun_bank" => parseEsunDetails(carded)
-      case "cube_bank" => parseCubeDetails(carded)
-      case "ctbc_bank" =>
-        carded
-          .withColumn(Location, coalesce(col(Location), lit("TW")))
-          .withColumn(Currency, coalesce(col(Currency), lit("TWD")))
-      case "hncb_bank" =>
-        carded.withColumn(Location, coalesce(col(Location), lit("TW")))
-      case _ => carded
-    }
-    val banked2 =
-      if (banked.columns.contains(RawCountryCurr)) banked.drop(RawCountryCurr)
-      else banked
+    // Node 4-1: esun foreign-detail split (etl.py:206-242): `merchant<2+
+    // spaces|tab>place[ MM/DD]` → fixed merchant, Consumption_Place,
+    // Conversion_Date; place copied into Merchant_Location (etl.py:354-357)
+    val m = trim(col(Merchant))
+    val pat = "^(.*?)(?:\\s{2,}|\\t)(.*?)(?:\\s+(\\d{2}/\\d{2}))?$"
+    val esunSplit = // group 2 exists iff separator
+      is("esun_bank") && m.rlike("(?:\\s{2,}|\\t)")
+    val place = trim(regexp_extract(m, pat, 2))
+    val convDate = nullif(regexp_extract(m, pat, 3), lit(""))
+    // Node 4-2: cube combined `TW / TWD` split (etl.py:244-254): location
+    // part country-normalized at once; currency part only set when present
+    val raw = col(RawCountryCurr)
+    val parts = split(raw, " / ", 2)
+    val cube = is("cube_bank") && raw.isNotNull
+    val banked = carded.withColumns(Map(
+      Merchant -> when(esunSplit, trim(regexp_extract(m, pat, 1)))
+        .when(is("esun_bank"), m).otherwise(col(Merchant)),
+      ConsumptionPlace ->
+        when(esunSplit, place).otherwise(col(ConsumptionPlace)),
+      ConvDate -> when(esunSplit && convDate.isNotNull, convDate)
+        .otherwise(col(ConvDate)),
+      Location -> when(esunSplit, place)
+        .when(cube, normalizeCountry(trim(parts.getItem(0))))
+        .when(is("ctbc_bank") || is("hncb_bank"),
+          coalesce(col(Location), lit("TW")))
+        .otherwise(col(Location)),
+      Currency -> when(cube && size(parts) >= 2, trim(parts.getItem(1)))
+        .when(is("ctbc_bank"), coalesce(col(Currency), lit("TWD")))
+        .otherwise(col(Currency))))
 
     // Node 5: general cleanup (C1-C6, X8, X11)
     // C1: strip the `.0` float artifact; all null-ish renderings ('nan',
     // 'NaN', 'None', '') → SQL null. (Deliberate deviation: the reference's
     // astype(str) leaks literal 'None' strings for payment rows —
     // etl.py:193 + 388 — which we normalize to null instead.)
-    val stripped = regexp_replace(col(CardNo).cast("string"), "\\.0$", "")
-    val cleanCard = banked2
+    val stripped = regexp_replace(col(CardNo), "\\.0$", "")
+    val cleanCard = banked
       .withColumn(CardNo,
         when(stripped.isNull || stripped.isin("nan", "NaN", "None", ""),
           lit(null)).otherwise(stripped))
+    val (y, mo) = (col(baseYear).cast("int"), col(billMonth).cast("int"))
     val dated = Seq(TxnDate, PostDate, ConvDate).foldLeft(cleanCard) {
-      (d, c) => d.withColumn(c, parseDateWithYear(col(c), baseYear, billMonth))
+      (d, c) => d.withColumn(c, parseDateWithYear(col(c), y, mo))
     }.filter(col(TxnDate).isNotNull) // F1
     val amounts = Seq(Amount, PayAmount, CurrAmount).foldLeft(dated) {
       (d, c) => d.withColumn(c, // X11: comma strip + coerce
-        regexp_replace(trim(col(c).cast("string")), ",", "")
-          .try_cast("double"))
+        regexp_replace(trim(col(c)), ",", "").try_cast("double"))
     }
     val backfilled = amounts // C3
       .withColumn(PayAmount, coalesce(col(PayAmount), col(Amount)))
       .withColumn(PayCurrency, coalesce(col(PayCurrency), lit("TWD")))
       .withColumn(Location, normalizeCountry(col(Location))) // X7
     val isTw = col(Location) === "TW"
-    val isPayment =
-      coalesce(col(Merchant).cast("string"), lit("")).rlike("繳款|轉帳")
     backfilled // C5 + C6
       .withColumn(Currency,
         when(isTw && !isPayment, lit(null))
@@ -244,23 +236,25 @@ object Extract {
           .otherwise(col(Currency)))
       .withColumn(CurrAmount,
         when(isTw && !isPayment, lit(null)).otherwise(col(CurrAmount)))
+      .select(extractOrder.map(col): _*)
   }
 
   /** EP1 end-to-end: scan the data directory, route each statement file to
-    * its bank, run the per-file pipeline, union (J6), ordered projection
-    * (P5). File scans parallelize as independent plan branches.
+    * its bank, read it on the driver, and run Nodes 3-5 over all files as
+    * one table, rows in file order then row order (J6).
     */
   def extractAll(spark: SparkSession, dataDir: String,
                  configs: Map[String, BankConfig]): DataFrame = {
-    val frames = Ingest.routeFiles(dataDir).flatMap { case (path, bankId) =>
+    val files = Ingest.routeFiles(dataDir).flatMap { case (path, bankId) =>
       configs.get(bankId).flatMap { cfg =>
-        // dead-letter semantics (etl.py:291-315): an unreadable statement
-        // file — corrupt CSV, legacy BIFF .xls, broken HTML — is skipped
+        // dead-letter semantics (etl.py:291-315): an unreadable or
+        // unmappable statement file — corrupt CSV, legacy BIFF .xls, broken
+        // HTML, two source columns on one canonical column — is skipped
         // with a warning and the rest of the batch proceeds; the reference
         // returns None per failed file rather than aborting the month.
         // Ingest is the driver-side decode step, so failures surface here
         // eagerly, never later inside a distributed job.
-        try Some(processBankFile(spark, path, bankId, cfg))
+        try Some(statementRows(path, bankId, cfg))
         catch {
           case scala.util.control.NonFatal(e) =>
             System.err.println(s"[extract] skipping $path: ${e.getMessage}")
@@ -268,9 +262,9 @@ object Extract {
         }
       }
     }
-    require(frames.nonEmpty, s"no bank statements found in $dataDir")
-    frames
-      .map(_.select(extractOrder.map(col): _*))
-      .reduce(_.unionByName(_, allowMissingColumns = true))
+    require(files.nonEmpty, s"no bank statements found in $dataDir")
+    transform(Ingest.table(spark,
+      mappedColumns ++ Seq(BankName, baseYear, billMonth, masterText),
+      files.flatten))
   }
 }

@@ -2,29 +2,25 @@ package graft.etl
 
 import java.nio.charset.{Charset, CodingErrorAction}
 import java.nio.file.{Files, Paths}
-import java.util.Locale
 
 import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
 import com.univocity.parsers.csv.CsvParser
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.csv.CSVOptions
-import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 /** Statement-file ingestion (SURVEY §2.1 S1-S4).
   *
   * Statements and rule tables are KB-sized files, so every reader decodes
-  * its file on the driver — CSV through [[csvRows]], HTML here, Excel in
-  * [[Xlsx]] — and hands a header plus string rows to [[table]], the one
-  * place driver-parsed rows become a DataFrame. No Spark job runs to read
-  * them; every transform downstream of the raw frame is Spark. Each file
-  * lands in ONE partition with `_row_idx` stored as data — statement row
-  * order is semantics-bearing (master-row fill-down, SURVEY §2.7 W1/W3).
+  * its file on the driver — CSV through [[csvFile]]/[[csvRows]], HTML
+  * through [[htmlFile]], Excel through `Xlsx.firstSheet` — into a header
+  * plus string rows in file order. Driver-parsed rows become a DataFrame
+  * only through [[table]], so no Spark job runs to read them; every
+  * transform downstream of that table is Spark.
   */
 object Ingest {
-
-  /** Row-order column added to every ingested file. */
-  val RowIdx = "_row_idx"
 
   private[etl] def decode(path: String, encoding: String): String = {
     // errors='replace' (etl.py:133): malformed bytes → U+FFFD, never throw
@@ -41,45 +37,38 @@ object Ingest {
 
   /** Column names by pandas' header rule (the reference reads every format
     * through pandas): trimmed (etl.py:319), a blank cell is `Unnamed: i`,
-    * and a repeated name gets `.1`, `.2`, … — repeats compared the way the
-    * caller resolves names, and never clashing with `_row_idx`.
+    * and a repeated name gets `.1`, `.2`, … — repeats compared exactly.
     */
-  def columnNames(cells: Seq[String],
-                  caseSensitive: Boolean): Seq[String] = {
-    def key(n: String) = if (caseSensitive) n else n.toLowerCase(Locale.ROOT)
-    val seen = mutable.Map(key(RowIdx) -> 1).withDefaultValue(0)
+  def columnNames(cells: Seq[String]): Seq[String] = {
+    val seen = mutable.Map.empty[String, Int].withDefaultValue(0)
     cells.zipWithIndex.map { case (c, i) =>
       val trimmed = Option(c).map(_.trim).getOrElse("")
       var name = if (trimmed.isEmpty) s"Unnamed: $i" else trimmed
-      var n = seen(key(name))
+      var n = seen(name)
       while (n > 0) { // pandas' _dedup_names: a new name may repeat too
-        seen(key(name)) = n + 1
+        seen(name) = n + 1
         name = s"$name.$n"
-        n = seen(key(name))
+        n = seen(name)
       }
-      seen(key(name)) = 1
+      seen(name) = 1
       name
     }
   }
 
-  /** The one constructor of a DataFrame from a driver-parsed file:
-    * all-string columns named by [[columnNames]], plus `_row_idx` = the
-    * row's position, in a single partition (one plan branch per file; a
-    * local relation would split the file, and once coalesced Spark's union
-    * would merge files).
+  /** The one constructor of a DataFrame from driver-parsed rows: all-string
+    * columns named `names`, rows in the given order, as a local relation.
+    * Catalyst folds a narrow Project/Filter chain over it into the relation
+    * while optimizing, and a scan slices it by Spark's default.
     */
-  def table(spark: SparkSession, header: Seq[String],
+  def table(spark: SparkSession, names: Seq[String],
             rows: Seq[Seq[String]]): DataFrame = {
-    val names = columnNames(header,
-      spark.sessionState.conf.caseSensitiveAnalysis)
     val data = rows.zipWithIndex.map { case (r, i) =>
       require(r.length == names.length,
         s"row $i has ${r.length} cells, header has ${names.length}")
-      Row.fromSeq(r :+ i.toLong)
+      Row.fromSeq(r)
     }
-    val schema = StructType(names.map(StructField(_, StringType)) :+
-      StructField(RowIdx, LongType, nullable = false))
-    spark.createDataFrame(spark.sparkContext.parallelize(data, 1), schema)
+    spark.createDataFrame(data.asJava,
+      StructType(names.map(StructField(_, StringType))))
   }
 
   private val csvOptions = new CSVOptions(
@@ -112,24 +101,23 @@ object Ingest {
     * (malformed lines dropped). Falls back to a plain header=0 read when the
     * keyword is absent.
     */
-  def smartReadCsv(spark: SparkSession, path: String, encoding: String,
-                   headerKeyword: String): DataFrame = {
+  def csvFile(path: String, encoding: String,
+              headerKeyword: String): (Seq[String], Seq[Seq[String]]) = {
     val all = lines(decode(path, encoding))
     val headerIdx = all.take(51).zipWithIndex.collectFirst {
       case (l, i) if headerKeyword.nonEmpty && l.contains(headerKeyword) => i
     }
-    val (header, rows) = csvRows(headerIdx.map(all.drop).getOrElse(all))
-    table(spark, header, rows)
+    csvRows(headerIdx.map(all.drop).getOrElse(all))
   }
 
   /** HTML table source (etl.py:289-304, hncb): find the `<table>` whose text
     * contains the header keyword, first row = header (newlines in header
-    * cells flattened to single spaces, etl.py:301), rest = data. Minimal
-    * tag-stripping parser — no HTML lib ships with Spark, and statement
-    * pages are simple generated tables.
+    * cells flattened to single spaces, etl.py:301), rest = data padded or
+    * cut to the header's width. Minimal tag-stripping parser — no HTML lib
+    * ships with Spark, and statement pages are simple generated tables.
     */
-  def readHtmlTable(spark: SparkSession, path: String, encoding: String,
-                    headerKeyword: String): DataFrame = {
+  def htmlFile(path: String, encoding: String,
+               headerKeyword: String): (Seq[String], Seq[Seq[String]]) = {
     val html = decode(path, encoding)
     val tables = """(?is)<table\b.*?</table>""".r
       .findAllIn(html).toSeq
@@ -143,7 +131,7 @@ object Ingest {
     val header = rows.head.map(h =>
       h.replace("\n", " ").split("\\s+").filter(_.nonEmpty).mkString(" "))
     val width = header.length
-    table(spark, header, rows.tail.map(_.padTo(width, "").take(width)))
+    (header, rows.tail.map(_.padTo(width, "").take(width)))
   }
 
   private def stripTags(s: String): String =

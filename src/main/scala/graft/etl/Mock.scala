@@ -139,20 +139,14 @@ object Mock {
   /** README raw-vs-refined comparison table (generate_mock.py:338-352):
     * the first `n` rows of the masked raw frame next to their refined
     * twins as a GitHub-markdown table — raw merchant truncated to 15
-    * chars, refined merchant/type/amount alongside. Row alignment is by
-    * `_row_idx` when present (the reference's pandas frames align by
-    * index), positional otherwise. Driver-side by design: this is n-row
-    * README tooling, same class as the Xlsx config export.
+    * chars, refined merchant/type/amount alongside. Rows align by position
+    * (the reference's pandas frames align by index). Driver-side by design:
+    * this is n-row README tooling, same class as the Xlsx config export.
     */
   def readmeComparisonTable(raw: DataFrame, refined: DataFrame,
                             n: Int = 5): String = {
-    def firstN(df: DataFrame, cols: Seq[String]) = {
-      val ordered =
-        if (df.columns.contains(Ingest.RowIdx))
-          df.orderBy(col(Ingest.RowIdx))
-        else df
-      ordered.select(cols.map(col): _*).limit(n).collect()
-    }
+    def firstN(df: DataFrame, cols: Seq[String]) =
+      df.select(cols.map(col): _*).limit(n).collect()
     def str(v: Any): String = Option(v).map(_.toString).getOrElse("")
     val rawRows = firstN(raw, Seq(Schema.Merchant))
     val refRows = firstN(refined,

@@ -26,7 +26,7 @@ import scala.collection.mutable
   *    LABELSST / LABEL / BOOLERR / FORMULA(+STRING).
   *
   * Output is the exact [[Xlsx.Sheet]] contract (all-string cells, date
-  * serials rendered ISO), so `Xlsx.readSheets`/`readFirstSheet` dispatch
+  * serials rendered ISO), so `Xlsx.readSheets`/`firstSheet` dispatch
   * on the OLE2 magic and every downstream consumer is container-agnostic.
   * Like the XLSX path, statement files are KB-sized monthly exports: the
   * decode is driver-side, the parsed body becomes a DataFrame, and

@@ -9,15 +9,13 @@ import javax.xml.stream.{XMLInputFactory, XMLStreamConstants, XMLStreamReader}
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-
 /** Dependency-free XLSX source (SURVEY §2.1 S5).
   *
   * Covers the reference's two Excel entry points:
   *  - `pd.read_excel(filepath)` on a statement file (etl.py:311-315) →
-  *    [[readFirstSheet]]: first sheet, first row as header, all-string
-  *    cells, `_row_idx` row order — the same contract as the smart-CSV
-  *    and HTML sources so `Extract.processBankFile` is format-agnostic.
+  *    [[firstSheet]]: first sheet's header cells and rows in sheet order,
+  *    all strings — the `(header, rows)` contract of the smart-CSV and
+  *    HTML sources, so `Extract` is format-agnostic.
   *  - `pd.read_excel(source, sheet_name=None, dtype=str)` + per-sheet
   *    `dropna(how='all')` + `to_csv(encoding='utf-8-sig')`
   *    (convert_model.py:56-67, the config-master exporter) →
@@ -33,7 +31,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * Statement files are KB-sized monthly exports, so — exactly like the
   * smart-CSV and HTML sources (Ingest.scala) — the decode runs on the
-  * driver and the parsed body enters Spark through [[Ingest.table]];
+  * driver and `Extract` hands the mapped rows to [[Ingest.table]];
   * everything downstream is distributed Spark. This is NOT a path for
   * warehouse-scale data (that stays parquet).
   */
@@ -95,17 +93,15 @@ object Xlsx {
     } finally zip.close()
   }
 
-  /** `pd.read_excel(filepath)` shape: first sheet, first row = header,
-    * body as [[Ingest.table]] builds every driver-parsed file — all-string
-    * columns under pandas' header rule, one partition, `_row_idx` row
-    * order (master-row fill-down, SURVEY §2.7 W1/W3).
+  /** `pd.read_excel(filepath)` shape: the first sheet's first row as the
+    * header cells, the rest as rows; a blank cell is null.
     */
-  def readFirstSheet(spark: SparkSession, path: String): DataFrame = {
+  def firstSheet(path: String): (Seq[String], Seq[Seq[String]]) = {
     val sheet = readSheets(path).headOption.getOrElse(
       throw new IllegalArgumentException(s"$path: workbook has no sheets"))
     require(sheet.rows.nonEmpty, s"$path: first sheet is empty")
-    Ingest.table(spark, sheet.rows.head.map(_.orNull),
-      sheet.rows.tail.map(_.map(_.orNull)))
+    val cells = sheet.rows.map(_.map(_.orNull))
+    (cells.head, cells.tail)
   }
 
   /** convert_model.py:56-67: read every sheet, and for each

@@ -102,10 +102,10 @@ object Rfm {
     * keys with the reference's fill discipline. `lifeAggs` ride along on
     * the lifetime side. The analysis date and both windows read `df`, so
     * a caller whose input is costly to recompute persists it first (the
-    * pipeline's analyses do; a cached plain scan would only add AQE's
-    * cache-materializing job). The join inputs are post-aggregation group
-    * tables — at cluster scale Catalyst broadcast-joins the short side
-    * (always <= lifetime side).
+    * pipeline's merchant analysis does, for its normalizer UDF; a cached
+    * plain scan would only add AQE's cache-materializing job). The join
+    * inputs are post-aggregation group tables — at cluster scale Catalyst
+    * broadcast-joins the short side (always <= lifetime side).
     */
   def dualWindow(df: DataFrame, keys: Seq[String], dateCol: String,
                  idCol: String, amountCol: String,
@@ -121,28 +121,34 @@ object Rfm {
       .na.fill(9999, Seq("short_recency_days"))
   }
 
-  /** Merchant-style segment ladder (db_to_RFManalysis.py:258-268), English
-    * labels. First-match-wins `when` chain == the reference's if/elif ladder.
+  /** Merchant-style segment ladder (db_to_RFManalysis.py:258-268), with
+    * `labels` for Core, Churned VIP, Rising Star, Active and Dormant, in
+    * that order. First-match-wins `when` chain == the reference's if/elif
+    * ladder.
     */
-  def merchantSegment: Column = {
+  def merchantSegment(labels: Seq[String]): Column = {
+    val Seq(core, churnedVip, risingStar, activeLabel, dormant) = labels
     val highValue = col("life_m_rank") >= 0.8
     val active = col("short_frequency") > 0
-    when(highValue && active, "Core")
-      .when(highValue && !active, "Churned VIP")
-      .when(!highValue && active && col("short_m_rank") >= 0.8, "Rising Star")
-      .when(active, "Active")
-      .otherwise("Dormant")
+    when(highValue && active, core)
+      .when(highValue && !active, churnedVip)
+      .when(!highValue && active && col("short_m_rank") >= 0.8, risingStar)
+      .when(active, activeLabel)
+      .otherwise(dormant)
   }
 
-  /** Card-style segment ladder (db_to_card_RFM.py:55-74). */
-  def cardSegment: Column = {
+  /** Card-style segment ladder (db_to_card_RFM.py:55-74), with `labels` for
+    * Dormant, Main Driver, Sniper, Utility and Inefficient, in that order.
+    */
+  def cardSegment(labels: Seq[String]): Column = {
+    val Seq(dormant, mainDriver, sniper, utility, inefficient) = labels
     val highFreq = col("f_rank") >= 0.5
     val highMoney = col("m_rank") >= 0.5
-    when(col("recency_days") > 180, "Dormant")
-      .when(highFreq && highMoney, "Main Driver")
-      .when(!highFreq && highMoney, "Sniper")
-      .when(highFreq && !highMoney, "Utility")
-      .otherwise("Inefficient")
+    when(col("recency_days") > 180, dormant)
+      .when(highFreq && highMoney, mainDriver)
+      .when(!highFreq && highMoney, sniper)
+      .when(highFreq && !highMoney, utility)
+      .otherwise(inefficient)
   }
 
   /** `avg_ticket = int(monetary / frequency)` — truncation toward zero via

@@ -185,7 +185,8 @@ object RelationalQueries {
     val ad = Rfm.analysisDate(base, "o_orderdate")
     Rfm.aggregate(base, Seq("o_custkey"), "o_orderdate", "o_orderkey",
         "o_totalprice", ad)
-      .withColumn("segment", Rfm.cardSegment)
+      .withColumn("segment", Rfm.cardSegment(Seq("Dormant", "Main Driver",
+        "Sniper", "Utility", "Inefficient")))
       .withColumn("avg_ticket", Rfm.avgTicket)
       .orderBy(col("monetary").desc, col("o_custkey").asc)
   }
@@ -234,7 +235,8 @@ object RelationalQueries {
     val base = Tables.orders(s, dir).filter(col("o_orderstatus") =!= "P")
     Rfm.dualWindow(base, Seq("o_custkey"), "o_orderdate", "o_orderkey",
         "o_totalprice")
-      .withColumn("segment", Rfm.merchantSegment)
+      .withColumn("segment", Rfm.merchantSegment(Seq("Core", "Churned VIP",
+        "Rising Star", "Active", "Dormant")))
       .orderBy(col("life_monetary").desc, col("o_custkey").asc)
   }
 

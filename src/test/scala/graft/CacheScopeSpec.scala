@@ -72,9 +72,11 @@ class CacheScopeSpec extends SparkSpec {
   /** One operator whose returned plan reads a cache it persisted.
     * `checkpoints`: its plan also holds `localCheckpoint` RDDs, which are
     * not cache entries and outlive any scope until garbage-collected.
+    * `persists = false`: an operator that must persist nothing at all,
+    * inside or outside a scope (its input is too cheap to cache).
     */
   private case class Op(name: String, checkpoints: Boolean,
-                        build: () => DataFrame)
+                        build: () => DataFrame, persists: Boolean = true)
 
   private val ops = Seq(
     Op("Curation.topTfidfTerm", false,
@@ -102,8 +104,9 @@ class CacheScopeSpec extends SparkSpec {
     Op("Analyze.merchantRfm", false,
       () => Analyze.merchantRfm(txns, cfg.merchants, cfg.payments)),
     Op("Analyze.paymentRfm", false,
-      () => Analyze.paymentRfm(txns, cfg.payments)),
-    Op("Analyze.cardRfm", false, () => Analyze.cardRfm(txns)))
+      () => Analyze.paymentRfm(txns, cfg.payments), persists = false),
+    Op("Analyze.cardRfm", false, () => Analyze.cardRfm(txns),
+      persists = false))
 
   private def rows(df: DataFrame): Seq[Row] =
     df.collect().toSeq.sortBy(_.toString)
@@ -135,8 +138,12 @@ class CacheScopeSpec extends SparkSpec {
         "the scope left a cache behind on throw")
       // outside any scope the operator's cache stays, as before
       val plain = rows(op.build())
-      assert(CacheEntries.count(spark) > entries && leftBehind().nonEmpty,
-        "the operator persisted nothing, so the checks above prove nothing")
+      if (op.persists)
+        assert(CacheEntries.count(spark) > entries && leftBehind().nonEmpty,
+          "the operator persisted nothing, so the checks above prove nothing")
+      else
+        assert(CacheEntries.count(spark) == entries && leftBehind().isEmpty,
+          "an operator that should persist nothing left a cache behind")
       spark.catalog.clearCache()
       assert(scoped.nonEmpty && scoped == plain)
     }

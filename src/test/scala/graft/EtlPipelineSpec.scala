@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -54,6 +54,12 @@ class EtlPipelineSpec extends SparkSpec {
     val cfg2 = Pipeline.loadConfigs(spark, s"$d2/configs")
     val got = Extract.extractAll(spark, s"$d2/data", cfg2.banks)
     assert(got.count() == extracted.count()) // good files all intact
+    // so is a file whose two source columns map to one canonical column
+    val esun = cfg2.banks("esun_bank")
+    val twoOnOne = cfg2.banks.updated("esun_bank", esun.copy(columnsMapping =
+      esun.columnsMapping :+ ("外幣金額" -> Schema.Amount)))
+    assert(Extract.extractAll(spark, s"$d2/data", twoOnOne).count() ==
+      extracted.count() - 4)
   }
 
   test("extract: legacy BIFF .xls statement ingests end-to-end (S5)") {
@@ -107,16 +113,40 @@ class EtlPipelineSpec extends SparkSpec {
     assert(coffee(Schema.CardType) == "華南經典卡")
   }
 
-  test("extract: a master-row file plans its fill-down and per-file " +
-    "windows once for both card columns") {
-    def windows(df: DataFrame) = df.queryExecution.optimizedPlan.collect {
-      case w: org.apache.spark.sql.catalyst.plans.logical.Window => w
-    }.size
-    for ((file, bank) <- Seq("玉山113年1月帳單.csv" -> "esun_bank",
-        "華南202401.html" -> "hncb_bank"))
-      assert(windows(Extract.processBankFile(spark, s"$dir/data/$file", bank,
-        cfg.banks(bank))) == 2, file)
-    assert(windows(Extract.extractAll(spark, s"$dir/data", cfg.banks)) == 4)
+  test("extract: the master-row fill-down resets at every file") {
+    // the second file's first row comes before its first master row: it
+    // gets no card — neither the first file's last card nor its own raw one
+    val d = Files.createTempDirectory("graft-etl-masters")
+    def put(name: String, body: String*) = Files.write(d.resolve(name),
+      ("交易日期,入帳日期,卡號末四碼,交易說明,外幣金額,臺幣金額" +: body)
+        .mkString("", "\n", "\n").getBytes("UTF-8"))
+    put("玉山202401.csv",
+      "01/05,01/06,,卡號：1111-2222-3333-4444（玉山Unicard－正卡）,,",
+      "01/06,01/07,,全聯福利中心,,500")
+    put("玉山202402.csv",
+      "02/01,02/02,5555,早餐店,,80",
+      "02/02,02/03,,卡號：9999-8888-7777-6666（玉山Pi卡－正卡）,,",
+      "02/03,02/04,,書局,,300")
+    val got = Extract.extractAll(spark, d.toString, cfg.banks)
+      .select(Schema.Merchant, Schema.CardNo, Schema.CardType).collect()
+      .map(r => (r.getString(0), r.getString(1), r.getString(2))).toSeq
+    assert(got == Seq(("全聯福利中心", "4444", "玉山Unicard"),
+      ("早餐店", null, null), ("書局", "6666", "玉山Pi卡")))
+  }
+
+  test("extract: one plan for any file count, no Window or Union") {
+    import org.apache.spark.sql.catalyst.plans.logical.{Union, Window}
+    val one = Files.createTempDirectory("graft-etl-one")
+    Files.copy(Paths.get(s"$dir/data/玉山113年1月帳單.csv"),
+      one.resolve("玉山113年1月帳單.csv"))
+    def nodes(data: String) = {
+      val qe = Extract.extractAll(spark, data, cfg.banks).queryExecution
+      assert(qe.optimizedPlan.collect {
+        case p @ (_: Window | _: Union) => p }.isEmpty, data)
+      (qe.analyzed.collect { case p => p }.size,
+        qe.optimizedPlan.collect { case p => p }.size)
+    }
+    assert(nodes(one.toString) == nodes(s"$dir/data"))
   }
 
   test("extract: esun foreign split fills place/location/conversion date") {

@@ -4,7 +4,7 @@ import java.nio.file.{Files, Path, Paths}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.Row
 
 import graft.etl._
 
@@ -19,9 +19,9 @@ class IngestSpec extends SparkSpec {
   test("smart csv falls back to plain read when keyword is absent") {
     val f = Files.createTempFile("graft", ".csv")
     Files.write(f, "a,b\n1,2\n3,4\n".getBytes("UTF-8"))
-    val df = Ingest.smartReadCsv(spark, f.toString, "utf-8", "不存在")
-    assert(df.columns.take(2).toSeq == Seq("a", "b"))
-    assert(df.count() == 2)
+    val (header, rows) = Ingest.csvFile(f.toString, "utf-8", "不存在")
+    assert(header == Seq("a", "b"))
+    assert(rows == Seq(Seq("1", "2"), Seq("3", "4")))
   }
 
   test("header scan only looks at the first ~50 lines") {
@@ -30,8 +30,8 @@ class IngestSpec extends SparkSpec {
     val f = Files.createTempFile("graft", ".csv")
     Files.write(f, lines.mkString("\n").getBytes("UTF-8"))
     // keyword beyond line 50 → fallback plain read, junk_1 becomes header
-    val df = Ingest.smartReadCsv(spark, f.toString, "utf-8", "交易日期")
-    assert(df.columns.head == "junk_1")
+    val (header, _) = Ingest.csvFile(f.toString, "utf-8", "交易日期")
+    assert(header == Seq("junk_1"))
   }
 
   test("filename year/month: western, ROC, and the ROC-regex quirk") {
@@ -84,16 +84,18 @@ class IngestSpec extends SparkSpec {
   /** The three formats share pandas' header rule: trimmed, a blank cell is
     * `Unnamed: i`, a repeat gets `.1`; the first copy of a repeated mapped
     * header keeps its name, so its column is mapped, and the second copy
-    * maps by its `.1` name.
+    * maps by its `.1` name. `path` is a sinopac statement alone in its dir.
     */
-  private def assertHeaderRule(df: DataFrame, path: String,
-                               fileType: String): Unit = {
-    assert(df.columns.toSeq ==
-      Seq("交易日期", "Unnamed: 1", "金額", "金額.1", Ingest.RowIdx))
-    val cfg = EtlConfigs.BankConfig("test_bank", "test", fileType, "utf-8",
-      "交易日期", Seq("交易日期" -> Schema.TxnDate, "金額" -> Schema.Amount,
-        "金額.1" -> Schema.PayAmount))
-    val got = Extract.processBankFile(spark, path, "test_bank", cfg)
+  private def assertHeaderRule(file: (Seq[String], Seq[Seq[String]]),
+                               path: String, fileType: String): Unit = {
+    assert(Ingest.columnNames(file._1) ==
+      Seq("交易日期", "Unnamed: 1", "金額", "金額.1"))
+    assert(file._2 == Seq(Seq("01/05", "x", "100", "200")))
+    val cfg = EtlConfigs.BankConfig("sinopac_bank", "test", fileType,
+      "utf-8", "交易日期", Seq("交易日期" -> Schema.TxnDate,
+        "金額" -> Schema.Amount, "金額.1" -> Schema.PayAmount))
+    val got = Extract.extractAll(spark, Paths.get(path).getParent.toString,
+      Map("sinopac_bank" -> cfg))
       .select(Schema.TxnDate, Schema.Amount, Schema.PayAmount).collect().toSeq
     assert(got == Seq(Row(java.sql.Date.valueOf("2024-01-05"), 100.0, 200.0)))
   }
@@ -106,36 +108,31 @@ class IngestSpec extends SparkSpec {
 
   test("header rule: CSV") {
     val d = Files.createTempDirectory("graft-hdr")
-    val f = statement(d, "x202401.csv", " 交易日期 ,,金額,金額\n01/05,x,100,200\n")
-    assertHeaderRule(Ingest.smartReadCsv(spark, f, "utf-8", "交易日期"),
-      f, "csv")
+    val f = statement(d, "永豐202401.csv",
+      " 交易日期 ,,金額,金額\n01/05,x,100,200\n")
+    assertHeaderRule(Ingest.csvFile(f, "utf-8", "交易日期"), f, "csv")
   }
 
   test("header rule: HTML") {
     val d = Files.createTempDirectory("graft-hdr")
-    val f = statement(d, "x202401.html",
+    val f = statement(d, "永豐202401.html",
       "<table><tr><th> 交易日期 </th><th> </th><th>金額</th><th>金額</th></tr>" +
         "<tr><td>01/05</td><td>x</td><td>100</td><td>200</td></tr></table>")
-    assertHeaderRule(Ingest.readHtmlTable(spark, f, "utf-8", "交易日期"),
-      f, "html")
+    assertHeaderRule(Ingest.htmlFile(f, "utf-8", "交易日期"), f, "html")
   }
 
   test("header rule: XLSX") {
-    val f = Files.createTempDirectory("graft-hdr").resolve("x202401.xlsx")
+    val f = Files.createTempDirectory("graft-hdr").resolve("永豐202401.xlsx")
       .toString
     Xlsx.writeSheets(f, Seq("s" -> Seq(
       Seq(" 交易日期 ", null, "金額", "金額"),
       Seq("01/05", "x", "100", "200"))))
-    assertHeaderRule(Xlsx.readFirstSheet(spark, f), f, "excel")
+    assertHeaderRule(Xlsx.firstSheet(f), f, "excel")
   }
 
-  test("header rule: repeats compare case-insensitively, a new name may " +
-    "repeat too, and no header takes the row-index name") {
-    assert(Ingest.columnNames(Seq("a", "A", "a.1", "", "_ROW_IDX"),
-      caseSensitive = false) ==
-      Seq("a", "A.1", "a.1.1", "Unnamed: 3", "_ROW_IDX.1"))
-    assert(Ingest.columnNames(Seq("a", "A"), caseSensitive = true) ==
-      Seq("a", "A"))
+  test("header rule: repeats compare exactly") {
+    assert(Ingest.columnNames(Seq("a", "A", "a.1", "", "a", "_row_idx")) ==
+      Seq("a", "A", "a.1", "Unnamed: 3", "a.1.1", "_row_idx"))
   }
 
   test("rule tables: BOM dropped, a repeated column's first copy is read, " +
@@ -163,8 +160,11 @@ class IngestSpec extends SparkSpec {
   }
 
   /** Offences against the ingest contract in one `graft/etl` source: a
-    * driver-side Dataset, a partition-assigned row id, a DataFrame built
-    * outside `Ingest.table`, or a Spark CSV read outside `readStageCsv`.
+    * driver-side Dataset, a partition-assigned or stored row id, a
+    * DataFrame built outside `Ingest.table`, a Spark CSV read outside
+    * `readStageCsv`, or a window or union, which would split the one
+    * statement table by file again. `Mock` samples and perturbs extracted
+    * frames, not statement files, so its windows and unions stay.
     */
   private def offences(file: String, text: String): Seq[String] = {
     val readStageCsv = "defreadStageCsv(spark:SparkSession,path:String)" +
@@ -175,11 +175,13 @@ class IngestSpec extends SparkSpec {
     }
     val csvRead =
       """\.read(?:\.option\([^)]*\))*\.(?:csv\(|format\("csv"\))""".r
-    Seq("createDataset", "monotonically_increasing_id")
+    val perFile = """\bWindow\b|\bunionByName\b""".r
+    Seq("createDataset", "monotonically_increasing_id", "_row_idx")
       .filter(flat.contains) ++
       Seq("createDataFrame").filter(c =>
         file != "Ingest.scala" && flat.contains(c)) ++
-      csvRead.findAllIn(flat).toSeq
+      csvRead.findAllIn(flat).toSeq ++
+      (if (file == "Mock.scala") Nil else perFile.findAllIn(text).toSeq)
   }
 
   test("under graft/etl, Ingest.table alone builds driver-parsed frames " +
@@ -199,6 +201,13 @@ class IngestSpec extends SparkSpec {
       ".withColumn(RowIdx, monotonically_increasing_id())\n" +
       "spark.createDataFrame(rdd, schema)"
     assert(offences("Xlsx.scala", old).size == 4)
+    val perFile = "import org.apache.spark.sql.expressions.Window\n" +
+      "val RowIdx = \"_row_idx\"\n" +
+      "frames.reduce(_.unionByName(_, allowMissingColumns = true))"
+    assert(offences("Extract.scala", perFile) ==
+      Seq("_row_idx", "Window", "unionByName"))
+    assert(offences("Mock.scala", perFile) == Seq("_row_idx"))
+    assert(offences("Analyze.scala", "Rfm.dualWindow(df)").isEmpty)
     assert(offences("EtlConfigs.scala",
       "spark.read.option(\"header\", \"true\").csv(path)").size == 1)
     assert(offences("Load.scala", texts.toMap.apply("Load.scala")

@@ -77,9 +77,11 @@ class RfmSpec extends SparkSpec {
       (10, 0.9, 0.2),  // utility
       (10, 0.2, 0.2)   // inefficient
     ).toDF("recency_days", "f_rank", "m_rank")
-    val got = df.select(Rfm.cardSegment.as("s")).as[String].collect().toSeq
-    assert(got == Seq("Dormant", "Main Driver", "Sniper", "Utility",
-      "Inefficient"))
+    val labels = Seq("Dormant", "Main Driver", "Sniper", "Utility",
+      "Inefficient")
+    val got = df.select(Rfm.cardSegment(labels).as("s")).as[String]
+      .collect().toSeq
+    assert(got == labels)
   }
 
   test("avg ticket truncates toward zero like pandas astype(int)") {

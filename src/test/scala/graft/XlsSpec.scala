@@ -3,14 +3,16 @@ package graft
 import java.nio.{ByteBuffer, ByteOrder}
 import java.nio.file.Files
 
-import graft.etl.{Xls, Xlsx}
+import org.scalatest.funsuite.AnyFunSuite
+
+import graft.etl.{Ingest, Xls, Xlsx}
 
 /** Legacy BIFF8 `.xls` source: CFB container + BIFF record layer.
   * Round-trips go through the real writer (which itself exercises the
   * ministream layout for small files); the CONTINUE-split and RK cases
   * are hand-crafted byte streams, since the writer never emits them.
   */
-class XlsSpec extends SparkSpec {
+class XlsSpec extends AnyFunSuite {
 
   private def tmp(name: String): String = {
     val d = Files.createTempDirectory("xls-spec")
@@ -45,18 +47,16 @@ class XlsSpec extends SparkSpec {
       Vector(Some("h1"), Some("h2")), Vector(Some("a"), Some("7"))))
   }
 
-  test("readFirstSheet yields the header/_row_idx DataFrame contract") {
+  test("firstSheet yields the (header, rows) statement contract") {
     val path = tmp("frame.xls")
     Xls.writeFirstSheet(path, "S", Seq(
       Seq("消費日", "金額", ""),
       Seq("2024/01/03", 100, "x"),
       Seq("2024/01/04", 200.25, "y")))
-    val df = Xlsx.readFirstSheet(spark, path)
-    assert(df.columns.toSeq == Seq("消費日", "金額", "Unnamed: 2", "_row_idx"))
-    val got = df.orderBy("_row_idx").collect().map(r =>
-      (r.getString(0), r.getString(1), r.getString(2)))
-    assert(got.toSeq == Seq(("2024/01/03", "100", "x"),
-      ("2024/01/04", "200.25", "y")))
+    val (header, rows) = Xlsx.firstSheet(path)
+    assert(Ingest.columnNames(header) == Seq("消費日", "金額", "Unnamed: 2"))
+    assert(rows == Seq(Seq("2024/01/03", "100", "x"),
+      Seq("2024/01/04", "200.25", "y")))
   }
 
   test("large string table splits into CONTINUE records and reads back") {
@@ -107,10 +107,9 @@ class XlsSpec extends SparkSpec {
     val rows = Xls.readSheets(path).head.rows
     assert(rows.forall(_.length == 3))
     assert(rows(2) == Vector(Some("b"), None, None))
-    // and the DataFrame path survives the short row end-to-end
-    val df = Xlsx.readFirstSheet(spark, path)
-    val h3 = df.orderBy("_row_idx").collect().map(r => Option(r.getString(2)))
-    assert(h3.toSeq == Seq(Some("x"), None))
+    // and the statement rows keep the short row at full width
+    assert(Xlsx.firstSheet(path)._2 == Seq(Seq("a", "1", "x"),
+      Seq("b", null, null)))
   }
 
   test("FORMULA string results spill into CONTINUE records") {

@@ -5,9 +5,9 @@ import java.nio.file.Files
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 
 import graft.Tables
 import graft.streaming.{BatchStore, StreamingPipeline}
@@ -130,6 +130,32 @@ object StreamingQueries {
     }
   }
 
+  /** The gates' stream source: the chunk files under `inDir`, one file per
+    * micro-batch, with the schema of the frame they were split from (less
+    * the chunk index `b`, which [[writeChunksPre]] spends on the split).
+    */
+  private def chunkStream(s: SparkSession, from: DataFrame, inDir: File)
+      : DataFrame =
+    s.readStream.schema(from.drop("b").schema)
+      .option("maxFilesPerTrigger", "1").parquet(inDir.getPath)
+
+  /** The gates' sink: each micro-batch appends its emission, tagged with
+    * its `batch_id`, under `work/out`, which the gate reads back.
+    */
+  private def appendOut(work: File): (DataFrame, Long) => Unit =
+    (df, batchId) => df.withColumn("batch_id", lit(batchId))
+      .write.mode("append").parquet(s"$work/out")
+
+  /** Runs a gate's stream under [[withGateConfs]]: checkpoint in the
+    * gate's scratch dir, every available chunk, then termination.
+    */
+  private def runGate(s: SparkSession, work: File)(
+      stream: => DataStreamWriter[Row]): Unit =
+    withGateConfs(s, 3) {
+      stream.option("checkpointLocation", s"$work/ckpt")
+        .trigger(Trigger.AvailableNow()).start().awaitTermination()
+    }
+
   /** Streaming incremental dedup over a file-chunked corpus (q82's
     * continuous form, `StreamingPipeline.incrementalDedupStream`).
     *
@@ -161,25 +187,11 @@ object StreamingQueries {
     val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
     val work = scratchDir("graft_q111")
     val inDir = cachedChunks(s"q111|$dir|3")(writeChunks(docs, "doc_id", _, 3))
-    val digestDir = new File(work, "digests").getPath
-    val outDir = new File(work, "out")
-    outDir.mkdirs()
-    withGateConfs(s, 3) {
-      val stream = s.readStream
-        .schema(docs.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(inDir.getPath)
-      val q = StreamingPipeline.incrementalDedupStream(
-          stream, "doc_id", "text", digestDir) { (kept, batchId) =>
-          kept.withColumn("batch_id", lit(batchId))
-            .write.mode("append").parquet(outDir.getPath)
-        }
-        .option("checkpointLocation", new File(work, "ckpt").getPath)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+    runGate(s, work) {
+      StreamingPipeline.incrementalDedupStream(chunkStream(s, docs, inDir),
+        "doc_id", "text", s"$work/digests")(appendOut(work))
     }
-    s.read.parquet(outDir.getPath)
+    s.read.parquet(s"$work/out")
       .select(col("batch_id"), col("content_hash"), col("keep_id"),
         col("batch_dups"))
       .orderBy(col("batch_id"), col("content_hash"))
@@ -212,26 +224,12 @@ object StreamingQueries {
       .select(col("vec_id"), col("embedding"))
     val work = scratchDir("graft_q113")
     val inDir = cachedChunks(s"q113|$dir|3")(writeChunks(emb, "vec_id", _, 3))
-    val stateDir = new File(work, "state").getPath
-    val outDir = new File(work, "out")
-    outDir.mkdirs()
-    withGateConfs(s, 3) {
-      val stream = s.readStream
-        .schema(emb.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(inDir.getPath)
-      val q = StreamingPipeline.semDedupStream(stream,
-          VectorQueries.centroidsForProfiling, threshold = 0.4, stateDir) {
-          (res, batchId) =>
-            res.withColumn("batch_id", lit(batchId))
-              .write.mode("append").parquet(outDir.getPath)
-        }
-        .option("checkpointLocation", new File(work, "ckpt").getPath)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+    runGate(s, work) {
+      StreamingPipeline.semDedupStream(chunkStream(s, emb, inDir),
+        VectorQueries.centroidsForProfiling, threshold = 0.4,
+        s"$work/state")(appendOut(work))
     }
-    s.read.parquet(outDir.getPath)
+    s.read.parquet(s"$work/out")
       .select(col("batch_id"), col("vec_id"), col("cell"),
         coalesce(col("dup_of"), lit(-1L)).as("dup_of"), col("kept"))
       .orderBy(col("batch_id"), col("vec_id"))
@@ -331,27 +329,11 @@ object StreamingQueries {
     val work = scratchDir("graft_q115")
     val inDir = cachedChunks(s"q115|$dir|4")(
       writeChunksPre(chunked.unionByName(sentinels), _, 4))
-    val outDir = new File(work, "out")
-    outDir.mkdirs()
-    withGateConfs(s, 3) {
-      val stream = s.readStream
-        .schema(chunked.drop("b").schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(inDir.getPath)
-      val q = StreamingPipeline.hourlyEventCounts(stream)
-        .writeStream
-        .outputMode("append")
-        .foreachBatch { (df: DataFrame, batchId: Long) =>
-          df.withColumn("batch_id", lit(batchId))
-            .write.mode("append").parquet(outDir.getPath)
-          ()
-        }
-        .option("checkpointLocation", new File(work, "ckpt").getPath)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+    runGate(s, work) {
+      StreamingPipeline.microBatches(StreamingPipeline.hourlyEventCounts(
+        chunkStream(s, chunked, inDir)))(appendOut(work))
     }
-    s.read.parquet(outDir.getPath)
+    s.read.parquet(s"$work/out")
       .filter(!col("event_type").startsWith("__"))
       .select(col("batch_id"), col("hour"), col("event_type"), col("n"),
         col("total_value"))
@@ -448,34 +430,18 @@ object StreamingQueries {
       writeChunksPre(right, new File(w, "r"), 3)
       w
     }
-    val lIn = new File(both, "l/in")
-    val rIn = new File(both, "r/in")
-    val outDir = new File(work, "out")
-    outDir.mkdirs()
-    withGateConfs(s, 3) {
-      val ls = s.readStream.schema(left.drop("b").schema)
-        .option("maxFilesPerTrigger", "1").parquet(lIn.getPath)
-      val rs = s.readStream.schema(right.drop("b").schema)
-        .option("maxFilesPerTrigger", "1").parquet(rIn.getPath)
-      val q = StreamingPipeline.intervalJoin(ls, rs, "user_id",
+    runGate(s, work) {
+      val pairs = StreamingPipeline.intervalJoin(
+          chunkStream(s, left, new File(both, "l/in")),
+          chunkStream(s, right, new File(both, "r/in")), "user_id",
           lowerMs = 5L * 60 * 1000, upperMs = 30L * 60 * 1000,
           watermark = "800 hours")
         .select(col("event_id"), col("r_event_id"), col("user_id"),
           (unix_micros(col("r_ts_utc")) - unix_micros(col("ts_utc")))
             .as("delta_us"))
-        .writeStream
-        .outputMode("append")
-        .foreachBatch { (df: DataFrame, batchId: Long) =>
-          df.withColumn("batch_id", lit(batchId))
-            .write.mode("append").parquet(outDir.getPath)
-          ()
-        }
-        .option("checkpointLocation", new File(work, "ckpt").getPath)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      StreamingPipeline.microBatches(pairs)(appendOut(work))
     }
-    s.read.parquet(outDir.getPath)
+    s.read.parquet(s"$work/out")
       .select(col("batch_id"), col("event_id"), col("r_event_id"),
         col("user_id"), col("delta_us"))
       .orderBy(col("event_id"), col("r_event_id"))
@@ -527,16 +493,10 @@ object StreamingQueries {
         .otherwise(natural).cast("int").as("b"))
     val work = scratchDir("graft_q121")
     val inDir = cachedChunks(s"q121|$dir|3")(writeChunksPre(delta, _, 3))
-    val snapDir = new File(work, "snap").getPath
-    withGateConfs(s, 3) {
-      val stream = s.readStream.schema(delta.drop("b").schema)
-        .option("maxFilesPerTrigger", "1").parquet(inDir.getPath)
-      val q = StreamingPipeline.upsertStream(stream, Seq("k"), "ver",
-          snapDir)
-        .option("checkpointLocation", new File(work, "ckpt").getPath)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+    val snapDir = s"$work/snap"
+    runGate(s, work) {
+      StreamingPipeline.upsertStream(chunkStream(s, delta, inDir), Seq("k"),
+        "ver", snapDir)
     }
     val store = new BatchStore(s, snapDir)
     (0 to 2).map(b => store.version(b).withColumn("snap", lit(b.toLong)))
@@ -622,31 +582,14 @@ object StreamingQueries {
     val work = scratchDir("graft_q129")
     val inDir = cachedChunks(s"q129|$dir|4")(
       writeChunksPre(chunked.unionByName(sentinels), _, 4))
-    val outDir = new File(work, "out")
-    outDir.mkdirs()
-    withGateConfs(s, 3) {
+    runGate(s, work) {
       import s.implicits._
-      val stream = s.readStream
-        .schema(chunked.drop("b").schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(inDir.getPath)
-        .as[graft.streaming.StreamingPipeline.UserEvent]
-      val q = graft.streaming.StreamingPipeline
-        .sessionize(stream, gapMs = 1800000L)
-        .toDF()
-        .writeStream
-        .outputMode("append")
-        .foreachBatch { (df: DataFrame, batchId: Long) =>
-          df.withColumn("batch_id", lit(batchId))
-            .write.mode("append").parquet(outDir.getPath)
-          ()
-        }
-        .option("checkpointLocation", new File(work, "ckpt").getPath)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      val events = chunkStream(s, chunked, inDir)
+        .as[StreamingPipeline.UserEvent]
+      StreamingPipeline.microBatches(StreamingPipeline
+        .sessionize(events, gapMs = 1800000L).toDF())(appendOut(work))
     }
-    s.read.parquet(outDir.getPath)
+    s.read.parquet(s"$work/out")
       .filter(col("userId") >= 0L)
       .select(col("batch_id"), col("userId").as("user_id"),
         col("sessionStart").as("session_start_ms"),
@@ -740,26 +683,11 @@ object StreamingQueries {
     val work = scratchDir("graft_q145")
     val inDir = cachedChunks(s"q145|$dir|3")(
       writeChunks(fixture, "doc_id", _, 3))
-    val stateDir = new File(work, "state").getPath
-    val outDir = new File(work, "out")
-    outDir.mkdirs()
-    withGateConfs(s, 3) {
-      val stream = s.readStream
-        .schema(fixture.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(inDir.getPath)
-      val q = StreamingPipeline.domainQualityStream(
-          stream, "url", "doc_id", "keep", "n_words", stateDir) {
-          (rollup, batchId) =>
-            rollup.withColumn("batch_id", lit(batchId))
-              .write.mode("append").parquet(outDir.getPath)
-        }
-        .option("checkpointLocation", new File(work, "ckpt").getPath)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+    runGate(s, work) {
+      StreamingPipeline.domainQualityStream(chunkStream(s, fixture, inDir),
+        "url", "doc_id", "keep", "n_words", s"$work/state")(appendOut(work))
     }
-    s.read.parquet(outDir.getPath)
+    s.read.parquet(s"$work/out")
       .select(col("batch_id"), col("domain"), col("n_docs"),
         col("parseable"), col("n_canonical"), col("keep_rate"),
         col("avg_words"), col("dup_rate"), col("block_score"))
@@ -836,26 +764,12 @@ object StreamingQueries {
     val work = scratchDir("graft_q148")
     val inDir = cachedChunks(s"q148|$dir|3")(
       writeChunks(docs, "doc_id", _, 3))
-    val stateDir = new File(work, "state").getPath
-    val outDir = new File(work, "out")
-    outDir.mkdirs()
-    withGateConfs(s, 3) {
-      val stream = s.readStream
-        .schema(docs.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(inDir.getPath)
-      val q = StreamingPipeline.minHashDedupStream(
-          stream, "doc_id", "text", stateDir, n = 3, threshold = 0.4,
-          numHashes = 64, bands = 32) { (em, batchId) =>
-          em.withColumn("batch_id", lit(batchId))
-            .write.mode("append").parquet(outDir.getPath)
-        }
-        .option("checkpointLocation", new File(work, "ckpt").getPath)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+    runGate(s, work) {
+      StreamingPipeline.minHashDedupStream(chunkStream(s, docs, inDir),
+        "doc_id", "text", s"$work/state", n = 3, threshold = 0.4,
+        numHashes = 64, bands = 32)(appendOut(work))
     }
-    s.read.parquet(outDir.getPath)
+    s.read.parquet(s"$work/out")
       .select(col("batch_id"), col("id").as("doc_id"), col("dup_of"),
         col("kept"))
       .orderBy(col("batch_id"), col("doc_id"))
@@ -910,26 +824,12 @@ object StreamingQueries {
           .as("is_bench"))
     val work = scratchDir("graft_q155")
     val inDir = cachedChunks(s"q155|$dir|3")(writeChunks(emb, "vec_id", _, 3))
-    val snapDir = new File(work, "snap").getPath
-    val outDir = new File(work, "out")
-    outDir.mkdirs()
-    withGateConfs(s, 3) {
-      val stream = s.readStream
-        .schema(emb.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(inDir.getPath)
-      val q = StreamingPipeline.decontamStream(stream, "is_bench",
-          VectorQueries.centroidsForProfiling, threshold = 0.32, snapDir) {
-          (res, batchId) =>
-            res.withColumn("batch_id", lit(batchId))
-              .write.mode("append").parquet(outDir.getPath)
-        }
-        .option("checkpointLocation", new File(work, "ckpt").getPath)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+    runGate(s, work) {
+      StreamingPipeline.decontamStream(chunkStream(s, emb, inDir),
+        "is_bench", VectorQueries.centroidsForProfiling, threshold = 0.32,
+        s"$work/snap")(appendOut(work))
     }
-    s.read.parquet(outDir.getPath)
+    s.read.parquet(s"$work/out")
       .select(col("batch_id"), col("vec_id"), col("cell"),
         col("contaminated_by"), col("n_hits"), col("max_sim"))
       .orderBy(col("batch_id"), col("vec_id"))
@@ -979,26 +879,12 @@ object StreamingQueries {
         (col("doc_id") % 20 === 0).as("is_bench"))
     val work = scratchDir("graft_q161")
     val inDir = cachedChunks(s"q161|$dir|3")(writeChunks(docs, "doc_id", _, 3))
-    val storeDir = new File(work, "store").getPath
-    val outDir = new File(work, "out")
-    outDir.mkdirs()
-    withGateConfs(s, 3) {
-      val stream = s.readStream
-        .schema(docs.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(inDir.getPath)
-      val q = StreamingPipeline.bloomDecontamStream(stream, "is_bench",
-          storeDir, n = 4, mBits = 1 << 22, k = 3,
-          flagThreshold = 0.05) { (res, batchId) =>
-          res.withColumn("batch_id", lit(batchId))
-            .write.mode("append").parquet(outDir.getPath)
-        }
-        .option("checkpointLocation", new File(work, "ckpt").getPath)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+    runGate(s, work) {
+      StreamingPipeline.bloomDecontamStream(chunkStream(s, docs, inDir),
+        "is_bench", s"$work/store", n = 4, mBits = 1 << 22, k = 3,
+        flagThreshold = 0.05)(appendOut(work))
     }
-    s.read.parquet(outDir.getPath)
+    s.read.parquet(s"$work/out")
       .select(col("batch_id"), col("id").as("doc_id"), col("n_shingles"),
         col("n_bloom_hits"), col("hit_ratio"), col("contaminated"))
       .orderBy(col("batch_id"), col("doc_id"))
@@ -1059,14 +945,8 @@ object StreamingQueries {
       .select(col("doc_id"), col("source"), col("text"))
     val work = scratchDir("graft_q164")
     val inDir = cachedChunks(s"q164|$dir|3")(writeChunks(docs, "doc_id", _, 3))
-    val storeDir = new File(work, "store").getPath
-    val outDir = new File(work, "out")
-    outDir.mkdirs()
-    withGateConfs(s, 3) {
-      val stream = s.readStream
-        .schema(docs.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(inDir.getPath)
+    runGate(s, work) {
+      val grams = chunkStream(s, docs, inDir)
         // r16: materialized token array — inlining tokens(text) into the
         // shingle lambda re-splits the doc once per shingle (q160 fix)
         .select(col("source"),
@@ -1074,17 +954,10 @@ object StreamingQueries {
         .select(col("source"), explode(array_distinct(
           graft.functions.TextAnalysis.shinglesOfTokens(col("_toks"), 4)))
           .as("gram"))
-      val q = StreamingPipeline.hllStatsStream(stream, "source", "gram",
-          p = 8, storeDir) { (res, batchId) =>
-          res.withColumn("batch_id", lit(batchId))
-            .write.mode("append").parquet(outDir.getPath)
-        }
-        .option("checkpointLocation", new File(work, "ckpt").getPath)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      StreamingPipeline.hllStatsStream(grams, "source", "gram", p = 8,
+        s"$work/store")(appendOut(work))
     }
-    s.read.parquet(outDir.getPath)
+    s.read.parquet(s"$work/out")
       .select(col("batch_id"), col("source"), col("buckets_hit"),
         col("s_int"), col("hll_estimate"))
       .orderBy(col("batch_id"), col("source"))

@@ -2,9 +2,10 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState,
+  GroupStateTimeout, OutputMode}
 
 /** Structured Streaming surface (SURVEY §2.12 extension).
   *
@@ -29,6 +30,16 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   */
 object StreamingPipeline {
 
+  /** How every micro-batch stream here starts: create the stream's state
+    * dirs, then hand each micro-batch to `step` in append mode. The caller
+    * sets the checkpoint and trigger and starts the query.
+    */
+  private[graft] def microBatches(df: DataFrame, stateDirs: String*)(
+      step: (DataFrame, Long) => Unit): DataStreamWriter[Row] = {
+    stateDirs.foreach(d => new java.io.File(d).mkdirs())
+    df.writeStream.outputMode(OutputMode.Append).foreachBatch(step)
+  }
+
   /** File-source statement ingest: watch `dir` for new CSV drops with the
     * canonical unified schema, parse, and hand each micro-batch to the
     * caller (typically `graft.etl.Refine.refine` + a sink write, mirroring
@@ -44,9 +55,7 @@ object StreamingPipeline {
           org.apache.spark.sql.types.StructField(c,
             org.apache.spark.sql.types.StringType))))
       .csv(dir)
-    raw.writeStream
-      .outputMode(OutputMode.Append)
-      .foreachBatch(onBatch)
+    microBatches(raw)(onBatch)
   }
 
   /** Watermarked tumbling-window count/sum per event type. `ts` must be a
@@ -125,15 +134,10 @@ object StreamingPipeline {
     */
   def incrementalDedupStream(docs: DataFrame, idCol: String, textCol: String,
                              digestDir: String)(
-      onBatch: (DataFrame, Long) => Unit) = {
-    new java.io.File(digestDir).mkdirs()
-    docs.writeStream
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        incrementalDedupBatch(batch, batchId, idCol, textCol, digestDir)(
-          onBatch)
-      }
-  }
+      onBatch: (DataFrame, Long) => Unit) =
+    microBatches(docs, digestDir) { (batch, batchId) =>
+      incrementalDedupBatch(batch, batchId, idCol, textCol, digestDir)(onBatch)
+    }
 
   /** One micro-batch of [[incrementalDedupStream]] — replay-idempotent.
     *
@@ -323,15 +327,11 @@ object StreamingPipeline {
                      threshold: Double, stateDir: String,
                      idCol: String = "vec_id",
                      vecCol: String = "embedding")(
-      onBatch: (DataFrame, Long) => Unit) = {
-    new java.io.File(stateDir).mkdirs()
-    vecs.writeStream
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        semDedupBatch(batch, batchId, centroids, threshold, stateDir,
-          idCol, vecCol)(onBatch)
-      }
-  }
+      onBatch: (DataFrame, Long) => Unit) =
+    microBatches(vecs, stateDir) { (batch, batchId) =>
+      semDedupBatch(batch, batchId, centroids, threshold, stateDir,
+        idCol, vecCol)(onBatch)
+    }
 
   /** One micro-batch of [[semDedupStream]] — replay-idempotent: the
     * state store is batchId-keyed (`b<batchId>` subdirs, cell-
@@ -403,12 +403,10 @@ object StreamingPipeline {
   def contaminationStream(docs: DataFrame, bench: DataFrame, idCol: String,
                           textCol: String, n: Int, flagThreshold: Double)(
       onBatch: (DataFrame, Long) => Unit) =
-    docs.writeStream
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        onBatch(graft.operators.Curation.contaminationReport(
-          batch, bench, idCol, textCol, n, flagThreshold), batchId)
-      }
+    microBatches(docs) { (batch, batchId) =>
+      onBatch(graft.operators.Curation.contaminationReport(
+        batch, bench, idCol, textCol, n, flagThreshold), batchId)
+    }
 
   /** Streaming mixture maintenance: keep a running per-source (docs,
     * tokens) inventory across micro-batches and re-emit the mixture plan
@@ -423,15 +421,11 @@ object StreamingPipeline {
   def mixturePlanStream(docs: DataFrame, sourceCol: String,
                         tokenCount: org.apache.spark.sql.Column,
                         stateDir: String)(
-      onBatch: (DataFrame, Long) => Unit) = {
-    new java.io.File(stateDir).mkdirs()
-    docs.writeStream
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        mixturePlanBatch(batch, batchId, sourceCol, tokenCount, stateDir)(
-          onBatch)
-      }
-  }
+      onBatch: (DataFrame, Long) => Unit) =
+    microBatches(docs, stateDir) { (batch, batchId) =>
+      mixturePlanBatch(batch, batchId, sourceCol, tokenCount, stateDir)(
+        onBatch)
+    }
 
   /** One micro-batch of [[mixturePlanStream]] — replay-idempotent.
     *
@@ -466,17 +460,13 @@ object StreamingPipeline {
   def mixturePlanTemperatureStream(docs: DataFrame, sourceCol: String,
                                    tokenCount: org.apache.spark.sql.Column,
                                    stateDir: String, alpha: Double = 0.5)(
-      onBatch: (DataFrame, Long) => Unit) = {
-    new java.io.File(stateDir).mkdirs()
-    docs.writeStream
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        mixtureUpkeepBatch(batch, batchId, sourceCol, tokenCount, stateDir,
-          inv => graft.operators.Curation
-            .mixturePlanTemperatureFromInventory(inv, sourceCol, alpha))(
-          onBatch)
-      }
-  }
+      onBatch: (DataFrame, Long) => Unit) =
+    microBatches(docs, stateDir) { (batch, batchId) =>
+      mixtureUpkeepBatch(batch, batchId, sourceCol, tokenCount, stateDir,
+        inv => graft.operators.Curation
+          .mixturePlanTemperatureFromInventory(inv, sourceCol, alpha))(
+        onBatch)
+    }
 
   /** Shared micro-batch body of the mixture-upkeep streams: merge the
     * batch's per-source partial aggregate into the replay-safe versioned
@@ -528,14 +518,10 @@ object StreamingPipeline {
     */
   def unigramCeStream(docs: DataFrame, idCol: String, textCol: String,
                       lmDir: String, addK: Double = 1.0)(
-      onBatch: (DataFrame, Long) => Unit) = {
-    new java.io.File(lmDir).mkdirs()
-    docs.writeStream
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        unigramCeBatch(batch, batchId, idCol, textCol, lmDir, addK)(onBatch)
-      }
-  }
+      onBatch: (DataFrame, Long) => Unit) =
+    microBatches(docs, lmDir) { (batch, batchId) =>
+      unigramCeBatch(batch, batchId, idCol, textCol, lmDir, addK)(onBatch)
+    }
 
   /** One micro-batch of [[unigramCeStream]] — replay-idempotent: scores
     * against (and merges onto) the latest LM version STRICTLY BELOW the
@@ -603,15 +589,11 @@ object StreamingPipeline {
                      centroids: Seq[Seq[Double]], threshold: Double,
                      snapDir: String, idCol: String = "vec_id",
                      vecCol: String = "embedding")(
-      onBatch: (DataFrame, Long) => Unit) = {
-    new java.io.File(snapDir).mkdirs()
-    vecs.writeStream
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        decontamBatch(batch, batchId, benchFlagCol, centroids, threshold,
-          snapDir, idCol, vecCol)(onBatch)
-      }
-  }
+      onBatch: (DataFrame, Long) => Unit) =
+    microBatches(vecs, snapDir) { (batch, batchId) =>
+      decontamBatch(batch, batchId, benchFlagCol, centroids, threshold,
+        snapDir, idCol, vecCol)(onBatch)
+    }
 
   /** One micro-batch of [[decontamStream]]. */
   private[graft] def decontamBatch(
@@ -678,15 +660,11 @@ object StreamingPipeline {
                           flagThreshold: Double = 0.05,
                           idCol: String = "doc_id",
                           textCol: String = "text")(
-      onBatch: (DataFrame, Long) => Unit) = {
-    new java.io.File(storeDir).mkdirs()
-    docs.writeStream
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        bloomDecontamBatch(batch, batchId, benchFlagCol, storeDir,
-          n, mBits, k, flagThreshold, idCol, textCol)(onBatch)
-      }
-  }
+      onBatch: (DataFrame, Long) => Unit) =
+    microBatches(docs, storeDir) { (batch, batchId) =>
+      bloomDecontamBatch(batch, batchId, benchFlagCol, storeDir,
+        n, mBits, k, flagThreshold, idCol, textCol)(onBatch)
+    }
 
   /** Streaming incremental corpus statistics — the q160 deterministic
     * HLL in the loop shape: each micro-batch's `(group, value)` rows
@@ -704,15 +682,10 @@ object StreamingPipeline {
     */
   def hllStatsStream(rows: DataFrame, groupCol: String, valueCol: String,
                      p: Int, storeDir: String)(
-      onBatch: (DataFrame, Long) => Unit) = {
-    new java.io.File(storeDir).mkdirs()
-    rows.writeStream
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        hllStatsBatch(batch, batchId, groupCol, valueCol, p, storeDir)(
-          onBatch)
-      }
-  }
+      onBatch: (DataFrame, Long) => Unit) =
+    microBatches(rows, storeDir) { (batch, batchId) =>
+      hllStatsBatch(batch, batchId, groupCol, valueCol, p, storeDir)(onBatch)
+    }
 
   /** One micro-batch of [[hllStatsStream]]. */
   private[graft] def hllStatsBatch(
@@ -785,25 +758,21 @@ object StreamingPipeline {
     * version are never broken, and the q121 gate reads every version.
     */
   def upsertStream(delta: DataFrame, keys: Seq[String], versionCol: String,
-                   snapshotDir: String) = {
-    new java.io.File(snapshotDir).mkdirs()
-    delta.writeStream
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val store = new BatchStore(batch.sparkSession, snapshotDir)
-        // replay safety: merge against the last version committed by a
-        // PREVIOUS batch, never the replaying batch's own output (see
-        // mixturePlanBatch for the failure mode).
-        val merged = store.prior(batchId).map(store.version) match {
-          case Some(prev) =>
-            graft.operators.Snapshot.mergeSnapshot(prev, batch, keys,
-              versionCol)
-          case None =>
-            graft.operators.Snapshot.keepLatest(batch, keys, versionCol)
-        }
-        merged.write.mode("overwrite").parquet(store.versionPath(batchId))
+                   snapshotDir: String) =
+    microBatches(delta, snapshotDir) { (batch, batchId) =>
+      val store = new BatchStore(batch.sparkSession, snapshotDir)
+      // replay safety: merge against the last version committed by a
+      // PREVIOUS batch, never the replaying batch's own output (see
+      // mixturePlanBatch for the failure mode).
+      val merged = store.prior(batchId).map(store.version) match {
+        case Some(prev) =>
+          graft.operators.Snapshot.mergeSnapshot(prev, batch, keys,
+            versionCol)
+        case None =>
+          graft.operators.Snapshot.keepLatest(batch, keys, versionCol)
       }
-  }
+      merged.write.mode("overwrite").parquet(store.versionPath(batchId))
+    }
 
   /** Latest committed snapshot version under `snapshotDir`, if any. */
   def latestSnapshot(spark: SparkSession, snapshotDir: String)
@@ -1036,15 +1005,11 @@ object StreamingPipeline {
                          stateDir: String, n: Int = 3,
                          threshold: Double = 0.4, numHashes: Int = 64,
                          bands: Int = 32)(
-      onBatch: (DataFrame, Long) => Unit) = {
-    new java.io.File(stateDir, "store").mkdirs()
-    docs.writeStream
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        minHashDedupBatch(batch, batchId, idCol, textCol, stateDir, n,
-          threshold, numHashes, bands)(onBatch)
-      }
-  }
+      onBatch: (DataFrame, Long) => Unit) =
+    microBatches(docs, s"$stateDir/store") { (batch, batchId) =>
+      minHashDedupBatch(batch, batchId, idCol, textCol, stateDir, n,
+        threshold, numHashes, bands)(onBatch)
+    }
 
   private[graft] def minHashDedupBatch(
       batch: DataFrame, batchId: Long, idCol: String, textCol: String,
@@ -1187,16 +1152,12 @@ object StreamingPipeline {
                           stateDir: String,
                           psl: Seq[graft.operators.WebCuration.PslRule] =
                             graft.operators.WebCuration.defaultPsl)(
-      onBatch: (DataFrame, Long) => Unit) = {
-    new java.io.File(stateDir, "pairs").mkdirs()
-    new java.io.File(stateDir, "counters").mkdirs()
-    docs.writeStream
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+      onBatch: (DataFrame, Long) => Unit) =
+    microBatches(docs, s"$stateDir/pairs", s"$stateDir/counters") {
+      (batch, batchId) =>
         domainQualityBatch(batch, batchId, urlCol, idCol, keepCol,
           wordsCol, stateDir, psl)(onBatch)
-      }
-  }
+    }
 
   private[graft] def domainQualityBatch(
       batch: DataFrame, batchId: Long, urlCol: String, idCol: String,

@@ -1,6 +1,8 @@
 package graft
 
+import org.apache.hadoop.fs.FileStatus
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Loaders for the driver-generated test tables (TESTDATA.md).
   *
@@ -15,26 +17,32 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
-
-  /** Table row count from parquet FOOTER metadata — no scan, no job.
-    *
-    * For adaptive strategy picks (q67's window-vs-scalable ntile) a full
-    * `count()` action is a complete pass over the fact table charged to
-    * every invocation; the footers carry the exact count for free.
-    * Driver-side O(files) footer reads,
-    * memoized per (path, listing signature): the signature folds every
-    * file's name, length, and mtime, so a dataset REGENERATED in-session
-    * invalidates its entry instead of driving a strategy pick off a
-    * stale count. The listing itself is re-read per call — that is the
-    * cheap part; the memo only skips the O(files) footer OPENS.
+  /** Loads `<sfDir>/<name>.parquet` with its schema memoized per session
+    * and per listing signature ([[listing]]), so only the first load of a
+    * table in a session runs Spark's parquet schema-inference job, and a
+    * table regenerated in place infers again. The memo is per session
+    * because [[events]]' legacy fallback changes how the same files infer.
     */
-  def rowCount(spark: SparkSession, sfDir: String, name: String): Long = {
+  def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     val path = s"$sfDir/$name.parquet"
+    val memo = schemaMemo.synchronized(schemaMemo.computeIfAbsent(spark,
+      _ => new java.util.concurrent.ConcurrentHashMap[String, StructType]()))
+    val schema = memo.computeIfAbsent(listing(spark, path)._2,
+      _ => spark.read.parquet(path).schema)
+    spark.read.schema(schema).parquet(path)
+  }
+
+  private val schemaMemo = new java.util.WeakHashMap[SparkSession,
+    java.util.concurrent.ConcurrentHashMap[String, StructType]]()
+
+  /** The parquet files under `path` and a signature that folds every
+    * file's name, length and mtime: a dataset regenerated in-session gets
+    * a new signature. Driver-side listing only, no job.
+    */
+  private def listing(spark: SparkSession, path: String)
+      : (Seq[FileStatus], String) = {
     val hPath = new org.apache.hadoop.fs.Path(path)
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = hPath.getFileSystem(conf)
+    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val files =
       if (fs.getFileStatus(hPath).isDirectory)
         fs.listStatus(hPath).toSeq
@@ -43,6 +51,23 @@ object Tables {
     val sig = files.map(f =>
         s"${f.getPath.getName}:${f.getLen}:${f.getModificationTime}")
       .sorted.mkString(path + "|", ",", "")
+    (files, sig)
+  }
+
+  /** Table row count from parquet FOOTER metadata — no scan, no job.
+    *
+    * For adaptive strategy picks (q67's window-vs-scalable ntile) a full
+    * `count()` action is a complete pass over the fact table charged to
+    * every invocation; the footers carry the exact count for free.
+    * Driver-side O(files) footer reads, memoized per [[listing]]
+    * signature, so a dataset REGENERATED in-session invalidates its entry
+    * instead of driving a strategy pick off a stale count. The listing
+    * itself is re-read per call — that is the cheap part; the memo only
+    * skips the O(files) footer OPENS.
+    */
+  def rowCount(spark: SparkSession, sfDir: String, name: String): Long = {
+    val (files, sig) = listing(spark, s"$sfDir/$name.parquet")
+    val conf = spark.sparkContext.hadoopConfiguration
     rowCountCache.computeIfAbsent(sig, { _ =>
       files.map { st =>
         val in = org.apache.parquet.hadoop.util.HadoopInputFile

@@ -835,20 +835,32 @@ object Curation {
     */
   def incrementalDedupDigestsMapSide(batch: DataFrame, digests: DataFrame,
                                      idCol: String, textCol: String)
+      : DataFrame =
+    firstSeenMapSide(
+        batch.select(col(idCol), md5(col(textCol)).as("content_hash")),
+        digests)
+      .groupBy("content_hash")
+      .agg(min(col(idCol)).as("keep_id"), count(lit(1)).as("batch_dups"))
+
+  /** The rows of a small `batch` whose `content_hash` is not in a large
+    * digest `store`, probed map-side: the store semi-joins a broadcast of
+    * the batch's digests (at most |batch| rows come back) and the batch
+    * anti-joins that broadcast match set, so the store never shuffles.
+    * Serves [[incrementalDedupDigestsMapSide]] and the streaming
+    * domain-quality pair store.
+    */
+  private[graft] def firstSeenMapSide(batch: DataFrame, store: DataFrame)
       : DataFrame = {
-    val bd = batch.select(col(idCol), md5(col(textCol)).as("content_hash"))
     // no distinct on either broadcast side (r17): a LEFT_SEMI probe and a
     // LEFT_ANTI build both tolerate duplicate keys — the semi emits each
     // store row at most once and the anti drops a batch row on ANY match
     // — so the two distincts only added a shuffle exchange each per call
     // (per micro-batch in the streaming path). Duplicate store digests
     // (the compaction rename-to-delete window) change nothing either way.
-    val matched = digests.select("content_hash")
-      .join(broadcast(bd.select("content_hash")),
+    val matched = store.select("content_hash")
+      .join(broadcast(batch.select("content_hash")),
         Seq("content_hash"), "left_semi")
-    bd.join(broadcast(matched), Seq("content_hash"), "left_anti")
-      .groupBy("content_hash")
-      .agg(min(col(idCol)).as("keep_id"), count(lit(1)).as("batch_dups"))
+    batch.join(broadcast(matched), Seq("content_hash"), "left_anti")
   }
 
   // ------------------------------------------------------------------

@@ -1122,11 +1122,9 @@ object StreamingPipeline {
     * rescan. Two batchId-keyed stores:
     *
     *   - `pairs`: md5 digests of the distinct (domain, canonical URL)
-    *     pairs seen so far — probed map-side per batch (the
-    *     incrementalDedupDigestsMapSide shape: store semi-joins a
-    *     broadcast of the batch's pair digests, the batch anti-joins
-    *     the broadcast match set; the STORE never shuffles), so each
-    *     batch learns exactly its FIRST-SEEN pairs;
+    *     pairs seen so far — probed map-side per batch
+    *     ([[graft.operators.Curation.firstSeenMapSide]]: the STORE never
+    *     shuffles), so each batch learns exactly its FIRST-SEEN pairs;
     *   - `counters`: a RUNNING per-domain counter table (docs,
     *     parseable, keep, words, new-canonical) maintained as versioned
     *     snapshots (r17, the mixture-inventory recipe): each batch
@@ -1191,13 +1189,7 @@ object StreamingPipeline {
       .distinct()
     val seen = pairStore.history(exceptBatch = batchId)
       .getOrElse(s.range(0).select(lit("").as("content_hash")))
-    // no distinct (r17): the anti-join below tolerates duplicate build
-    // keys — store-side duplicates (compaction window) change nothing
-    val matched = seen.select("content_hash")
-      .join(broadcast(pairs.select("content_hash")),
-        Seq("content_hash"), "left_semi")
-    val newPairs = pairs
-      .join(broadcast(matched), Seq("content_hash"), "left_anti")
+    val newPairs = graft.operators.Curation.firstSeenMapSide(pairs, seen)
       .localCheckpoint(true) // written to the store AND counted
     // per-batch per-domain partial sums — model-scale
     val counters = proj.groupBy(col("domain"))

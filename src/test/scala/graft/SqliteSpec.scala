@@ -7,11 +7,11 @@ import org.apache.spark.sql.functions._
 import graft.etl.Sqlite
 
 /** The SQLite sink. In-JVM assertions cover the file format invariants
-  * our writer controls (header, page count, determinism, limits);
-  * `tools/check_sqlite.py` opens the same outputs with the REAL sqlite3
-  * library (PRAGMA integrity_check + queries) — run it whenever this
-  * writer changes. The probe main (`tools/SqliteProbe`) generates the
-  * standard fixture for that external check.
+  * our writer controls (header, page count, determinism, limits); two
+  * fixtures are also opened with the REAL sqlite3 library through
+  * `tools/check_sqlite.py` (PRAGMA integrity_check, a scan and a rowid
+  * lookup per table, and every index used by the query planner), so the
+  * suite needs `python3` with its standard `sqlite3` module.
   */
 class SqliteSpec extends SparkSpec {
   import spark.implicits._
@@ -232,5 +232,59 @@ class SqliteSpec extends SparkSpec {
       assert(got.map(_._2(1)).toSet == Set(k))
     }
     assert(Sqlite.Reader.indexPointLookup(p, "idx_n", "missing").isEmpty)
+  }
+
+  /** Runs `tools/check_sqlite.py` (the real sqlite3 library) on `db` and
+    * returns its last output line, failing on a non-zero exit.
+    */
+  private def realSqliteCheck(db: String): String = {
+    import scala.sys.process._
+    val out = new StringBuilder
+    val log = ProcessLogger(l => out ++= l + "\n", l => out ++= l + "\n")
+    val code = Seq("python3", "tools/check_sqlite.py", db) ! log
+    assert(code == 0, s"check_sqlite.py failed on $db:\n$out")
+    out.toString.trim.split("\n").last
+  }
+
+  test("real sqlite3 accepts overflow TEXT, NULLs, typed columns, an " +
+    "empty table and five indexes") {
+    val p = tmp("probe.db")
+    // > 4096 bytes of records forces interior levels; every 1000th note
+    // is a multi-overflow-page TEXT
+    val bills = (1 to 5000).map(i =>
+      (i.toLong, s"merchant-中文-$i", i * 1.5,
+        if (i % 1000 == 0) s"長文-$i-" + ("久" * 3000)
+        else if (i % 7 == 0) null
+        else s"note $i"))
+      .toDF("txn_id", "merchant", "amount", "note")
+    val banks = Seq(
+      (1L, "玉山", true, java.sql.Date.valueOf("2024-01-15"), 99.5),
+      (2L, "國泰", false, null.asInstanceOf[java.sql.Date], -3.25))
+      .toDF("id", "bank", "flag", "d", "v")
+    val nothing = spark.emptyDataFrame.withColumn("a", lit(1)).limit(0)
+    val counts = Sqlite.writeTables(p, Seq(
+      "bills" -> bills, "banks" -> banks, "nothing" -> nothing),
+      // every storage class and a null-carrying column, as in the
+      // reference's four CREATE INDEX calls (load_to_db.py:125-128)
+      indexes = Seq(
+        Sqlite.IndexSpec("idx_merchant", "bills", "merchant"),
+        Sqlite.IndexSpec("idx_amount", "bills", "amount"),
+        Sqlite.IndexSpec("idx_txn_id", "bills", "txn_id"),
+        Sqlite.IndexSpec("idx_note", "bills", "note"),
+        Sqlite.IndexSpec("idx_bank", "banks", "bank")))
+    assert(counts == Map("bills" -> 5000L, "banks" -> 2L, "nothing" -> 0L))
+    assert(realSqliteCheck(p) == "3 tables, 5 indexes OK, integrity ok")
+  }
+
+  test("real sqlite3 accepts two interior table levels and a multi-level " +
+    "text index") {
+    val p = tmp("deep.db")
+    // enough leaves for TWO interior levels (fan-out 200)
+    val deep = spark.range(1, 40001).select(col("id"),
+      concat(lit("row-"), col("id")).as("s"))
+    val n = Sqlite.writeTables(p, Seq("deep" -> deep),
+      indexes = Seq(Sqlite.IndexSpec("idx_deep_s", "deep", "s")))("deep")
+    assert(n == 40000L)
+    assert(realSqliteCheck(p) == "1 tables, 1 indexes OK, integrity ok")
   }
 }

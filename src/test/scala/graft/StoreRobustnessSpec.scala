@@ -76,6 +76,16 @@ class StoreRobustnessSpec extends SparkSpec {
       s"store side got shuffled:\n${s.take(900)}")
     assert(s.contains("BroadcastHashJoin") && s.contains("LeftSemi") &&
       s.contains("LeftAnti"), s"expected broadcast semi+anti:\n${s.take(900)}")
+    // the same plan on the shared first-seen probe itself, which the
+    // streaming domain-quality pair store also calls
+    val probe = Curation.firstSeenMapSide(
+      batch.select(col("doc_id"), md5(col("text")).as("content_hash")), store)
+    assert(probe.select("doc_id").as[Long].collect().toSet == Set(102L, 104L))
+    val p = probe.queryExecution.sparkPlan.toString
+    assert(!p.contains("SortMergeJoin"),
+      s"store side got shuffled:\n${p.take(900)}")
+    assert(p.contains("BroadcastHashJoin") && p.contains("LeftSemi") &&
+      p.contains("LeftAnti"), s"expected broadcast semi+anti:\n${p.take(900)}")
   }
 
   test("digest store is bucketed by digest prefix and the per-batch " +

@@ -1,6 +1,8 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Path, Paths}
+
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -1409,5 +1411,87 @@ class StreamingSpec extends SparkSpec {
     val before = emissions(1L)
     run(1)
     assert(emissions(1L) == before, "batch replay changed the rollup")
+  }
+
+  /** Stream-start code outside its one home: `foreachBatch` or
+    * `.writeStream` anywhere in `src/main` but the runner
+    * `StreamingPipeline.microBatches`, and a checkpoint, trigger, wait or
+    * files-per-trigger option in `StreamingQueries.scala` outside the gate
+    * helpers `chunkStream` and `runGate`. A helper spans from its `def`
+    * line to the next blank line; comment lines are skipped.
+    */
+  private def streamStartOffences(file: String, text: String): Seq[String] = {
+    val lines = text.split("\n", -1).toSeq
+    def span(name: String): Seq[Int] = {
+      val from = lines.indexWhere(_.contains(s"def $name("))
+      val to = lines.indexWhere(_.trim.isEmpty, from)
+      if (from < 0) Nil else from until (if (to < 0) lines.size else to)
+    }
+    val anywhere = Seq("foreachBatch", ".writeStream")
+    val gateOnly = Seq("checkpointLocation", "Trigger.AvailableNow",
+      "awaitTermination", "maxFilesPerTrigger")
+    val needles: Seq[(String, Seq[Int])] = file match {
+      case "StreamingPipeline.scala" =>
+        anywhere.map(_ -> span("microBatches"))
+      case "StreamingQueries.scala" =>
+        anywhere.map(_ -> Nil) ++
+          gateOnly.map(_ -> (span("chunkStream") ++ span("runGate")))
+      case _ => anywhere.map(_ -> Nil)
+    }
+    for {
+      (line, i) <- lines.zipWithIndex
+      code = line.trim
+      if !Seq("//", "*", "/*").exists(code.startsWith)
+      (n, home) <- needles if line.contains(n) && !home.contains(i)
+    } yield s"$file:${i + 1}: $n"
+  }
+
+  test("streams start through one runner and the gates through one " +
+    "harness") {
+    val walk = Files.walk(Paths.get("src/main"))
+    val sources: Seq[Path] =
+      try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+      finally walk.close()
+    def text(p: Path) = new String(Files.readAllBytes(p), "UTF-8")
+    val byName = sources.map(p => p.getFileName.toString -> text(p)).toMap
+    val found = byName.toSeq.flatMap { case (f, t) => streamStartOffences(f, t) }
+    assert(found.isEmpty, s"stream-start code outside its helpers: $found")
+    // the scan sees the helpers' own code once they lose their names
+    val runner = byName("StreamingPipeline.scala")
+    assert(streamStartOffences("StreamingPipeline.scala",
+      runner.replace("def microBatches(", "def other(")).size == 2)
+    val gates = byName("StreamingQueries.scala")
+    assert(streamStartOffences("StreamingQueries.scala",
+      gates.replace("def chunkStream(", "def a(")
+        .replace("def runGate(", "def b(")).size == 4)
+    // and the deleted forms: a gate's inline start, an inline gate sink
+    // and an entry point's own writeStream
+    val oldGate = """      val stream = s.readStream
+      |        .schema(docs.schema)
+      |        .option("maxFilesPerTrigger", "1")
+      |        .parquet(inDir.getPath)
+      |      val q = StreamingPipeline.hourlyEventCounts(stream)
+      |        .writeStream
+      |        .outputMode("append")
+      |        .foreachBatch { (df: DataFrame, batchId: Long) =>
+      |          df.write.mode("append").parquet(outDir.getPath)
+      |        }
+      |        .option("checkpointLocation", new File(work, "ckpt").getPath)
+      |        .trigger(Trigger.AvailableNow())
+      |        .start()
+      |      q.awaitTermination()""".stripMargin
+    assert(streamStartOffences("StreamingQueries.scala", oldGate).map(
+      _.split(": ").last) == Seq("maxFilesPerTrigger", ".writeStream",
+      "foreachBatch", "checkpointLocation", "Trigger.AvailableNow",
+      "awaitTermination"))
+    val oldEntry = """    new java.io.File(stateDir).mkdirs()
+      |    docs.writeStream
+      |      .outputMode(OutputMode.Append)
+      |      .foreachBatch { (batch: DataFrame, batchId: Long) =>""".stripMargin
+    assert(streamStartOffences("StreamingPipeline.scala", runner +
+      oldEntry).size == 2)
+    assert(streamStartOffences("Pipeline.scala", oldEntry).size == 2)
+    assert(streamStartOffences("Pipeline.scala",
+      "  // each micro-batch runs under foreachBatch").isEmpty)
   }
 }

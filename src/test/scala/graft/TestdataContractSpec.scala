@@ -21,6 +21,24 @@ class TestdataContractSpec extends SparkSpec {
     }
   }
 
+  test("a table's schema is inferred once per session, and again after " +
+    "its files are rewritten") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-tables").toString
+    Seq((1L, "a")).toDF("k", "v").write.parquet(s"$dir/t.parquet")
+    val (_, inferJobs, _) = observe(Tables.load(spark, dir, "t"))
+    assert(inferJobs > 0, "the probe must see the schema-inference job")
+    val (again, jobs, _) = observe(Tables.load(spark, dir, "t"))
+    assert(jobs == 0, s"second load ran $jobs jobs")
+    assert(again.as[(Long, String)].collect().toSeq == Seq((1L, "a")))
+    Seq((2L, "b", 3.0)).toDF("k", "v", "w")
+      .write.mode("overwrite").parquet(s"$dir/t.parquet")
+    val rewritten = Tables.load(spark, dir, "t")
+    assert(rewritten.columns.toSeq == Seq("k", "v", "w"))
+    assert(rewritten.as[(Long, String, Double)].collect().toSeq ==
+      Seq((2L, "b", 3.0)))
+  }
+
   test("events loader normalizes ts to long nanos and ts_utc to TimestampType") {
     val ev = Tables.events(spark, sf)
     assert(ev.schema("ts").dataType == LongType,
